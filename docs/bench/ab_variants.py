@@ -4,7 +4,7 @@ alternating A B A B in ONE session (cross-session timings on this
 host swing 2-3x), releasing tracked caches before every rep, noop
 sink. Also value-compares A vs B output (sorted canonical rows).
 
-Usage: python /tmp/ab_generic.py <spec.py> [--reps 5] [--sf DIR]
+Usage: python docs/bench/ab_variants.py <spec.py> [--reps 5] [--sf DIR]
 where spec.py defines VARIANTS = {"name": callable(spark, sf_dir) -> DataFrame, ...}
 (first = baseline). All variants are value-compared to the first.
 """

@@ -38,14 +38,18 @@ Semantics (pinned, cross-engine):
   learner in tests/test_round11_ops.py).
 
 Scale shape (the 100 TB argument): the corpus-sized work — the
-pre-tokenize + word-count aggregate — happens ONCE; every learning
-iteration is one hash aggregate over the |vocab| word table plus a
-single-row TakeOrderedAndProject argmax (a bounded collect, the
-supplier-pagerank discipline) plus one narrow map. Heaps' law keeps
-|vocab| orders of magnitude under corpus size, and the replace chain
-between periodic ``localCheckpoint`` lineage cuts is narrow — no
-shuffle grows with the merge count. Per-iteration cost is
-O(|vocab| symbols), never O(corpus).
+pre-tokenize + word-count aggregate — stays distributed and happens
+ONCE. Only its |vocab|-row output (token, encoding, freq) moves into
+ONE task, where an Arrow kernel runs every merge round in memory:
+count adjacent pairs weighted by freq, take the argmax, apply the
+literal replace. Heaps' law keeps |vocab| orders of magnitude under
+corpus size (it grows roughly as the square root of the corpus), so
+the table fits one task long after the corpus stops fitting one
+machine — the same split single-process BPE trainers make: count
+words over the corpus, then learn merges over the word-count table.
+The whole learner is one lazy plan: building it runs no Spark job,
+and a round costs O(|vocab| symbols) of Python in that task, not a
+scheduled job and a driver round-trip.
 
 The learned segmentation (token -> symbol count) is fingerprint-
 staged like the cluster labels (sources/staging.py) so consumers
@@ -62,24 +66,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from projet_etl_spark.operators.textstats import BPE_PATTERN
-from projet_etl_spark.sources.tables import load_table
+from projet_etl_spark.sources.tables import load_table, read_parquet
 
 # bounded iterations: the learner runs exactly N_MERGES rounds (the
 # fixture corpus supports far more; a corpus that exhausts its pairs
 # earlier stops early — see learn_merges). Folded into the staging
 # version token below, so changing it invalidates staged layouts.
-# Sized to keep the from-scratch builder's cold cost in the same
-# band as the other iterative builders (supplier-pagerank,
-# dedup-clusters): each round is two tiny jobs whose cost is
-# local-mode scheduling floor, not data.
+# Every round runs inside the one learner task over the |vocab|
+# table, so a round costs Python work over that table, not jobs;
+# the value is pinned by the oracle's unrolled CTE chain.
 N_MERGES = 16
-
-# cut the replace-chain lineage every this-many merges: each argmax
-# job recomputes the (narrow) replaces since the last checkpoint, so
-# the recompute work between cuts is bounded at CHECKPOINT_EVERY
-# passes over |vocab| while the number of vocab-sized materialization
-# jobs stays at N_MERGES / CHECKPOINT_EVERY, not N_MERGES.
-CHECKPOINT_EVERY = 8
 
 # alpha word tokens only (see module docstring — everything else the
 # pre-tokenizer emits is single-symbol and unlearnable)
@@ -115,39 +111,72 @@ def _encoded_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pair_counts(words: DataFrame) -> DataFrame:
-    """(l, r, pair_freq): every adjacent symbol position, weighted by
-    word frequency — one hash aggregate over the vocab table."""
-    sym = words.select(
-        F.expr(f"filter(split(s, '{_SEP}'), x -> x <> '')").alias("syms"),
-        "freq",
-    ).filter(F.expr("size(syms) >= 2"))
-    return (
-        sym.select(
-            F.explode(
-                F.expr(
-                    "transform(slice(syms, 1, size(syms) - 1), "
-                    "(x, i) -> struct(x AS l, element_at(syms, i + 2) AS r))"
-                )
-            ).alias("p"),
-            "freq",
+_LEARNED_SCHEMA = (
+    "merge_rank long, left_sym string, right_sym string, pair_freq long, "
+    "token string, s string, freq long"
+)
+
+
+def _make_learner(n_merges: int):
+    """mapInPandas kernel over the whole (token, s, freq) table: runs
+    up to ``n_merges`` rounds and emits one row per merge
+    (merge_rank, left_sym, right_sym, pair_freq) followed by one row
+    per word (token, s, freq) with ``s`` fully merged; the other
+    side's columns are null."""
+
+    def learn(batches):
+        import pandas as _pd
+
+        frames = [b for b in batches if len(b)]
+        if not frames:
+            return
+        words = _pd.concat(frames, ignore_index=True)
+        enc, freq = words["s"].tolist(), words["freq"].tolist()
+        merges = []
+        for k in range(1, n_merges + 1):
+            pairs: dict[tuple[str, str], int] = {}
+            for e, f in zip(enc, freq):
+                syms = e.split()  # symbols are space-free
+                for pair in zip(syms, syms[1:]):
+                    pairs[pair] = pairs.get(pair, 0) + f
+            if not pairs:
+                break
+            # (pair_freq DESC, l ASC, r ASC); symbols are ASCII, so
+            # code-point order is the JVM's and DuckDB's binary order
+            (l, r), pf = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+            merges.append((k, l, r, pf))
+            # str.replace is SQL replace: leftmost, non-overlapping
+            old, new = f" {l}{_SEP}{r} ", f" {l}{r} "
+            enc = [e.replace(old, new) for e in enc]
+        if merges:
+            yield _pd.DataFrame(
+                merges,
+                columns=["merge_rank", "left_sym", "right_sym", "pair_freq"],
+            ).assign(token=None, s=None, freq=None)
+        yield _pd.DataFrame(
+            {
+                "merge_rank": None,
+                "left_sym": None,
+                "right_sym": None,
+                "pair_freq": None,
+                "token": words["token"],
+                "s": enc,
+                "freq": words["freq"],
+            }
         )
-        .select("p.l", "p.r", "freq")
-        .groupBy("l", "r")
-        .agg(F.sum("freq").cast("long").alias("pair_freq"))
-    )
+
+    return learn
 
 
 def learn_merges(
     spark: SparkSession, sf_dir: str, n_merges: int = N_MERGES
-) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
-    """Run the learning loop; returns (merges, final word table).
+) -> tuple[DataFrame, DataFrame]:
+    """The learner as one lazy plan; returns (merges, final words).
 
-    merges = [(merge_rank, left_sym, right_sym, pair_freq), ...] in
-    learned order — driver-side by construction (each round's argmax
-    IS a bounded single-row collect; the list is ≤ n_merges rows).
-    The returned DataFrame keeps (token, s, freq) with ``s`` fully
-    merged, for the staged segmentation consumer.
+    merges = (merge_rank, left_sym, right_sym, pair_freq), one row per
+    learned merge; words = (token, s, freq) with ``s`` fully merged,
+    for the staged segmentation consumer. Both are filters of the
+    same single-task kernel output, so building them runs no job.
 
     Stops early (fewer than n_merges rows) only when the corpus has
     no adjacent pair left anywhere — a degenerate regime the unrolled
@@ -155,31 +184,17 @@ def learn_merges(
     rather than papered over; any real corpus supports vastly more
     merges than N_MERGES.
     """
-    words = _encoded_vocab(spark, sf_dir).localCheckpoint()  # one corpus scan
-    merges: list[tuple[int, str, str, int]] = []
-    for k in range(1, n_merges + 1):
-        top = (
-            _pair_counts(words)
-            .orderBy(
-                F.desc("pair_freq"), F.asc("l"), F.asc("r")
-            )
-            .limit(1)
-            .collect()
-        )  # TakeOrderedAndProject; bounded: exactly one row
-        if not top:
-            break
-        l, r, f = top[0]["l"], top[0]["r"], top[0]["pair_freq"]
-        merges.append((k, l, r, int(f)))
-        words = words.withColumn(
-            "s",
-            F.replace(
-                F.col("s"),
-                F.lit(f" {l}{_SEP}{r} "),
-                F.lit(f" {l}{r} "),
-            ),
-        )
-        if k % CHECKPOINT_EVERY == 0:
-            words = words.localCheckpoint()
+    learned = (
+        _encoded_vocab(spark, sf_dir)
+        .repartition(1)
+        .mapInPandas(_make_learner(n_merges), schema=_LEARNED_SCHEMA)
+    )
+    merges = learned.filter(F.col("merge_rank").isNotNull()).select(
+        "merge_rank", "left_sym", "right_sym", "pair_freq"
+    )
+    words = learned.filter(F.col("token").isNotNull()).select(
+        "token", "s", "freq"
+    )
     return merges, words
 
 
@@ -187,10 +202,7 @@ def q_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The learned merge table: (merge_rank, left_sym, right_sym,
     pair_freq) for N_MERGES rounds, in learned order."""
     merges, _ = learn_merges(spark, sf_dir)
-    return spark.createDataFrame(
-        merges,
-        "merge_rank long, left_sym string, right_sym string, pair_freq long",
-    ).orderBy("merge_rank")
+    return merges.orderBy("merge_rank")
 
 
 # ---------------------------------------------------------------
@@ -248,10 +260,10 @@ def learned_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         fp,
         "segmentation",
         _build,
-        version=f"bpe-seg-v1:n={N_MERGES}",
+        version=f"bpe-seg-v2:n={N_MERGES}",
     )
     try:
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     except AnalysisException:
         return _build_df()
 
@@ -311,7 +323,7 @@ def sql_learn_ctes(n_merges: int = N_MERGES) -> str:
     ``v{k}``. Every vK is MATERIALIZED — it is referenced by both
     p{k+1} and v{k+1}, and inlining would re-evaluate the whole
     prefix exponentially. Same regexes, same delimiter bytes, same
-    ``(pair_freq DESC, l, r)`` total order as the Spark loop."""
+    ``(pair_freq DESC, l, r)`` total order as the Spark learner."""
     ctes = [
         f"""v0 AS MATERIALIZED (
   SELECT t AS token, '{_SEP}' || regexp_replace(t, '(.)', '\\1{_SEP}', 'g') AS s,

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from projet_etl_spark.operators.dedup import q_dedup_minhash_lsh
-from projet_etl_spark.sources.tables import load_table
+from projet_etl_spark.sources.tables import load_table, read_parquet
 
 # Pointer doubling reaches distance ~2^k after k rounds; 50 rounds
 # covers any diameter a physical dataset can express. Exhausting the
@@ -213,7 +213,7 @@ def _staged_labels(
         version=f"{kind}-labels-v1:rounds={MAX_ROUNDS}{version_extra}",
     )
     try:
-        return spark.read.parquet(path).select(*cols)
+        return read_parquet(spark, path).select(*cols)
     except AnalysisException:
         return build_df()
 

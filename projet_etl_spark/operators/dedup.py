@@ -51,7 +51,7 @@ from projet_etl_spark.functions.vectors import (
     fold_dot,
     fold_norm2,
 )
-from projet_etl_spark.sources.tables import load_table
+from projet_etl_spark.sources.tables import load_table, read_parquet
 
 JACCARD_THRESHOLD = 0.8
 # the synthetic embeddings are near-orthogonal (max pairwise cosine
@@ -398,7 +398,7 @@ def _staged_pair_frame(spark, sf_dir, kind, build_df, cols):
         ),
     )
     try:
-        return spark.read.parquet(path).select(*cols)
+        return read_parquet(spark, path).select(*cols)
     except AnalysisException:
         return build_df()
 

@@ -233,8 +233,12 @@ def score_documents_arrow(docs: DataFrame) -> DataFrame:
     doc grain). q_text_quality_model_jvm keeps the JVM-expression
     plan — that twin's identity IS the all-JVM shape — and the
     streaming budget twin keeps score_documents so stream/batch
-    parity stays plan-shared."""
-    staged = docs.select("doc_id", tokens(F.col("text")).alias("t"))
+    parity stays plan-shared. A null-text document is dropped before
+    the kernel, as the JVM shape drops it (its feature explode yields
+    no rows)."""
+    staged = docs.filter(F.col("text").isNotNull()).select(
+        "doc_id", tokens(F.col("text")).alias("t")
+    )
     return staged.mapInPandas(
         make_quality_scorer(N_BUCKETS, W_SPAN), schema=OUT_SCHEMA
     )

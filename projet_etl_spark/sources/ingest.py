@@ -787,8 +787,10 @@ def table_exists(spark: SparkSession, path: str) -> bool:
     readers eliminated (storeio.read_store discipline)."""
     from pyspark.errors import AnalysisException
 
+    from projet_etl_spark.sources.tables import read_parquet
+
     try:
-        spark.read.parquet(path).schema
+        read_parquet(spark, path).schema
         return True
     except AnalysisException:
         return False

@@ -311,6 +311,47 @@ def test_round5_text_ops_match_oracle_on_edge_corpus(spark, tmp_path):
         con.close()
 
 
+def test_quality_scorer_twins_drop_null_text(spark, tmp_path):
+    """A null-text document is dropped by both scorer twins: the JVM
+    feature explode yields no rows for it, and the Arrow kernel never
+    receives it. corpus-quality-budget, which reads the Arrow twin's
+    verdict, still matches its oracle on a corpus holding one."""
+    from projet_etl_spark.operators.quality_model import (
+        score_documents,
+        score_documents_arrow,
+    )
+
+    docs = [
+        (0, None, "en"),
+        (1, "the cat sat on the mat", "en"),
+        (2, "", "fr"),
+        (3, None, "fr"),
+        (4, "bonjour le monde bonjour", "fr"),
+    ]
+    path = str(tmp_path / "documents.parquet")
+    spark.createDataFrame(docs, "doc_id long, text string, lang string").write.parquet(
+        path
+    )
+    frame = spark.read.parquet(path).select("doc_id", "text")
+    jvm = sorted(tuple(r) for r in score_documents(frame).collect())
+    arrow = sorted(tuple(r) for r in score_documents_arrow(frame).collect())
+    assert jvm == arrow
+    assert [r[0] for r in arrow] == [1, 2, 4]
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{path}/*.parquet')"
+    )
+    try:
+        spec = REGISTRY["corpus-quality-budget"]
+        assert_matches_oracle(
+            spec.fn(spark, str(tmp_path)), con, spec.oracle, "budget-null-text"
+        )
+    finally:
+        con.close()
+
+
 def test_event_transitions_tiebreak_on_simultaneous_events(spark, tmp_path):
     """The fixture rarely has same-microsecond events per user; pin
     the (ts, event_id) successor tie-break on a crafted corpus where

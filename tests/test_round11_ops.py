@@ -193,6 +193,83 @@ def test_staged_segmentation_matches_fresh_learn(spark):
     assert staged == fresh and len(staged) > 0
 
 
+def _py_vocab(texts):
+    """The learner's input for a crafted corpus, through Python's own
+    regex engine: alpha word tokens of the shared pre-tokenizer."""
+    import re
+    from collections import Counter
+
+    from projet_etl_spark.operators.bpe import WORD_RE
+    from projet_etl_spark.operators.textstats import BPE_PATTERN
+
+    counts = Counter(
+        t
+        for text in texts
+        if text is not None
+        for t in re.findall(BPE_PATTERN, text)
+        if re.match(WORD_RE, t)
+    )
+    return {t: (list(t), c) for t, c in counts.items()}
+
+
+def _learn_on(spark, tmp_path, texts):
+    """(merges, {token: n_syms}) of the engine learner over a
+    documents table holding ``texts``."""
+    from pyspark.sql import functions as F
+
+    from projet_etl_spark.operators import bpe
+
+    spark.createDataFrame(
+        [(i, t, "en") for i, t in enumerate(texts)],
+        "doc_id long, text string, lang string",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    got = [
+        (r["merge_rank"], r["left_sym"], r["right_sym"], r["pair_freq"])
+        for r in bpe.q_bpe_learn_merges(spark, str(tmp_path)).collect()
+    ]
+    _, words = bpe.learn_merges(spark, str(tmp_path))
+    segs = {
+        r["token"]: r["n"]
+        for r in words.select(
+            "token",
+            F.expr("size(filter(split(s, '  '), x -> x <> ''))").alias("n"),
+        ).collect()
+    }
+    return got, segs
+
+
+def test_learner_breaks_pair_freq_ties_by_left_then_right(spark, tmp_path):
+    """Equal pair_freq is broken by the left symbol, then the right
+    one: (a,b), (a,c), (b,a) and (z,a) all start at frequency 2."""
+    from projet_etl_spark.operators import bpe
+
+    texts = ["ba za ac ab", "ab za ac ba", None, "", "7 !"]
+    got, segs = _learn_on(spark, tmp_path, texts)
+    ref, ref_vocab = _py_learn(_py_vocab(texts), bpe.N_MERGES)
+    assert got == ref
+    assert got[:2] == [(1, "a", "b", 2), (2, "a", "c", 2)]
+    assert segs == {w: len(syms) for w, (syms, _) in ref_vocab.items()}
+
+
+def test_learner_stops_when_pairs_run_out(spark, tmp_path):
+    """A corpus with fewer learnable pairs than N_MERGES returns one
+    row per pair it could merge, and every word ends as one symbol."""
+    from projet_etl_spark.operators import bpe
+
+    texts = ["abc abc xy", "xy q"]
+    got, segs = _learn_on(spark, tmp_path, texts)
+    ref, _ = _py_learn(_py_vocab(texts), bpe.N_MERGES)
+    assert got == ref
+    assert 0 < len(got) < bpe.N_MERGES
+    assert segs == {"abc": 1, "xy": 1}
+
+
+def test_learner_on_empty_documents(spark, tmp_path):
+    """An empty documents table learns zero merges, without error."""
+    got, segs = _learn_on(spark, tmp_path, [])
+    assert got == [] and segs == {}
+
+
 # ---------------------------------------------------------------
 # URL canonicalization
 # ---------------------------------------------------------------
