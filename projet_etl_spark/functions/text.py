@@ -110,5 +110,4 @@ def sql_shingles_k(t: str, k: int) -> str:
         f"list_distinct(list_transform("
         f"range(1, greatest(len({t}) - {k - 2}, 1)), i -> {terms}))"
     )
-SQL_H30 = f"({SQL_HASH60} % {H30_MOD})"
 SQL_NORMALIZED = "regexp_replace(lower(trim({col})), '\\s+', ' ', 'g')"

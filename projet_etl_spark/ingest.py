@@ -20,6 +20,9 @@ import argparse
 import os
 import sys
 
+from pyspark.sql import Observation
+from pyspark.sql import functions as F
+
 from projet_etl_spark.schemas import POINTS_DE_VENTE_SCHEMA, PRODUITS_SCHEMA
 from projet_etl_spark.sources.ingest import read_whitespace_csv, write_table
 
@@ -65,14 +68,17 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         spark = get_spark("projet-etl-ingest")
     try:
         for table, fname, schema in TABLES:
+            # the row count rides the write job, so reporting it reads
+            # nothing back
+            rows = Observation()
             df = read_whitespace_csv(
                 spark, os.path.join(args.csv_dir, fname), schema
-            )
+            ).observe(rows, F.count(F.lit(1)).alias("n"))
             dst = os.path.join(args.out_dir, table)
             write_table(
                 df, dst, partition_by_month_of=None if args.flat else "dateid"
             )
-            n = spark.read.parquet(dst).count()
+            n = rows.get["n"]
             print(f"{table}: {n} rows -> {dst}")
     finally:
         if owns_spark:

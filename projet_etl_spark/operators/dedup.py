@@ -90,124 +90,51 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doc_shingles(load_table(spark, sf_dir, "documents"))
 
 
-# expand-path sparsity ceiling: banded-LSH candidates measure ~0.6
-# pairs per candidate doc (df cap bounds bucket width); the known
-# 10x-pathological prefix-filter corpus measured ~8,000 — 64 sits two
-# orders of magnitude from both regimes
-_EXPAND_MAX_PAIRS_PER_DOC = 64
+def _jaccard_pairs(sh: DataFrame, pairs: DataFrame | None = None) -> DataFrame:
+    """(doc_a, doc_b, jaccard): exact word-3-gram Jaccard.
 
-
-def _jaccard_pairs(
-    sh: DataFrame,
-    pairs: DataFrame | None = None,
-    pairs_via_join: bool = False,
-) -> DataFrame:
-    """Exact jaccard for doc pairs sharing >= 1 shingle. When
-    ``pairs`` (doc_a, doc_b) is given, only those are scored.
-
-    Two verification strategies for the pairs case, chosen by the
-    CALLER because the right one depends on candidate density:
-
-    - expand (default): each pair expands by doc_a's shingles, then a
-      semi-join on (doc_b, s) counts the intersection. Cost is
-      O(|pairs| x avg shingles) — the win when candidates are SPARSE
-      (banding with the df cap keeps them sparse by construction).
-    - via-join (``pairs_via_join=True``): intersections come from the
-      shingle equi-join restricted to candidate docs, then a semi-join
-      keeps candidate pairs. Cost is bounded by the all-pairs exact
-      join regardless of |pairs| — the safe choice when candidates can
-      be DENSE (prefix filtering on a small-vocabulary corpus:
-      measured 18M candidates for 2.2k true pairs at sf1-equivalent,
-      where the expand strategy pays |pairs| x shingles = 10x the
-      all-pairs join it was meant to beat).
-
-    The expand path's sparsity precondition is ASSERTED IN THE PLAN
-    (round-8, r7 verdict item 7), not left as caller folklore: a
-    1-row candidate-density aggregate (|pairs|, |candidate docs|) is
-    broadcast onto the result and ``assert_true`` fails the query
-    when |pairs| > ``_EXPAND_MAX_PAIRS_PER_DOC`` x |docs| — the
-    regime where via-join is the right strategy. Banded LSH with the
-    df cap emits well under 1 candidate pair per doc (measured 0.53
-    at sf0.01, 0.62 at sf0.001); the known-pathological prefix-filter
-    corpus measured ~8,000/doc, so 64 sits two orders of magnitude
-    from both. The guard evaluates with the result rows, so it cannot
-    PREEMPT a mis-chosen plan's cost — it turns the silent 10x into a
-    loud error so the next corpus can't keep shipping on the wrong
-    path. (Lazy-eval caveat: an empty verification result skips the
-    check; misconfiguration only matters when pairs exist.)
+    ``sh`` is (doc_id, s) with per-doc-distinct shingles (shingles3
+    applies array_distinct). Without ``pairs`` every pair sharing at
+    least one shingle is scored through the shingle equi-join — the
+    all-pairs baseline. With ``pairs`` (doc_a, doc_b) exactly those
+    are scored (a pair of shingled docs sharing none scores 0.0), by
+    :func:`_verify_pairs` over per-document shingle arrays: the cost
+    is two equi-joins at pair grain plus one array intersection per
+    pair, linear in the candidates with no density precondition, so
+    every candidate generator (banding, prefix filtering, the
+    streaming twin) shares one verifier.
     """
-    density = None
     if pairs is not None:
-        # candidates-first: restrict the shingle table to docs that
-        # appear in any candidate pair (broadcast semi-join = map-side
-        # filter, no shuffle of the big exploded table), then expand
-        # only the candidate pairs — this is what makes the sketch
-        # path cheaper than the exact all-pairs path
-        cand_docs = (
-            pairs.select(F.col("doc_a").alias("doc_id"))
-            .union(pairs.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
-        sh = sh.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-        if not pairs_via_join:
-            # 1-row candidate-density audit for the sparsity assert —
-            # one extra pass over the (small) pairs frame, never over
-            # the exploded shingle table
-            density = pairs.select(
-                F.explode(F.array("doc_a", "doc_b")).alias("d")
-            ).agg(
-                (F.count(F.lit(1)) / 2).cast("long").alias("__np"),
-                F.count_distinct("d").alias("__nd"),
-            )
+        sets = sh.groupBy("doc_id").agg(F.collect_list("s").alias("S"))
+        return _verify_pairs(pairs, sets)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "s")
     b = sh.select(F.col("doc_id").alias("doc_b"), "s")
-    if pairs is not None and pairs_via_join:
-        inter = (
-            a.join(b, "s")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-            .join(pairs, ["doc_a", "doc_b"], "left_semi")
-        )
-    elif pairs is not None:
-        inter = (
-            pairs.join(a, "doc_a")
-            .join(b, ["doc_b", "s"], "left_semi")
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-    else:
-        inter = (
-            a.join(b, "s")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
+    inter = (
+        a.join(b, "s")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
     na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    scored = inter.join(na, "doc_a").join(nb, "doc_b")
-    jac = F.round(
-        F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
+    jac = F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6)
+    return inter.join(na, "doc_a").join(nb, "doc_b").select(
+        "doc_a", "doc_b", jac.alias("jaccard")
     )
-    if density is not None:
-        # the sparsity precondition, asserted in the plan (same
-        # when(assert_true(...).isNull(), col) idiom as the
-        # fixed-point guard so column pruning can't drop the check)
-        scored = scored.crossJoin(F.broadcast(density))
-        ok = F.assert_true(
-            F.col("__np") <= F.lit(_EXPAND_MAX_PAIRS_PER_DOC) * F.col("__nd"),
-            F.lit(
-                "_jaccard_pairs: candidate density exceeds "
-                f"{_EXPAND_MAX_PAIRS_PER_DOC} pairs/doc — the expand "
-                "verification strategy costs |pairs| x shingles here, "
-                "which this density makes worse than the all-pairs "
-                "join; call with pairs_via_join=True (cost bounded at "
-                "the all-pairs join regardless of |pairs|)"
-            ),
-        )
-        jac = F.when(ok.isNull(), jac)
-    return scored.select("doc_a", "doc_b", jac.alias("jaccard"))
+
+
+def _verify_pairs(pairs: DataFrame, sets: DataFrame) -> DataFrame:
+    """Exact jaccard of candidate pairs from (doc_id, S) distinct
+    shingle arrays: |A n B| by array_intersect, |A u B| by inclusion-
+    exclusion."""
+    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("S").alias("A"))
+    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("S").alias("B"))
+    i = F.size(F.array_intersect("A", "B"))
+    jac = F.round(i / (F.size("A") + F.size("B") - i), 6)
+    return pairs.join(a, "doc_a").join(b, "doc_b").select(
+        "doc_a", "doc_b", jac.alias("jaccard")
+    )
 
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -300,8 +227,9 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs: band-bucket candidate generation,
     then exact-jaccard verification at threshold 0.8.
 
-    The exploded shingle set feeds four subtrees (hashing, sizes,
-    both verification sides); persisting it turns those into one
+    The exploded shingle set feeds the banding subtrees (document
+    frequencies, corpus size, hashing) and the verifier's
+    per-document shingle arrays; persisting it turns those into one
     tokenize pass — the same staged-materialization pattern a 100 TB
     run would use with an intermediate table. The persist is EAGER
     (count()) because Spark's concurrent broadcast-subquery jobs
@@ -309,12 +237,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole shingle pipeline (measured: 9 redundant 33-task jobs).
     """
     sh = eager_persist(_doc_shingles(spark, sf_dir))
-    # the candidate set feeds two consumers since round 8 (the expand
-    # verification AND the in-plan density audit); persisting it keeps
-    # the banding aggregation at one execution (measured 4.27 s →
-    # 3.75 s at sf0.1) — candidates are banding-bounded, tiny
-    cands = eager_persist(minhash_candidates(sh))
-    return _jaccard_pairs(sh, pairs=cands).filter(
+    return _jaccard_pairs(sh, pairs=minhash_candidates(sh)).filter(
         F.col("jaccard") >= JACCARD_THRESHOLD
     )
 
@@ -348,8 +271,7 @@ def _scored_pairs_from_scratch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, jaccard >= SWEEP_FLOOR) — the lazy builder plan,
     exactly q_dedup_minhash_lsh's pipeline graded at the sweep floor."""
     sh = eager_persist(_doc_shingles(spark, sf_dir))
-    cands = eager_persist(minhash_candidates(sh))
-    return _jaccard_pairs(sh, pairs=cands).filter(
+    return _jaccard_pairs(sh, pairs=minhash_candidates(sh)).filter(
         F.col("jaccard") >= F.lit(SWEEP_FLOOR)
     )
 
@@ -393,7 +315,7 @@ def _staged_pair_frame(spark, sf_dir, kind, build_df, cols):
         # the constants the pair builders bake into the staged bytes
         # (advisor item: code changes must invalidate the cache)
         version=(
-            f"{kind}-v1:floor={SWEEP_FLOOR}:thr={JACCARD_THRESHOLD}"
+            f"{kind}-v2:floor={SWEEP_FLOOR}:thr={JACCARD_THRESHOLD}"
             f":cap={DF_CAP_MIN},{DF_CAP_FRAC}"
         ),
     )
@@ -481,9 +403,8 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_candidates(sh: DataFrame) -> DataFrame:
     """Banded LSH candidate pairs (doc_a < doc_b) from a shingle
     frame — the shared front half of every minhash-verified dedup
-    variant. The candidate set is tiny but feeds several subtrees
-    (both sides of the doc filter + the verification join); persist
-    so the band self-join runs once."""
+    variant. The candidate set is tiny; it is persisted so the band
+    self-join runs once for every consumer of the returned frame."""
     bands = _minhash_band_keys(df_capped_shingles(sh))
     left = bands.select(F.col("doc_id").alias("doc_a"), "band", "key")
     right = bands.select(F.col("doc_id").alias("doc_b"), "band", "key")
@@ -1192,74 +1113,61 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard >= t must overlap in >= ceil(t*n) elements, so they
     cannot avoid sharing a prefix element — candidates from the
     prefix-only self-join provably contain every qualifying pair,
-    and exact verification (the shared _jaccard_pairs kernel, full
-    uncapped sets) removes false positives. Result is therefore
-    IDENTICAL to q_dedup_ngram_jaccard and shares its oracle.
+    and exact verification (full uncapped sets) removes false
+    positives. Result is therefore IDENTICAL to q_dedup_ngram_jaccard
+    and shares its oracle.
+
+    One lazy plan, no persist: a single per-document aggregate
+    ``r = sort_array(collect_list(struct(df, s)))`` carries that total
+    order (struct comparison is df, then s). Its slice is the prefix,
+    its ``r.s`` is the full set the verifier intersects, and its size
+    is n; Catalyst plans the aggregate's exchange once and reuses it
+    for both prefix-join sides and both verification joins.
 
     vs banding, at 100 TB: banding's cost is bucket occupancy under
     a fixed band plan (probabilistic recall); prefix filtering is
     exact-recall and its join touches only the RAREST ~(1-t)·n
     shingles of each doc — the equi-join key frequency is bounded by
     construction (rare-first ordering), where banding needs the df
-    cap to bound it. ceil(t*n) runs in integer arithmetic
-    (t = 4/5): float ceil over-shoots on exact multiples and would
-    silently break the exactness guarantee.
+    cap to bound it. Verification costs two equi-joins at candidate
+    grain plus one array intersection per candidate, so a corpus
+    whose prefixes still collide (small vocabulary) pays for its
+    candidates, never for the all-pairs shingle join. ceil(t*n) runs
+    in integer arithmetic (t = 4/5): float ceil over-shoots on exact
+    multiples and would silently break the exactness guarantee.
     """
-    from pyspark.sql import Window
-
-    sh = eager_persist(_doc_shingles(spark, sf_dir))
+    sh = _doc_shingles(spark, sf_dir)
     df = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    by_rarity = Window.partitionBy("doc_id").orderBy("df", "s")
     ranked = (
         sh.join(df, "s")
-        .select(
-            "doc_id",
-            "s",
-            F.row_number().over(by_rarity).alias("rnk"),
-            F.count(F.lit(1)).over(Window.partitionBy("doc_id")).alias("n"),
-        )
+        .groupBy("doc_id")
+        .agg(F.sort_array(F.collect_list(F.struct("df", "s"))).alias("r"))
+        .select("doc_id", F.size("r").alias("n"), "r")
     )
     # p = n - ceil(t*n) + 1, exactly: ceil(4n/5) = (4n + 4) div 5
-    prefix = ranked.filter(
-        F.col("rnk")
-        <= F.col("n")
-        - F.expr(f"div(n * {_JT_NUM} + {_JT_DEN - 1}, {_JT_DEN})")
-        + 1
+    p = F.col("n") - F.expr(f"div(n * {_JT_NUM} + {_JT_DEN - 1}, {_JT_DEN})") + 1
+    prefix = ranked.select(
+        "doc_id", "n", F.explode(F.slice("r", 1, p).getField("s")).alias("s")
     )
-    a = prefix.select(
-        F.col("doc_id").alias("doc_a"), "s", F.col("n").alias("na")
-    )
-    b = prefix.select(
-        F.col("doc_id").alias("doc_b"), "s", F.col("n").alias("nb")
-    )
+    a = prefix.select(F.col("doc_id").alias("doc_a"), "s", F.col("n").alias("na"))
+    b = prefix.select(F.col("doc_id").alias("doc_b"), "s", F.col("n").alias("nb"))
     # length filter (AllPairs): jaccard >= t forces t*|b| <= |a| <= |b|/t
     # — |inter| <= min(|a|,|b|) and |union| >= max(|a|,|b|), so
     # min/max >= t is necessary. Integer form: t = 4/5 ->
     # 4*max <= 5*min. Applied inside the prefix join it discards
     # size-incompatible candidates before the dedup/verify stages,
     # and cannot drop a qualifying pair.
-    # r14: persist the candidate set — it feeds THREE subtrees inside
-    # _jaccard_pairs (both union arms of cand_docs + the final
-    # left-semi), and the window-ranked prefix self-join behind it is
-    # the most expensive subtree of the query (the same reasoning as
-    # minhash_candidates' persist; measured 7.14 → 6.12 s median
-    # interleaved, OPTIMIZATION_r14.md). Candidates are
-    # prefix-bounded, tiny at any corpus size.
-    cands = eager_persist(
+    cands = (
         a.join(b, "s")
         .filter(
             (F.col("doc_a") < F.col("doc_b"))
-            & (
-                F.greatest("na", "nb") * _JT_NUM
-                <= F.least("na", "nb") * _JT_DEN
-            )
+            & (F.greatest("na", "nb") * _JT_NUM <= F.least("na", "nb") * _JT_DEN)
         )
         .select("doc_a", "doc_b")
         .distinct()
     )
-    return _jaccard_pairs(sh, pairs=cands, pairs_via_join=True).filter(
-        F.col("jaccard") >= JACCARD_THRESHOLD
-    )
+    sets = ranked.select("doc_id", F.col("r").getField("s").alias("S"))
+    return _verify_pairs(cands, sets).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
 
 
 # --- deployment-threshold embedding dedup (r12, r11 verdict item 2) --

@@ -113,24 +113,6 @@ def kmeans_fit(
     return centroids, assign_clusters(emb, centroids)
 
 
-def q_kmeans_clusters_float(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster sizes and mean within-cluster squared distance after
-    KMEANS_ITERS Lloyd iterations (library variant: K rows, stable
-    schema; float means are partition-order-dependent so no SQL
-    oracle — see module docstring for the pytest contract. The
-    REGISTERED query is the fixed-point twin below, whose integer
-    arithmetic is oracle-exact)."""
-    _, assigned = kmeans_fit(spark, sf_dir)
-    return (
-        assigned.groupBy("cluster")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_vectors"),
-            F.round(F.avg("dist2"), 6).alias("mean_dist2"),
-        )
-        .orderBy("cluster")
-    )
-
-
 # ---- fixed-point (oracle-exact) twin --------------------------------
 #
 # Quantizing the embeddings to 1e-6 fixed point turns every Lloyd
@@ -158,16 +140,6 @@ def _quantized(emb: DataFrame) -> DataFrame:
         ).cast("long"),
     )
     return emb.select("vec_id", q.alias("q"))
-
-
-def _qdist2_to(centroid: list[int], v: str = "q") -> Column:
-    """Exact integer squared distance to an integer centroid literal."""
-    c = F.array(*[F.lit(int(x)).cast("long") for x in centroid])
-    return F.aggregate(
-        F.zip_with(F.col(v), c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, t: acc + t,
-    )
 
 
 def assign_clusters_q(emb_q: DataFrame, centroids: list[list[int]]) -> DataFrame:

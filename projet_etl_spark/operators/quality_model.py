@@ -247,10 +247,8 @@ def score_documents_arrow(docs: DataFrame) -> DataFrame:
 def q_text_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same scores via the Arrow/pandas deployment shape: Spark
     tokenizes (so tokenization can't drift between engines), Python
-    hashes and sums per batch."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", tokens(F.col("text")).alias("t")
-    )
-    return docs.mapInPandas(
-        make_quality_scorer(N_BUCKETS, W_SPAN), schema=OUT_SCHEMA
+    hashes and sums per batch (score_documents_arrow, which drops
+    null text as the JVM twin does)."""
+    return score_documents_arrow(
+        load_table(spark, sf_dir, "documents")
     ).orderBy("doc_id")

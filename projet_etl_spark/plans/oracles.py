@@ -69,8 +69,6 @@ def _m3_spine(epoch: str, as_of: str) -> str:
 """.format(epoch=epoch, as_of=as_of)
 
 
-_M3_SPINE = _m3_spine(_P["epoch"], _P["as_of"])
-
 _M2_PER_STORE = (
     ORACLE_VIEWS
     + """,

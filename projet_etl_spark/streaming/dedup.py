@@ -17,14 +17,3 @@ def dedup_events(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Drop duplicate events by event_id within the watermark window
     (expects TimestampType ``ts``)."""
     return events.withWatermark("ts", watermark).dropDuplicates(["event_id"])
-
-
-def dedup_events_within_watermark(
-    events: DataFrame, watermark: str = "1 hour"
-) -> DataFrame:
-    """Variant using dropDuplicatesWithinWatermark (Spark 3.5+):
-    guarantees dedup only within the watermark delay — the form to
-    prefer when event_id reuse across days is expected."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )

@@ -3,7 +3,7 @@
 The reference has no streaming (SURVEY.md §2.11); this is the
 engine's beyond-reference extension: the same windowed aggregations
 as operators/events_windows.py, expressed as streaming plans —
-readStream → watermark → window/session_window → sink.
+readStream → watermark → window → sink.
 
 Batch/stream parity is the design invariant: the batch forms are
 oracle-checked against DuckDB, and the streaming tests assert the
@@ -103,26 +103,6 @@ def sliding_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
             "event_type",
             "n_events",
-        )
-    )
-
-
-def session_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Per-user session windows with a 15-minute gap — Spark's native
-    streaming sessionization (session_window merges overlapping
-    state; the batch gaps-and-islands form is q_events_session)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", "15 minutes").alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            "n_events",
-            "sum_value",
         )
     )
 

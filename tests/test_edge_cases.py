@@ -314,8 +314,10 @@ def test_round5_text_ops_match_oracle_on_edge_corpus(spark, tmp_path):
 def test_quality_scorer_twins_drop_null_text(spark, tmp_path):
     """A null-text document is dropped by both scorer twins: the JVM
     feature explode yields no rows for it, and the Arrow kernel never
-    receives it. corpus-quality-budget, which reads the Arrow twin's
-    verdict, still matches its oracle on a corpus holding one."""
+    receives it. The registry twins text-quality-model and
+    text-quality-model-jvm return the same rows, and they and
+    corpus-quality-budget, which reads the Arrow twin's verdict,
+    still match their oracles on a corpus holding one."""
     from projet_etl_spark.operators.quality_model import (
         score_documents,
         score_documents_arrow,
@@ -344,10 +346,20 @@ def test_quality_scorer_twins_drop_null_text(spark, tmp_path):
         f"read_parquet('{path}/*.parquet')"
     )
     try:
-        spec = REGISTRY["corpus-quality-budget"]
-        assert_matches_oracle(
-            spec.fn(spark, str(tmp_path)), con, spec.oracle, "budget-null-text"
+        model, twin = (
+            [tuple(r) for r in REGISTRY[n].fn(spark, str(tmp_path)).collect()]
+            for n in ("text-quality-model", "text-quality-model-jvm")
         )
+        assert model == twin and [r[0] for r in model] == [1, 2, 4]
+        for name in (
+            "text-quality-model",
+            "text-quality-model-jvm",
+            "corpus-quality-budget",
+        ):
+            spec = REGISTRY[name]
+            assert_matches_oracle(
+                spec.fn(spark, str(tmp_path)), con, spec.oracle, f"{name}-null-text"
+            )
     finally:
         con.close()
 

@@ -127,6 +127,36 @@ def test_cli_ingest_end_to_end(spark, tmp_path):
     con.close()
 
 
+def test_cli_ingest_counts_ride_the_write(spark, tmp_path, capsys):
+    """The CLI prints each table's row count without reading the
+    table back: one Spark job per table, the write itself."""
+    import os
+
+    from projet_etl_spark.ingest import TABLES, main
+
+    (tmp_path / "produits-tous.csv").write_text(CSV)
+    (tmp_path / "pointsDeVente-tous.csv").write_text(
+        "dateID ProdID CatID FabID MagID\n20220101 1 10 100 7\n"
+        "20220201 2 20 200 8\n"
+    )
+    wh = str(tmp_path / "wh")
+    sc = spark.sparkContext
+    sc.setJobGroup("cli-ingest-jobs", "cli-ingest-jobs")
+    try:
+        capsys.readouterr()
+        assert main([str(tmp_path), wh], spark=spark) == 0
+        jobs = sc.statusTracker().getJobIdsForGroup("cli-ingest-jobs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    out = capsys.readouterr().out.splitlines()
+    assert out == [
+        f"produits: 3 rows -> {os.path.join(wh, 'produits')}",
+        f"points_de_vente: 2 rows -> {os.path.join(wh, 'points_de_vente')}",
+    ]
+    assert len(jobs) <= len(TABLES), f"ingest ran jobs {list(jobs)}"
+    assert spark.read.parquet(os.path.join(wh, "produits")).count() == 3
+
+
 def test_cli_ingest_missing_inputs(tmp_path):
     from projet_etl_spark.ingest import main
 

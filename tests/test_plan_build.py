@@ -119,7 +119,9 @@ def test_events_reads_outside_the_memo(spark):
     assert f"{SF_SMALL}/events.parquet" not in tables._SCHEMAS
 
 
-@pytest.mark.parametrize("name", [*api._DISPATCH, "bpe-learn-merges"])
+@pytest.mark.parametrize(
+    "name", [*api._DISPATCH, "bpe-learn-merges", "dedup-prefix-filter"]
+)
 def test_warm_plan_build_runs_no_job(spark, name):
     """After one warm call (staged views built, schemas inferred),
     building the plan again runs no Spark job before its collect."""

@@ -229,13 +229,12 @@ def test_bottomk_sample_survives_crash_during_compaction(
     assert batches == [-1, 2] and n == spark.read.parquet(store).count()
 
 
-# --- r7 verdict item 7: _jaccard_pairs strategy bound in the plan ----
+# --- exact jaccard: one verifier for every candidate set -----------
 
 
-def _pairs_fixture(spark, n_docs=6, dense=False):
-    """Tiny corpus + candidate set. dense=True pairs every doc with
-    every other (complete graph), pushing pairs/doc past the expand
-    ceiling once _EXPAND_MAX_PAIRS_PER_DOC is monkeypatched low."""
+def _pairs_fixture(spark, n_docs=6):
+    """Tiny corpus whose docs all share shingles pairwise, with its
+    shingle frame and every pair (the complete graph)."""
     from projet_etl_spark.operators.dedup import doc_shingles
 
     docs = spark.createDataFrame(
@@ -245,50 +244,119 @@ def _pairs_fixture(spark, n_docs=6, dense=False):
         ],
         "doc_id long, text string",
     )
-    sh = doc_shingles(docs)
-    if dense:
-        cand = [(a, b) for a in range(n_docs) for b in range(a + 1, n_docs)]
-    else:
-        cand = [(0, 1)]
-    pairs = spark.createDataFrame(cand, "doc_a long, doc_b long")
-    return sh, pairs
+    cand = [(a, b) for a in range(n_docs) for b in range(a + 1, n_docs)]
+    return doc_shingles(docs), spark.createDataFrame(cand, "doc_a long, doc_b long")
+
+
+def _scored(rows):
+    return {(r[0], r[1]): r[2] for r in rows}
 
 
 def test_jaccard_expand_path_passes_when_sparse(spark):
+    """A sparse candidate set is scored exactly as the all-pairs
+    shingle join scores the same pairs."""
     from projet_etl_spark.operators.dedup import _jaccard_pairs
 
-    sh, pairs = _pairs_fixture(spark)
-    rows = _jaccard_pairs(sh, pairs=pairs).collect()
-    assert len(rows) == 1 and 0 < rows[0]["jaccard"] <= 1.0
+    sh, dense = _pairs_fixture(spark)
+    truth = _scored(_jaccard_pairs(sh).collect())
+    sparse = dense.filter("doc_a = 0 AND doc_b IN (1, 4)")
+    got = _scored(_jaccard_pairs(sh, pairs=sparse).collect())
+    assert got == {(0, 1): truth[(0, 1)], (0, 4): truth[(0, 4)]}
+    assert all(0 < j <= 1.0 for j in got.values())
 
 
-def test_jaccard_expand_path_raises_when_dense(spark, monkeypatch):
-    """Dense candidates on the expand path fail loudly with guidance
-    to switch to pairs_via_join, instead of silently running the
-    |pairs| x shingles plan that the strategy split exists to avoid."""
-    from projet_etl_spark.operators import dedup
+def test_jaccard_via_join_path_accepts_dense(spark):
+    """A dense candidate set (the complete graph on 6 docs, all
+    sharing shingles) needs no density precondition: every one of its
+    15 pairs is scored, exactly as the all-pairs shingle join does."""
+    from projet_etl_spark.operators.dedup import _jaccard_pairs
 
-    monkeypatch.setattr(dedup, "_EXPAND_MAX_PAIRS_PER_DOC", 1)
-    sh, pairs = _pairs_fixture(spark, dense=True)
-    with pytest.raises(Exception, match="pairs_via_join"):
-        dedup._jaccard_pairs(sh, pairs=pairs).collect()
+    sh, dense = _pairs_fixture(spark)
+    truth = _scored(_jaccard_pairs(sh).collect())
+    assert len(truth) == 15 and all(0 < j <= 1.0 for j in truth.values())
+    assert _scored(_jaccard_pairs(sh, pairs=dense).collect()) == truth
 
 
-def test_jaccard_via_join_path_accepts_dense(spark, monkeypatch):
-    """The same dense candidate set succeeds on the via-join path —
-    its cost bound (the all-pairs join) doesn't depend on |pairs|,
-    so no density precondition applies."""
-    from projet_etl_spark.operators import dedup
+def _write_docs(spark, root, docs):
+    spark.createDataFrame(docs, "doc_id long, text string, lang string").write.parquet(
+        f"{root}/documents.parquet"
+    )
 
-    monkeypatch.setattr(dedup, "_EXPAND_MAX_PAIRS_PER_DOC", 1)
-    sh, pairs = _pairs_fixture(spark, dense=True)
-    rows = dedup._jaccard_pairs(sh, pairs=pairs, pairs_via_join=True).collect()
-    assert len(rows) == 15  # complete graph on 6 docs, all share shingles
-    # and the two strategies agree on values for the same candidates
-    three = pairs.limit(3)  # 3 pairs over >=3 docs: passes ceiling 1
-    sparse = dedup._jaccard_pairs(sh, pairs=three, pairs_via_join=False)
-    via = dedup._jaccard_pairs(sh, pairs=three, pairs_via_join=True)
-    assert sorted(map(tuple, sparse.collect())) == sorted(map(tuple, via.collect()))
+
+def _dedup_twins(spark, root):
+    """(prefix-filter rows, all-pairs rows), both sorted."""
+    from projet_etl_spark.operators.dedup import (
+        q_dedup_ngram_jaccard,
+        q_dedup_prefix_filter,
+    )
+
+    return tuple(
+        sorted(map(tuple, q(spark, root).collect()))
+        for q in (q_dedup_prefix_filter, q_dedup_ngram_jaccard)
+    )
+
+
+def test_prefix_ties_on_df_break_by_shingle(spark, tmp_path):
+    """Docs X+Y and Y+X share every shingle but their two boundary
+    ones (jaccard 16/20 = 0.8). All shared shingles have df 2, so the
+    prefix (2 boundary shingles, then 2 of the tied ones) finds the
+    pair only if ties break corpus-wide by the shingle, not by the
+    position in the document."""
+    x = " ".join(f"x{i:02d}" for i in range(10))
+    y = " ".join(f"y{i:02d}" for i in range(10))
+    _write_docs(spark, str(tmp_path), [(1, f"{x} {y}", "en"), (2, f"{y} {x}", "en")])
+    prefix, exact = _dedup_twins(spark, str(tmp_path))
+    assert prefix == exact == [(1, 2, 0.8)]
+
+
+def test_prefix_filter_skips_short_and_null_text(spark, tmp_path):
+    """Documents with fewer than 3 tokens, empty or null text have no
+    shingles: they pair with nothing, and the rest still match the
+    all-pairs join and the oracle."""
+    import duckdb
+
+    from projet_etl_spark.plans.registry import REGISTRY
+
+    body = "the quick brown fox jumps over the lazy dog near the river bank"
+    _write_docs(
+        spark,
+        str(tmp_path),
+        [
+            (1, body, "en"),
+            (2, body + " today", "en"),
+            (3, None, "en"),
+            (4, "", "en"),
+            (5, "two words", "en"),
+            (6, "two words", "en"),
+            (7, "one", "fr"),
+        ],
+    )
+    prefix, exact = _dedup_twins(spark, str(tmp_path))
+    assert prefix == exact and [r[:2] for r in prefix] == [(1, 2)]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/documents.parquet/*.parquet')"
+    )
+    try:
+        spec = REGISTRY["dedup-prefix-filter"]
+        assert_matches_oracle(
+            spec.fn(spark, str(tmp_path)), con, spec.oracle, "prefix-short-text"
+        )
+    finally:
+        con.close()
+
+
+def test_prefix_filter_on_empty_documents(spark, tmp_path):
+    """An empty documents table gives no pairs, and the verifier takes
+    an empty candidate set."""
+    from projet_etl_spark.operators.dedup import _jaccard_pairs, doc_shingles
+
+    _write_docs(spark, str(tmp_path), [])
+    assert _dedup_twins(spark, str(tmp_path)) == ([], [])
+    sh = doc_shingles(spark.read.parquet(f"{tmp_path}/documents.parquet"))
+    none = spark.createDataFrame([], "doc_a long, doc_b long")
+    assert _jaccard_pairs(sh, pairs=none).collect() == []
 
 
 # --- round-8 additions: structural invariants beyond the oracles -----
