@@ -31,11 +31,7 @@ Regenerate with `python docs/generate_operators.py`.
 def main() -> None:
     lines = [HEADER]
     for name, spec in sorted(REGISTRY.items()):
-        doc = ""
-        if spec.raw_fn is not None and spec.raw_fn.__doc__:
-            doc = " ".join(
-                spec.raw_fn.__doc__.strip().split("\n\n")[0].split()
-            )
+        doc = " ".join((spec.fn.__doc__ or "").strip().split("\n\n")[0].split())
         check = "oracle" if spec.oracle else "rows-only"
         lines.append(f"| `{name}` | {','.join(spec.tags)} | {check} | {doc} |")
     lines.append(f"""

@@ -7,16 +7,18 @@ fin, annee; views.py:102-110), validates the type (views.py:113-114,
 dispatches through QUERY_MAP. This module keeps that exact contract
 — same parameter names, same error classes of behavior — but returns
 a lazy DataFrame instead of JSON (callers serialize at the edge, as
-S7 notes in SURVEY.md §2.1).
+S7 notes in SURVEY.md §2.1). QUERY_MAP's analogue is the registry
+itself: every registry name is a valid ``type``.
 """
 
 from __future__ import annotations
 
+import inspect
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from projet_etl_spark.operators import composite, simple, timeseries, topk
+from projet_etl_spark.plans.registry import REGISTRY
 from projet_etl_spark.sources.ingest import table_exists
 
 
@@ -28,6 +30,10 @@ class StoreNotFoundError(FileNotFoundError):
     """Reference behavior: 404 'Base de données non trouvée' (views.py:96)."""
 
 
+class UnknownParameterError(ValueError):
+    """A request parameter outside the reference's query-string names."""
+
+
 # reference query-string parameter names -> engine keyword arguments
 _PARAM_MAP = {
     "catID": "cat_id",
@@ -37,20 +43,6 @@ _PARAM_MAP = {
     "annee": "annee",
     "epoch": "epoch",
     "as_of": "as_of",
-}
-
-_DISPATCH = {
-    "cat": simple.q_cat,
-    "mag-cat": simple.q_mag_cat,
-    "fab-cat": simple.q_fab_cat,
-    "avg-prod-per-fab": simple.q_avg_prod_per_fab,
-    "top-magasins": topk.q_top_magasins,
-    "top-magasins-cat": topk.q_top_magasins_cat,
-    "nb-mag-cat-date": timeseries.q_nb_mag_cat_date,
-    "score-evolution": timeseries.q_score_evolution,
-    "top-1": topk.q_top_1,
-    "avg-cat-fab-10-mag": composite.q_avg_cat_fab_10_mag,
-    "score-sante-touts-les-mois": composite.q_score_sante_mois,
 }
 
 
@@ -68,17 +60,15 @@ def run_query(
         spark, f"{sf_dir}/lineitem.parquet"
     ):
         raise StoreNotFoundError(f"no warehouse at {sf_dir}")
-    if type_param not in _DISPATCH:
+    if type_param not in REGISTRY:
         raise UnknownQueryTypeError(f"unknown query type: {type_param!r}")
     unknown = set(request_params) - set(_PARAM_MAP)
     if unknown:
-        raise ValueError(f"unknown parameters: {sorted(unknown)}")
+        raise UnknownParameterError(f"unknown parameters: {sorted(unknown)}")
     kwargs = {
         _PARAM_MAP[k]: v for k, v in request_params.items() if v is not None
     }
-    fn = _DISPATCH[type_param]
-    import inspect
-
+    fn = REGISTRY[type_param].fn
     accepted = set(inspect.signature(fn).parameters)
     kwargs = {k: v for k, v in kwargs.items() if k in accepted}
     return fn(spark, sf_dir, **kwargs)

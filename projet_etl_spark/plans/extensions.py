@@ -23,6 +23,7 @@ from projet_etl_spark.functions import vectors as VEC
 from projet_etl_spark.operators import (
     asof,
     clusters,
+    composite,
     corpus,
     decontam,
     dedup,
@@ -39,6 +40,7 @@ from projet_etl_spark.operators import (
     stats,
     textstats,
     timeseries,
+    topk,
 )
 from projet_etl_spark.plans.oracles import PARITY_ORACLES
 
@@ -4898,11 +4900,30 @@ FROM j GROUP BY snap ORDER BY snap
 
 
 def build():
-    """Registry entries for the extension surface; imported by
-    plans.registry at module init."""
-    from projet_etl_spark.plans.registry import QuerySpec, _wrap
-
-    specs = [
+    """Every registry query as ``(name, operator, oracle SQL, tags)``,
+    in registry order; plans.registry wraps each one at module init.
+    The 13 reference-parity queries come first."""
+    return [
+        # the reference's QUERY_MAP queries (views.py:9-89) and their
+        # two -avg twins, each checked by its parity oracle
+        *(
+            (name, fn, PARITY_ORACLES[name], ("parity",))
+            for name, fn in (
+                ("cat", simple.q_cat),
+                ("mag-cat", simple.q_mag_cat),
+                ("fab-cat", simple.q_fab_cat),
+                ("avg-prod-per-fab", simple.q_avg_prod_per_fab),
+                ("top-magasins", topk.q_top_magasins),
+                ("top-magasins-cat", topk.q_top_magasins_cat),
+                ("top-1", topk.q_top_1),
+                ("nb-mag-cat-date", timeseries.q_nb_mag_cat_date),
+                ("score-evolution", timeseries.q_score_evolution),
+                ("avg-cat-fab-10-mag", composite.q_avg_cat_fab_10_mag),
+                ("avg-cat-fab-10-mag-avg", composite.q_avg_cat_fab_10_mag_avg),
+                ("score-sante-touts-les-mois", composite.q_score_sante_mois),
+                ("score-sante-touts-les-mois-avg", composite.q_score_sante_mois_avg),
+            )
+        ),
         ("dedup-exact", dedup.q_dedup_exact, _DEDUP_EXACT_SQL, ("dedup",)),
         ("dedup-ngram-jaccard", dedup.q_dedup_ngram_jaccard, _NGRAM_SQL, ("dedup",)),
         ("dedup-minhash-lsh", dedup.q_dedup_minhash_lsh, _MINHASH_SQL, ("dedup",)),
@@ -6091,7 +6112,3 @@ def build():
             ("text", "tokenizer"),
         ),
     ]
-    return {
-        name: QuerySpec(name=name, fn=_wrap(fn), oracle=sql, tags=tags, raw_fn=fn)
-        for name, fn, sql, tags in specs
-    }

@@ -4,18 +4,18 @@ This is the engine's public query surface — the analogue of the
 reference's QUERY_MAP dispatch dict (reference views.py:9-89,
 113-137), with every entry lazily planned and oracle-checked.
 
-``queries()`` / ``oracle_sql()`` feed ``__spark_entry__`` directly.
+``queries()`` / ``oracle_sql()`` feed ``__spark_entry__`` directly;
+``api.run_query`` and the query CLI dispatch from ``REGISTRY``.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from projet_etl_spark.operators import composite, simple, timeseries, topk
-from projet_etl_spark.plans.oracles import PARITY_ORACLES
 from projet_etl_spark.session import ensure_engine_conf
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -25,34 +25,17 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     name: str
     fn: QueryFn
-    oracle: str | None
-    tags: tuple[str, ...] = field(default=())
-    raw_fn: QueryFn | None = None  # unwrapped operator (docs/introspection)
+    oracle: str
+    tags: tuple[str, ...]
 
 
 def _wrap(fn) -> QueryFn:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str, **params) -> DataFrame:
         ensure_engine_conf(spark)
-        return fn(spark, sf_dir)
+        return fn(spark, sf_dir, **params)
 
     return run
-
-
-_PARITY_FNS: dict[str, Callable] = {
-    "cat": simple.q_cat,
-    "mag-cat": simple.q_mag_cat,
-    "fab-cat": simple.q_fab_cat,
-    "avg-prod-per-fab": simple.q_avg_prod_per_fab,
-    "top-magasins": topk.q_top_magasins,
-    "top-magasins-cat": topk.q_top_magasins_cat,
-    "top-1": topk.q_top_1,
-    "nb-mag-cat-date": timeseries.q_nb_mag_cat_date,
-    "score-evolution": timeseries.q_score_evolution,
-    "avg-cat-fab-10-mag": composite.q_avg_cat_fab_10_mag,
-    "avg-cat-fab-10-mag-avg": composite.q_avg_cat_fab_10_mag_avg,
-    "score-sante-touts-les-mois": composite.q_score_sante_mois,
-    "score-sante-touts-les-mois-avg": composite.q_score_sante_mois_avg,
-}
 
 
 # The driver's CORRECTNESS artifact records at most the FIRST 50
@@ -141,17 +124,8 @@ def _rotate(registry: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
 
 
 def _build_registry() -> dict[str, QuerySpec]:
-    registry: dict[str, QuerySpec] = {}
-    for name, fn in _PARITY_FNS.items():
-        registry[name] = QuerySpec(
-            name=name,
-            fn=_wrap(fn),
-            oracle=PARITY_ORACLES[name],
-            tags=("parity",),
-            raw_fn=fn,
-        )
-    # extension surfaces register themselves here (dedup, similarity,
-    # text stats, windows, multimodal). Imported lazily for module-load
+    # every query is declared once, in extensions.build() (parity,
+    # dedup, similarity, text, windows, ...). Imported lazily for module-load
     # cost, but a failure is FATAL: a broken transitive import used to
     # silently shrink the registry from 203 to 13 parity queries — the
     # same broken-read-as-clean class the store readers and
@@ -166,7 +140,10 @@ def _build_registry() -> dict[str, QuerySpec]:
             "would silently shrink to the 13 parity queries; fix the "
             f"extension import instead: {e}"
         ) from e
-    registry.update(extensions.build())
+    registry = {
+        name: QuerySpec(name=name, fn=_wrap(fn), oracle=sql, tags=tags)
+        for name, fn, sql, tags in extensions.build()
+    }
     return _rotate(registry)
 
 
@@ -178,6 +155,4 @@ def queries() -> dict[str, QueryFn]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle is not None
-    }
+    return {name: spec.oracle for name, spec in REGISTRY.items()}

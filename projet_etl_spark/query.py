@@ -1,14 +1,15 @@
 """``python -m projet_etl_spark.query <type> [--param K=V ...]`` —
 the engine's CLI analogue of the reference's query endpoint
 (``GET /api/produits/?type=<t>&catID=…&debut=…&fin=…``, reference
-etl_project/api_etl/views.py:90-154).
+etl_project/api_etl/views.py:90-154). ``<type>`` is any registry
+name.
 
 Same contract as the HTTP edge: reference parameter names
 (``catID``/``fabID``/``debut``/``fin``/``annee``), records-orient
 JSON on stdout (views.py:152-154), and the reference's two error
 classes mapped to exit codes — unknown query type (HTTP 400,
 views.py:113-114) exits 4, missing warehouse (HTTP 404,
-views.py:92-96) exits 44.
+views.py:92-96) exits 44. A malformed or unknown ``--param`` exits 2.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ import sys
 
 from projet_etl_spark.api import (
     StoreNotFoundError,
+    UnknownParameterError,
     UnknownQueryTypeError,
     run_query,
     to_records,
@@ -31,7 +33,7 @@ def build_parser() -> argparse.ArgumentParser:
         prog="python -m projet_etl_spark.query",
         description="Run a registry query and print records-orient JSON.",
     )
-    p.add_argument("type", help="query type, e.g. top-magasins")
+    p.add_argument("type", help="any registry query name, e.g. top-magasins")
     p.add_argument(
         "--sf-dir",
         default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"),
@@ -71,6 +73,9 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     except StoreNotFoundError as e:  # reference HTTP 404
         print(str(e), file=sys.stderr)
         return 44
+    except UnknownParameterError as e:  # same exit as a malformed --param
+        print(str(e), file=sys.stderr)
+        return 2
     finally:
         if owns_spark:
             spark.stop()

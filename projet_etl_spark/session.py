@@ -18,6 +18,16 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Let AQE rewrite a sort-merge join to a shuffled-hash join when the
+# RUNTIME-measured size of every build-side partition fits this
+# threshold — removes both sort passes exactly when a per-partition
+# hash table is safe, at any scale (the decision reads measured
+# shuffle stats, never estimates; upstream default 0 leaves the
+# optimization off). The estimate-based
+# spark.sql.join.preferSortMergeJoin stays at its default: estimates
+# go wrong after filters.
+SHJ_LOCAL_MAP_THRESHOLD = "64m"
+
 
 def get_spark(
     app_name: str = "projet-etl-spark",
@@ -27,52 +37,35 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     shuffle = str(shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
-    # r13 (guide §3.1): let AQE rewrite a sort-merge join to a
-    # shuffled-hash join when the RUNTIME-measured size of every
-    # build-side partition fits the threshold — removes both sort
-    # passes exactly when a per-partition hash table is safe, at any
-    # scale (the decision reads measured shuffle stats, never
-    # estimates; upstream default 0 simply leaves the optimization
-    # off). Parameterized for deployments that want it off; the
-    # estimate-based spark.sql.join.preferSortMergeJoin stays at its
-    # default (estimates go wrong after filters — guide §3.1).
-    shj_localmap = os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "64m")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            shj_localmap,
-        )
         .config("spark.sql.shuffle.partitions", shuffle)
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
-    return builder.getOrCreate()
+    return ensure_engine_conf(builder.getOrCreate())
 
 
 def ensure_engine_conf(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs the engine relies on to an
-    externally-provided session (e.g. the verify driver's).
+    """Apply the runtime-settable confs the engine relies on: to its
+    own session, and to a caller's session (e.g. one handed to
+    ``__spark_entry__``) before every registry query.
 
     UTC matters for correctness parity: the parquet timestamps are
     midnight instants, and a non-UTC session would shift
     ``to_date`` / ``date_trunc`` results relative to the
-    timezone-naive oracle.
+    timezone-naive oracle. The SMJ->SHJ threshold makes a caller's
+    session run the exact plans the bench times.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # same runtime-safe SMJ->SHJ conversion the engine's own session
-    # uses (r13), so an externally-provided driver session checks the
-    # exact plans the bench times; runtime-settable AQE conf
     spark.conf.set(
         "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "64m"),
+        SHJ_LOCAL_MAP_THRESHOLD,
     )
     return spark

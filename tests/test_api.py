@@ -89,4 +89,34 @@ def test_query_cli_error_codes(spark, tmp_path, capsys):
         main(["cat", "--sf-dir", str(tmp_path / "nowhere")], spark=spark) == 44
     )  # 404
     assert main(["cat", "--sf-dir", SF_SMALL, "--param", "junk"], spark=spark) == 2
-    capsys.readouterr()  # drain stderr
+    assert (
+        main(["cat", "--sf-dir", SF_SMALL, "--param", "catid=x"], spark=spark) == 2
+    )
+    assert "unknown parameters: ['catid']" in capsys.readouterr().err
+
+
+def test_rollup_type_answers_like_raw_query(spark):
+    """The API dispatches from the registry: a rollup twin takes the
+    reference's debut/fin and answers like its raw query."""
+    params = {"debut": "1996-03-01", "fin": "1997-06-30"}
+    raw = to_records(run_query(spark, SF_SMALL, "top-magasins", **params))
+    rollup = to_records(run_query(spark, SF_SMALL, "top-magasins-rollup", **params))
+    assert 0 < len(raw) <= 10
+    assert rollup == raw
+
+
+def test_query_cli_serves_extension_queries(spark, capsys):
+    import json
+    from operator import itemgetter
+
+    from projet_etl_spark.plans.registry import REGISTRY
+    from projet_etl_spark.query import main
+
+    assert main(["dedup-exact", "--sf-dir", SF_SMALL], spark=spark) == 0
+    printed = json.loads(capsys.readouterr().out)
+    direct = to_records(REGISTRY["dedup-exact"].fn(spark, SF_SMALL))
+    key = itemgetter("keep_id")
+    assert len(printed) > 0
+    assert sorted(printed, key=key) == sorted(
+        json.loads(json.dumps(direct, default=str)), key=key
+    )

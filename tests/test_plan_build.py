@@ -22,6 +22,21 @@ from tests.conftest import SF_SMALL
 
 _groups = itertools.count()
 
+# the reference's 11 request types (views.py:9-89), built through the API
+_API_TYPES = (
+    "cat",
+    "mag-cat",
+    "fab-cat",
+    "avg-prod-per-fab",
+    "top-magasins",
+    "top-magasins-cat",
+    "nb-mag-cat-date",
+    "score-evolution",
+    "top-1",
+    "avg-cat-fab-10-mag",
+    "score-sante-touts-les-mois",
+)
+
 
 def _jobs_while(spark, build):
     """(result of build(), ids of the jobs it ran)."""
@@ -120,7 +135,7 @@ def test_events_reads_outside_the_memo(spark):
 
 
 @pytest.mark.parametrize(
-    "name", [*api._DISPATCH, "bpe-learn-merges", "dedup-prefix-filter"]
+    "name", [*_API_TYPES, "bpe-learn-merges", "dedup-prefix-filter"]
 )
 def test_warm_plan_build_runs_no_job(spark, name):
     """After one warm call (staged views built, schemas inferred),
@@ -128,7 +143,7 @@ def test_warm_plan_build_runs_no_job(spark, name):
     from projet_etl_spark.plans.registry import queries
 
     def build():
-        if name in api._DISPATCH:
+        if name in _API_TYPES:
             return api.run_query(spark, SF_SMALL, name)
         return queries()[name](spark, SF_SMALL)
 
