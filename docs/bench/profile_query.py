@@ -13,6 +13,11 @@ column-pruning shortcut. Caches are released before every rep
 Explain output goes to plans/r13/<query>_<tag>.txt so plan claims in
 OPTIMIZATION_r13.md are checkable without running Spark.
 
+Each line also reports the generated classes the reps compiled and
+the time spent compiling them, read from Spark's CodegenMetrics and
+CodeGenerator counters: the compile layer beside jobs and stages. A
+cache hit compiles nothing, so the first rep usually pays them all.
+
 This is a diagnostic harness only — the driver contract stays
 bench.py.
 """
@@ -60,8 +65,13 @@ def main() -> None:
     warm = "cat" if "cat" in qs else next(iter(qs))
     qs[warm](spark, args.sf).collect()
 
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
     for name in args.names:
         times = []
+        n0, ns0 = compiles.getCount(), codegen.compileTime()
         for _ in range(args.reps):
             release_caches(rollups=False)
             spark.sparkContext.setJobDescription(f"profile:{name}")
@@ -70,6 +80,8 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
             times.append(time.perf_counter() - t0)
             spark.sparkContext.setJobDescription(None)
+        n_compiled = compiles.getCount() - n0
+        compile_s = (codegen.compileTime() - ns0) / 1e9
         if args.tag and not args.no_explain:
             os.makedirs(PLANS_DIR, exist_ok=True)
             release_caches(rollups=False)
@@ -80,7 +92,8 @@ def main() -> None:
             with open(os.path.join(PLANS_DIR, f"{name}_{args.tag}.txt"), "w") as f:
                 f.write(plan)
         print(
-            f"{name}: min={min(times):.3f}s  all={[round(t, 3) for t in times]}",
+            f"{name}: min={min(times):.3f}s  all={[round(t, 3) for t in times]}"
+            f"  compiled={n_compiled} classes in {compile_s:.3f}s",
             flush=True,
         )
     spark.stop()

@@ -23,7 +23,10 @@ def month_spine(spark: SparkSession, epoch: str, as_of: str) -> DataFrame:
 
     One row per month-start; generated with ``sequence`` + ``explode``
     on the executors (a few hundred rows even for decades — always a
-    broadcastable build side).
+    broadcastable build side). It is generated in one partition, and
+    ``coalesce(1)`` declares that: a plan that streams the spine keeps
+    SinglePartition, so its global sort runs in place with no range
+    exchange and no sampling job.
     """
     return spark.sql(
         """
@@ -32,4 +35,4 @@ def month_spine(spark: SparkSession, epoch: str, as_of: str) -> DataFrame:
                                       interval 1 month)) AS m)
         """,
         args={"epoch": epoch, "as_of": as_of},
-    )
+    ).coalesce(1)

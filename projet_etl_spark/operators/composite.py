@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from projet_etl_spark.functions.aggs import distinct_count
 from projet_etl_spark.functions.dates import month_key, month_spine
 from projet_etl_spark.operators.topk import q_top_magasins_cat
 from projet_etl_spark.params import DEFAULTS
@@ -47,7 +48,7 @@ def _m2_per_store(
         .filter((F.col("catid") == F.lit(cat_id)) & (F.col("fabid") == F.lit(fab_id)))
         .join(F.broadcast(top10.select("magid")), "magid", "left_semi")
         .groupBy("magid")
-        .agg(F.countDistinct("prodid").alias("nb_produits_fab"))
+        .agg(distinct_count("prodid").alias("nb_produits_fab"))
     )
     return (
         top10.join(fab_counts, "magid", "left")
@@ -129,7 +130,7 @@ def _m3_month_avgs(
         .join(F.broadcast(top10), "magid")
         .groupBy("magid", month_key(F.col("dateid")).alias("mois_annee"))
         .agg(
-            F.countDistinct("prodid").alias("nb_prod_mois"),
+            distinct_count("prodid").alias("nb_prod_mois"),
             F.first("total_produits").alias("total_produits"),
         )
         .filter(F.col("total_produits") != 0)

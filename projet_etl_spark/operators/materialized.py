@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from projet_etl_spark.functions.aggs import distinct_count
 from projet_etl_spark.functions.dates import month_key
 from projet_etl_spark.params import DEFAULTS
 from projet_etl_spark.sources.tables import points_de_vente
@@ -114,9 +115,9 @@ def q_top_magasins_rollup(
         .filter(F.col("mois").between(lo, hi))
         .groupBy("magid")
         .agg(
-            F.countDistinct("fabid").alias("total_fabricants"),
-            F.countDistinct("catid").alias("total_categories"),
-            F.countDistinct("prodid").alias("total_produits"),
+            distinct_count("fabid").alias("total_fabricants"),
+            distinct_count("catid").alias("total_categories"),
+            distinct_count("prodid").alias("total_produits"),
             F.sum("n_ventes").alias("total_ventes"),
         )
         .withColumn(

@@ -6,8 +6,12 @@ projection, equality/date-range predicates, grand aggregates,
 COUNT(DISTINCT), and two-level aggregation.
 
 All scans reach parquet with the predicate pushed down and only the
-referenced columns in ReadSchema; distinct-count aggregation is
-Spark's partial+final hash aggregate (no custom code at any scale).
+referenced columns in ReadSchema. The grand distinct counts
+(mag-cat, fab-cat) keep Catalyst's distinct aggregation: one set
+holds the whole category's stores or suppliers, so the values must
+spread over a shuffle. avg-prod-per-fab's per-supplier count is
+``distinct_count`` (one exchange on fabid), since one supplier's
+product set stays bounded at any scale (functions/aggs.py).
 """
 
 from __future__ import annotations
@@ -15,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from projet_etl_spark.functions.aggs import distinct_count
 from projet_etl_spark.params import DEFAULTS
 from projet_etl_spark.sources.tables import points_de_vente, produits
 
@@ -80,6 +85,6 @@ def q_avg_prod_per_fab(
         .filter(F.col("catid") == F.lit(cat_id))
         .filter(F.col("dateid").between(F.to_date(F.lit(debut)), F.to_date(F.lit(fin))))
         .groupBy("fabid")
-        .agg(F.countDistinct("prodid").alias("product_count"))
+        .agg(distinct_count("prodid").alias("product_count"))
         .agg(F.avg("product_count").alias("avg_products_per_fab"))
     )

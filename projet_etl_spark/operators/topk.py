@@ -8,8 +8,11 @@ Spark-first notes:
 - ORDER BY score LIMIT k plans as TakeOrderedAndProject — a true
   distributed top-k (per-partition heap + driver merge), no global
   sort even at 100 TB.
-- Multiple COUNT(DISTINCT) in one groupBy expand via Catalyst's
-  RewriteDistinctAggregates; nothing custom.
+- The per-store distinct counts are ``distinct_count``
+  (size(collect_set)): each store's rows cross one exchange on magid
+  with map-side deduplicated sets. Three COUNT(DISTINCT) would plan
+  Catalyst's Expand (every row copied per distinct column) and two
+  shuffles. A store's set is its assortment, bounded at any scale.
 - ``top-1`` stage 2 consumes stage 1 as a broadcast left-semi join
   (the reference's ``magid IN (…)`` string splice, views.py:179) —
   the 10-row build side never touches the driver.
@@ -22,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from projet_etl_spark.functions.aggs import distinct_count
 from projet_etl_spark.functions.scores import score3, score3_top1, score4
 from projet_etl_spark.params import DEFAULTS
 from projet_etl_spark.sources.tables import points_de_vente
@@ -44,9 +48,9 @@ def q_top_magasins(
         .filter(F.col("dateid").between(F.to_date(F.lit(debut)), F.to_date(F.lit(fin))))
         .groupBy("magid")
         .agg(
-            F.countDistinct("fabid").alias("total_fabricants"),
-            F.countDistinct("catid").alias("total_categories"),
-            F.countDistinct("prodid").alias("total_produits"),
+            distinct_count("fabid").alias("total_fabricants"),
+            distinct_count("catid").alias("total_categories"),
+            distinct_count("prodid").alias("total_produits"),
             F.count(F.lit(1)).alias("total_ventes"),
         )
         .withColumn(
@@ -82,8 +86,8 @@ def q_top_magasins_cat(
         .filter(F.col("dateid").between(F.to_date(F.lit(debut)), F.to_date(F.lit(fin))))
         .groupBy("magid")
         .agg(
-            F.countDistinct("fabid").alias("total_fabricants"),
-            F.countDistinct("prodid").alias("total_produits"),
+            distinct_count("fabid").alias("total_fabricants"),
+            distinct_count("prodid").alias("total_produits"),
             F.count(F.lit(1)).alias("total_ventes"),
         )
         .withColumn(
@@ -119,8 +123,8 @@ def q_top_1(
         pv.join(F.broadcast(top10), "magid", "left_semi")
         .groupBy("magid")
         .agg(
-            F.countDistinct("fabid").alias("total_fabricants"),
-            F.countDistinct("prodid").alias("total_produits"),
+            distinct_count("fabid").alias("total_fabricants"),
+            distinct_count("prodid").alias("total_produits"),
             F.count(F.lit(1)).alias("total_ventes"),
         )
         .withColumn(

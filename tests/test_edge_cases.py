@@ -12,6 +12,8 @@ import datetime
 import duckdb
 import pytest
 
+from projet_etl_spark.params import DEFAULTS
+from projet_etl_spark.plans.oracles import score_sante_mois_sql
 from projet_etl_spark.plans.registry import REGISTRY
 from tests.conftest import SF_SMALL, TABLES, assert_matches_oracle
 
@@ -19,36 +21,23 @@ CAT = "Brand#4"
 FAB = 42
 
 
-def _write_micro_star(spark, root):
-    """3 stores x 2 months of data inside a 6-month window.
-
-    - store 1: products from fab 42 and fab 7
-    - store 2: products only from fab 7  -> nb_produits_fab = 0 (J2)
-    - store 3: identical rows to store 2 -> exact score tie (O4)
-    - all activity in 1996-01 and 1996-03; 1996-02 and 1996-04..06
-      are empty months inside the epoch..as_of spine (M3 gap fill)
-    """
-    d1 = datetime.datetime(1996, 1, 10)
-    d3 = datetime.datetime(1996, 3, 10)
+def _write_star(spark, root, sales):
+    """Write lineitem, orders and part for ``sales``: one single-line
+    order per (orderkey, store, partkey, supplier, shipdate) tuple, all
+    parts in category CAT."""
     # lineitem: (orderkey, partkey, suppkey, linenumber, qty, price,
     #            disc, tax, rflag, lstatus, shipdate)
-    li = []
-    orders = []
-
-    def add(orderkey, store, partkey, supp, when):
-        orders.append((orderkey, store, "O", 100.0, when, "1-URGENT"))
-        li.append(
-            (orderkey, partkey, supp, 1, 1.0, 10.0, 0.0, 0.0, "N", "O", when)
-        )
-
-    add(1, 1, 101, FAB, d1)
-    add(2, 1, 102, 7, d1)
-    add(3, 1, 103, FAB, d3)
-    add(4, 2, 104, 7, d1)
-    add(5, 2, 105, 7, d3)
-    add(6, 3, 104, 7, d1)  # mirrors store 2 -> tie on every count
-    add(7, 3, 105, 7, d3)
-    part = [(p, f"part{p}", CAT, "t", 1, 1.0) for p in (101, 102, 103, 104, 105)]
+    li = [
+        (orderkey, partkey, supp, 1, 1.0, 10.0, 0.0, 0.0, "N", "O", when)
+        for orderkey, _store, partkey, supp, when in sales
+    ]
+    orders = [
+        (orderkey, store, "O", 100.0, when, "1-URGENT")
+        for orderkey, store, _partkey, _supp, when in sales
+    ]
+    part = [
+        (p, f"part{p}", CAT, "t", 1, 1.0) for p in sorted({s[2] for s in sales})
+    ]
 
     spark.createDataFrame(
         li,
@@ -69,10 +58,29 @@ def _write_micro_star(spark, root):
     ).coalesce(1).write.mode("overwrite").parquet(f"{root}/part.parquet")
 
 
-@pytest.fixture(scope="module")
-def micro(spark, tmp_path_factory):
-    root = str(tmp_path_factory.mktemp("micro_star"))
-    _write_micro_star(spark, root)
+def _write_micro_star(spark, root):
+    """3 stores x 2 months of data inside a 6-month window.
+
+    - store 1: products from fab 42 and fab 7
+    - store 2: products only from fab 7  -> nb_produits_fab = 0 (J2)
+    - store 3: identical rows to store 2 -> exact score tie (O4)
+    - all activity in 1996-01 and 1996-03; 1996-02 and 1996-04..06
+      are empty months inside the epoch..as_of spine (M3 gap fill)
+    """
+    d1 = datetime.datetime(1996, 1, 10)
+    d3 = datetime.datetime(1996, 3, 10)
+    _write_star(spark, root, [
+        (1, 1, 101, FAB, d1),
+        (2, 1, 102, 7, d1),
+        (3, 1, 103, FAB, d3),
+        (4, 2, 104, 7, d1),
+        (5, 2, 105, 7, d3),
+        (6, 3, 104, 7, d1),  # mirrors store 2 -> tie on every count
+        (7, 3, 105, 7, d3),
+    ])
+
+
+def _duck_over(root):
     con = duckdb.connect()
     for t in ("lineitem", "orders", "part"):
         con.execute(
@@ -81,6 +89,14 @@ def micro(spark, tmp_path_factory):
     for t in TABLES:
         if t not in ("lineitem", "orders", "part"):
             con.execute(f"CREATE VIEW {t} AS SELECT 1 AS dummy")
+    return con
+
+
+@pytest.fixture(scope="module")
+def micro(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("micro_star"))
+    _write_micro_star(spark, root)
+    con = _duck_over(root)
     yield root, con
     con.close()
 
@@ -88,7 +104,11 @@ def micro(spark, tmp_path_factory):
 @pytest.mark.parametrize(
     "name",
     [
+        "top-magasins",
         "top-magasins-cat",
+        "top-1",
+        "avg-prod-per-fab",
+        "top-magasins-rollup",
         "avg-cat-fab-10-mag",
         "avg-cat-fab-10-mag-avg",
         "score-sante-touts-les-mois",
@@ -150,6 +170,82 @@ def test_topk_tie_broken_by_magid(spark, micro):
     assert tied[0].score == tied[1].score  # genuine tie
     order = [r.magid for r in rows if r.magid in (2, 3)]
     assert order == [2, 3]  # deterministic asc tiebreak
+
+
+# whole months (the rollup twin needs them) holding no sales
+EMPTY_WINDOW = ("1990-01-01", "1990-06-30")
+_PER_STORE_DISTINCT = (
+    "top-magasins",
+    "top-magasins-cat",
+    "top-1",
+    "avg-prod-per-fab",
+    "top-magasins-rollup",
+    "avg-cat-fab-10-mag",
+    "score-sante-touts-les-mois",
+)
+
+
+def _write_null_fab_star(spark, root):
+    """NULL fabids under the per-store distinct counts.
+
+    - store 1: fab 42 and fab 7 products, plus one NULL-fab line
+    - store 4: every line has a NULL fabid -> 0 manufacturers
+    - store 5: product 106 sold once with fab 42 and once with NULL
+    """
+    d1 = datetime.datetime(1996, 1, 10)
+    d3 = datetime.datetime(1996, 3, 10)
+    _write_star(spark, root, [
+        (1, 1, 101, FAB, d1),
+        (2, 1, 102, 7, d3),
+        (3, 1, 103, None, d3),
+        (4, 4, 104, None, d1),
+        (5, 4, 105, None, d3),
+        (6, 4, 104, None, d3),
+        (7, 5, 106, FAB, d1),
+        (8, 5, 106, None, d1),
+    ])
+
+
+@pytest.fixture(scope="module")
+def null_fab(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("null_fab_star"))
+    _write_null_fab_star(spark, root)
+    con = _duck_over(root)
+    yield root, con
+    con.close()
+
+
+def _windowed(name, lo, hi):
+    """(keyword arguments, oracle SQL) of ``name`` over [lo, hi]."""
+    if name == "score-sante-touts-les-mois":
+        return {"epoch": lo, "as_of": hi}, score_sante_mois_sql(lo, hi)
+    sql = REGISTRY[name].oracle
+    for default, bound in ((DEFAULTS["debut"], lo), (DEFAULTS["fin"], hi)):
+        assert f"DATE '{default}'" in sql, name
+        sql = sql.replace(f"DATE '{default}'", f"DATE '{bound}'")
+    return {"debut": lo, "fin": hi}, sql
+
+
+@pytest.mark.parametrize("window", ["default", "empty"])
+@pytest.mark.parametrize("name", _PER_STORE_DISTINCT)
+def test_null_fab_star_matches_oracle(spark, null_fab, name, window):
+    root, con = null_fab
+    spec = REGISTRY[name]
+    if window == "default":
+        df, sql = spec.fn(spark, root), spec.oracle
+    else:
+        kwargs, sql = _windowed(name, *EMPTY_WINDOW)
+        df = spec.fn(spark, root, **kwargs)
+    assert_matches_oracle(df, con, sql, f"null-fab:{name}:{window}")
+
+
+@pytest.mark.parametrize("name", ["top-magasins", "top-magasins-cat", "top-magasins-rollup"])
+def test_all_null_fab_store_counts_zero(spark, null_fab, name):
+    root, _ = null_fab
+    rows = {r.magid: r for r in REGISTRY[name].fn(spark, root).collect()}
+    assert rows[4].total_fabricants == 0  # not NULL, not -1
+    assert rows[4].total_produits == 2
+    assert rows[5].total_fabricants == 1 and rows[5].total_produits == 1
 
 
 def test_funnel_order_constraint(spark):

@@ -6,7 +6,7 @@ Footer inference is a Spark job; a read with the schema supplied is
 not. These tests pin that the memo never serves a stale schema, never
 hides a missing or broken table, and never shares a relation between
 two reads — and that, once warm, building a request plan runs no job
-before its collect.
+before its collect, and running it compiles no generated class.
 """
 
 from __future__ import annotations
@@ -151,3 +151,23 @@ def test_warm_plan_build_runs_no_job(spark, name):
     df, jobs = _jobs_while(spark, build)
     assert jobs == [], f"{name}: plan build ran jobs {jobs}"
     df.collect()
+
+
+def test_warm_request_pass_compiles_no_class(spark):
+    """A second identical pass of the 11 request types reuses every
+    generated class: the codegen cache (session.CODEGEN_CACHE_MAX_ENTRIES)
+    holds a whole pass. At the upstream 100 entries the LRU evicts each
+    class before the pass comes back to it."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles():
+        return metrics.METRIC_COMPILATION_TIME().getCount()
+
+    def one_pass():
+        for name in _API_TYPES:
+            api.to_records(api.run_query(spark, SF_SMALL, name))
+
+    one_pass()
+    before = compiles()
+    one_pass()
+    assert compiles() - before == 0

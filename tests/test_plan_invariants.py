@@ -316,3 +316,79 @@ def test_sp_gather_frame_is_bounded(spark, name):
             f"[{name}] single-partition {grain} frame grew to {r} rows "
             f"(bound {bound})"
         )
+
+
+# --- distinct-count bound rule -------------------------------------------
+#
+# A distinct count grouped by store or supplier is size(collect_set)
+# (functions/aggs.distinct_count): partial set, ONE hash exchange on
+# the group key, final set — no Expand, no (group, value) shuffle. A
+# distinct count whose one group can hold a data-sized set (a grand
+# aggregate, a month's stores) keeps Catalyst's distinct rewrite.
+# Checked on the built (not executed) plan, which AQE has not pruned.
+
+# query -> number of per-store/per-supplier aggregates in its plan
+PER_STORE_AGGREGATES = {
+    "top-magasins": 1,
+    "top-magasins-cat": 1,
+    "top-1": 2,  # the global top-10, then its stores within the category
+    "avg-prod-per-fab": 1,
+    # the category top-10 (read by the semi-join and the left join),
+    # then the manufacturer's products per store
+    "avg-cat-fab-10-mag": 3,
+    "score-sante-touts-les-mois": 2,  # the category top-10, then store x month
+    "top-magasins-rollup": 1,
+}
+CATALYST_DISTINCT = ("mag-cat", "fab-cat", "nb-mag-cat-date", "nb-mag-cat-date-rollup")
+
+
+def _aggregate_exprs(node):
+    if not node.getClass().getSimpleName().endswith("AggregateExec"):
+        return []
+    exprs = node.aggregateExpressions()
+    return [exprs.apply(i) for i in range(exprs.size())]
+
+
+def _below(node):
+    """The first child of ``node`` that is not a codegen/AQE wrapper."""
+    node = node.children().apply(0)
+    while node.getClass().getSimpleName() in _SP_WRAPPERS:
+        node = node.children().apply(0)
+    return node
+
+
+@pytest.mark.parametrize("name", sorted(PER_STORE_AGGREGATES))
+def test_per_store_distinct_is_one_exchange(spark, name):
+    plan = REGISTRY[name].fn(spark, SF_SMALL)._jdf.queryExecution().executedPlan()
+    nodes = list(_iter_physical_nodes(plan))
+    assert not [n for n in nodes if n.getClass().getSimpleName() == "ExpandExec"], (
+        f"[{name}] Expand in the plan"
+    )
+    exprs = [e for n in nodes for e in _aggregate_exprs(n)]
+    assert not [e for e in exprs if e.isDistinct()], f"[{name}] COUNT(DISTINCT) left"
+    finals = [
+        n
+        for n in nodes
+        if any(
+            e.mode().toString() == "Final"
+            and e.aggregateFunction().prettyName() == "collect_set"
+            for e in _aggregate_exprs(n)
+        )
+    ]
+    assert len(finals) == PER_STORE_AGGREGATES[name], name
+    for final in finals:
+        exchange = _below(final)
+        assert exchange.getClass().getSimpleName() == "ShuffleExchangeExec", name
+        assert exchange.outputPartitioning().toString().startswith("hashpartitioning")
+        partial = _below(exchange)
+        assert [e.mode().toString() for e in _aggregate_exprs(partial)][:1] == ["Partial"], (
+            f"[{name}] more than one exchange under a per-store aggregate"
+        )
+
+
+@pytest.mark.parametrize("name", CATALYST_DISTINCT)
+def test_wide_group_distinct_keeps_catalyst_rewrite(spark, name):
+    plan = REGISTRY[name].fn(spark, SF_SMALL)._jdf.queryExecution().executedPlan()
+    exprs = [e for n in _iter_physical_nodes(plan) for e in _aggregate_exprs(n)]
+    assert [e for e in exprs if e.isDistinct()], f"[{name}] no COUNT(DISTINCT) planned"
+    assert not [e for e in exprs if e.aggregateFunction().prettyName() == "collect_set"]

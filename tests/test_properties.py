@@ -16,7 +16,7 @@ from projet_etl_spark.sources.ingest import read_whitespace_csv
 rows_strategy = st.lists(
     st.tuples(
         st.integers(1, 5),  # magid
-        st.integers(1, 4),  # fabid
+        st.none() | st.integers(1, 4),  # fabid, NULL allowed
         st.integers(1, 3),  # catid
         st.integers(1, 6),  # prodid
     ),
@@ -33,14 +33,15 @@ def test_weighted_topk_matches_bruteforce(spark, rows):
     )
     from pyspark.sql import functions as F
 
+    from projet_etl_spark.functions.aggs import distinct_count
     from projet_etl_spark.functions.scores import score4
 
     got = (
         df.groupBy("magid")
         .agg(
-            F.countDistinct("fabid").alias("f"),
-            F.countDistinct("catid").alias("c"),
-            F.countDistinct("prodid").alias("p"),
+            distinct_count("fabid").alias("f"),
+            distinct_count("catid").alias("c"),
+            distinct_count("prodid").alias("p"),
             F.count(F.lit(1)).alias("v"),
         )
         .withColumn("score", score4(F.col("f"), F.col("c"), F.col("p"), F.col("v")))
@@ -54,7 +55,7 @@ def test_weighted_topk_matches_bruteforce(spark, rows):
         per.setdefault(m, []).append((f, c, p))
     scored = []
     for m, obs in per.items():
-        f = len({o[0] for o in obs})
+        f = len({o[0] for o in obs} - {None})
         c = len({o[1] for o in obs})
         p = len({o[2] for o in obs})
         v = len(obs)
