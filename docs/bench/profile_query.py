@@ -13,10 +13,12 @@ column-pruning shortcut. Caches are released before every rep
 Explain output goes to plans/r13/<query>_<tag>.txt so plan claims in
 OPTIMIZATION_r13.md are checkable without running Spark.
 
-Each line also reports the generated classes the reps compiled and
-the time spent compiling them, read from Spark's CodegenMetrics and
-CodeGenerator counters: the compile layer beside jobs and stages. A
-cache hit compiles nothing, so the first rep usually pays them all.
+Each rep runs under its own job group; each line reports every
+rep's job and stage counts, read from Spark's status tracker, and the
+generated classes the reps compiled with the time spent compiling
+them, read from Spark's CodegenMetrics and CodeGenerator counters: the
+compile layer beside jobs and stages. A cache hit compiles nothing,
+so the first rep usually pays them all.
 
 This is a diagnostic harness only — the driver contract stays
 bench.py.
@@ -69,17 +71,34 @@ def main() -> None:
     compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
-    for name in args.names:
-        times = []
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_and_stages(group: str) -> tuple[int, int]:
+        # the tracker is written by the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        job_ids = tracker.getJobIdsForGroup(group)
+        stages = set()
+        for j in job_ids:
+            info = tracker.getJobInfo(j)
+            if info is not None:
+                stages.update(info.stageIds)
+        return len(job_ids), len(stages)
+
+    for i, name in enumerate(args.names):
+        times, jobs, stages = [], [], []
         n0, ns0 = compiles.getCount(), codegen.compileTime()
-        for _ in range(args.reps):
+        for rep in range(args.reps):
             release_caches(rollups=False)
-            spark.sparkContext.setJobDescription(f"profile:{name}")
+            group = f"profile:{i}:{name}:{rep}"
+            sc.setJobGroup(group, f"profile:{name}")
             t0 = time.perf_counter()
             df = qs[name](spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
             times.append(time.perf_counter() - t0)
-            spark.sparkContext.setJobDescription(None)
+            n_jobs, n_stages = jobs_and_stages(group)
+            jobs.append(n_jobs)
+            stages.append(n_stages)
         n_compiled = compiles.getCount() - n0
         compile_s = (codegen.compileTime() - ns0) / 1e9
         if args.tag and not args.no_explain:
@@ -93,6 +112,7 @@ def main() -> None:
                 f.write(plan)
         print(
             f"{name}: min={min(times):.3f}s  all={[round(t, 3) for t in times]}"
+            f"  jobs={jobs} stages={stages}"
             f"  compiled={n_compiled} classes in {compile_s:.3f}s",
             flush=True,
         )

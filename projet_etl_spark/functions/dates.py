@@ -22,17 +22,22 @@ def month_spine(spark: SparkSession, epoch: str, as_of: str) -> DataFrame:
     """Dense month calendar [epoch..as_of] as (mois_annee string).
 
     One row per month-start; generated with ``sequence`` + ``explode``
-    on the executors (a few hundred rows even for decades — always a
-    broadcastable build side). It is generated in one partition, and
-    ``coalesce(1)`` declares that: a plan that streams the spine keeps
-    SinglePartition, so its global sort runs in place with no range
-    exchange and no sampling job.
+    on the executors (a few hundred rows even for decades). A reversed
+    range (``epoch`` after ``as_of``) is empty, like the oracle's
+    ``generate_series``: ``sequence`` rejects a descending range with
+    a positive step, so it runs to ``greatest(epoch, as_of)`` and the
+    filter drops what lies past ``as_of``. The spine is generated in
+    one partition, and ``coalesce(1)`` declares that: a plan that
+    streams the spine keeps SinglePartition, so its global sort runs
+    in place with no range exchange and no sampling job.
     """
     return spark.sql(
         """
         SELECT date_format(m, 'yyyy-MM') AS mois_annee
-        FROM (SELECT explode(sequence(to_date(:epoch), to_date(:as_of),
+        FROM (SELECT explode(sequence(to_date(:epoch),
+                                      greatest(to_date(:epoch), to_date(:as_of)),
                                       interval 1 month)) AS m)
+        WHERE m <= to_date(:as_of)
         """,
         args={"epoch": epoch, "as_of": as_of},
     ).coalesce(1)

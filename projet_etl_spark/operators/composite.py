@@ -2,21 +2,32 @@
 
 The reference materializes each stage at the driver and finishes
 with Python loops (views.py:206-254, 256-339). Here each pipeline is
-ONE lazy DataFrame plan: the top-10 result flows to executors as a
-broadcast build side; the dense month calendar is a generated
-relation crossed with the 10 stores — the reference's
-O(months x stores) pandas loop becomes a broadcast join.
+ONE aggregate: a single ``groupBy("magid")`` over the category's rows
+computes stage 1's measures under ``F.when(in_range, …)`` and stage
+2's under ``F.when(fab, …)``, so the plan has one scan, one exchange
+on magid and one TakeOrderedAndProject(10), and stage 2 is read from
+the same ten rows. The dense month calendar is a generated relation
+left-joined to the ten stores' month averages — the reference's
+O(months x stores) pandas loop becomes a join of two single-partition
+frames bounded by months.
 
 Semantic subtleties preserved exactly (SURVEY.md §2.10.6):
+- Stage 1 ranks only stores with a row inside the window (a NULL
+  dateid is never inside it).
 - M2 stage 2 has NO date filter (views.py:213-219) — counts span all
   dates even though stage 1 is range-bounded.
-- M2 includes top-10 stores missing from stage 2 with count 0
+- M2 includes top-10 stores with no manufacturer rows with count 0
   (views.py:232) and averages only over stores with nonzero
   denominator (views.py:234-237).
 - M3 averages each month over only the stores having data that month
   (views.py:317-322), emits 0.0 rows for empty months
   (views.py:329-333), and the overall average spans only non-empty
   months (views.py:324-327).
+
+Bound rule (functions/aggs.distinct_count): every set is one store's
+assortment. M3's set holds the (month, product) pairs of one
+manufacturer within one category, so no set grows with the number of
+stores.
 
 Float parity with the oracle: every derived percentage/average is
 rounded to 6 decimals in both engines so double summation order
@@ -25,43 +36,52 @@ cannot flip the value hash.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from projet_etl_spark.functions.aggs import distinct_count
 from projet_etl_spark.functions.dates import month_key, month_spine
-from projet_etl_spark.operators.topk import q_top_magasins_cat
+from projet_etl_spark.operators.topk import cat_score3, in_dates, ranked, store_measures
 from projet_etl_spark.params import DEFAULTS
 from projet_etl_spark.sources.tables import points_de_vente
+
+
+def _top10_cat_with(
+    spark: SparkSession, sf_dir: str, cat_id, debut: str, fin: str, *stage2: Column
+) -> DataFrame:
+    """top-magasins-cat's ten rows over [debut, fin], each carrying
+    the ``stage2`` aggregates over all of the store's category rows,
+    whatever their date."""
+    agg = (
+        points_de_vente(spark, sf_dir)
+        .filter(F.col("catid") == F.lit(cat_id))
+        .groupBy("magid")
+        .agg(*store_measures("fabid", "prodid", within=in_dates(debut, fin)), *stage2)
+        .filter(F.col("total_ventes") > 0)
+    )
+    return ranked(agg, cat_score3(), DEFAULTS["topk"])
 
 
 def _m2_per_store(
     spark: SparkSession, sf_dir: str, cat_id, fab_id, debut: str, fin: str
 ) -> DataFrame:
-    top10 = q_top_magasins_cat(
-        spark, sf_dir, cat_id=cat_id, debut=debut, fin=fin
-    ).select("magid", "total_produits")
     # stage 2: per-store distinct products for cat+fab across ALL dates
     # (reference views.py:213-219 applies no date filter)
-    fab_counts = (
-        points_de_vente(spark, sf_dir)
-        .filter((F.col("catid") == F.lit(cat_id)) & (F.col("fabid") == F.lit(fab_id)))
-        .join(F.broadcast(top10.select("magid")), "magid", "left_semi")
-        .groupBy("magid")
-        .agg(distinct_count("prodid").alias("nb_produits_fab"))
+    fab = F.col("fabid") == F.lit(fab_id)
+    top10 = _top10_cat_with(
+        spark,
+        sf_dir,
+        cat_id,
+        debut,
+        fin,
+        distinct_count(F.when(fab, F.col("prodid"))).alias("nb_produits_fab"),
     )
-    return (
-        top10.join(fab_counts, "magid", "left")
-        .withColumn(
-            "nb_produits_fab", F.coalesce(F.col("nb_produits_fab"), F.lit(0).cast("long"))
-        )
-        .withColumn(
-            "pct_raw",
-            F.when(
-                F.col("total_produits") != 0,
-                F.col("nb_produits_fab") / F.col("total_produits") * F.lit(100),
-            ).otherwise(F.lit(0.0)),
-        )
+    return top10.withColumn(
+        "pct_raw",
+        F.when(
+            F.col("total_produits") != 0,
+            F.col("nb_produits_fab") / F.col("total_produits") * F.lit(100),
+        ).otherwise(F.lit(0.0)),
     )
 
 
@@ -119,21 +139,26 @@ def q_avg_cat_fab_10_mag_avg(
 def _m3_month_avgs(
     spark: SparkSession, sf_dir: str, cat_id, fab_id, epoch: str, as_of: str
 ) -> DataFrame:
-    top10 = q_top_magasins_cat(
-        spark, sf_dir, cat_id=cat_id, debut=epoch, fin=as_of
-    ).select("magid", "total_produits")
     # stage 2: per-(store, month) distinct products for cat+fab; like
     # M2 the reference applies no date filter here (views.py:290-296)
+    fab = F.col("fabid") == F.lit(fab_id)
+    sales = F.struct(month_key(F.col("dateid")).alias("mois_annee"), "prodid")
+    top10 = _top10_cat_with(
+        spark,
+        sf_dir,
+        cat_id,
+        epoch,
+        as_of,
+        F.collect_set(F.when(fab, sales)).alias("fab_sales"),
+    )
+    # the set is deduplicated, so counting its non-NULL products per
+    # month is the distinct count; a month whose products are all
+    # NULL stays in at 0
     monthly = (
-        points_de_vente(spark, sf_dir)
-        .filter((F.col("catid") == F.lit(cat_id)) & (F.col("fabid") == F.lit(fab_id)))
-        .join(F.broadcast(top10), "magid")
-        .groupBy("magid", month_key(F.col("dateid")).alias("mois_annee"))
-        .agg(
-            distinct_count("prodid").alias("nb_prod_mois"),
-            F.first("total_produits").alias("total_produits"),
-        )
-        .filter(F.col("total_produits") != 0)
+        top10.filter(F.col("total_produits") != 0)
+        .select("magid", "total_produits", F.inline("fab_sales"))
+        .groupBy("magid", "total_produits", "mois_annee")
+        .agg(F.count("prodid").alias("nb_prod_mois"))
         .withColumn(
             "pct_raw", F.col("nb_prod_mois") / F.col("total_produits") * F.lit(100)
         )
@@ -142,7 +167,10 @@ def _m3_month_avgs(
     # (reference views.py:317-327)
     per_month = monthly.groupBy("mois_annee").agg(F.avg("pct_raw").alias("avg_raw"))
     spine = month_spine(spark, epoch, as_of)
-    return spine.join(F.broadcast(per_month), "mois_annee", "left")
+    # both sides are one partition, so a sort-merge join needs no
+    # exchange; a broadcast would run the ten stores' stage as a job
+    # of its own
+    return spine.join(per_month.hint("merge"), "mois_annee", "left")
 
 
 def q_score_sante_mois(

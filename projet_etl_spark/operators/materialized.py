@@ -19,7 +19,9 @@ HLL sketches; that path is the `mag-cat-approx` opt-in.)
 
 The rollup queries registered here carry the SAME oracles as their
 raw-scan twins: the driver's gate literally proves the rollup path
-answers byte-identically.
+answers byte-identically. Like those twins, the month series coalesce
+their month rows to one partition before the ``orderBy``, so the sort
+needs no range exchange.
 """
 
 from __future__ import annotations
@@ -168,6 +170,7 @@ def q_score_evolution_rollup(
                 F.lit(0.0),
             ),
         )
+        .coalesce(1)
         .orderBy("mois")
     )
 
@@ -184,5 +187,8 @@ def q_nb_mag_cat_date_rollup(
         & (F.substring("mois", 1, 4) == str(int(annee)))
     )
     return (
-        r.groupBy("mois").agg(F.countDistinct("magid").alias("nbmag")).orderBy("mois")
+        r.groupBy("mois")
+        .agg(F.countDistinct("magid").alias("nbmag"))
+        .coalesce(1)
+        .orderBy("mois")
     )

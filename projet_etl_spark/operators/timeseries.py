@@ -4,6 +4,11 @@ Covers reference QUERY_MAP ``nb-mag-cat-date`` (views.py:62-71) and
 ``score-evolution`` (views.py:73-88): month bucketing, year
 predicate, conditional aggregation, and the null-safe ratio.
 
+Each result has one row per month, so it is coalesced to one
+partition before its ``orderBy`` (as ``functions/dates.month_spine``
+is): the sort then runs in place, with no range exchange and no
+sampling job.
+
 The year predicate uses ``year(dateid)`` rather than the reference's
 ``strftime('%Y', …)`` string compare — same result, but a form
 Catalyst can use for partition pruning on date-partitioned layouts
@@ -32,6 +37,7 @@ def q_nb_mag_cat_date(
         .filter(F.year("dateid") == F.lit(int(annee)))
         .groupBy(month_key(F.col("dateid")).alias("mois"))
         .agg(F.countDistinct("magid").alias("nbmag"))
+        .coalesce(1)
         .orderBy("mois")
     )
 
@@ -72,6 +78,7 @@ def q_score_evolution(
                 F.lit(0.0),
             ),
         )
+        .coalesce(1)
         .orderBy("mois")
     )
 

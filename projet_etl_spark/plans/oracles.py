@@ -129,6 +129,11 @@ def score_sante_mois_sql(epoch: str, as_of: str) -> str:
     return _m3_base(epoch, as_of) + _M3_SELECT
 
 
+def score_sante_mois_avg_sql(epoch: str, as_of: str) -> str:
+    """score-sante-touts-les-mois-avg oracle for an arbitrary bound."""
+    return _m3_base(epoch, as_of) + _M3_AVG_SELECT
+
+
 def score_evolution_sql(epoch: str, as_of: str) -> str:
     """score-evolution oracle for an arbitrary bound."""
     return ORACLE_VIEWS + _SCORE_EVOLUTION_SELECT.format(
@@ -143,6 +148,11 @@ FROM months LEFT JOIN per_month USING (mois_annee)
 ORDER BY mois_annee
 """
 
+_M3_AVG_SELECT = """
+SELECT ROUND(COALESCE(AVG(per_month.avg_raw), CAST(0.0 AS DOUBLE)), 6) AS average
+FROM months LEFT JOIN per_month USING (mois_annee)
+"""
+
 _SCORE_EVOLUTION_SELECT = """
 SELECT strftime(dateid, '%Y-%m') AS mois,
        COUNT(*) AS total_ventes,
@@ -155,9 +165,6 @@ WHERE catid = '{cat}' AND dateid BETWEEN DATE '{epoch}' AND DATE '{as_of}'
 GROUP BY strftime(dateid, '%Y-%m')
 ORDER BY mois
 """
-
-_M3_BASE = _m3_base(_P["epoch"], _P["as_of"])
-
 
 PARITY_ORACLES: dict[str, str] = {
     "cat": ORACLE_VIEWS
@@ -263,9 +270,7 @@ FROM per_store
     "score-sante-touts-les-mois": score_sante_mois_sql(
         str(_P["epoch"]), str(_P["as_of"])
     ),
-    "score-sante-touts-les-mois-avg": _M3_BASE
-    + """
-SELECT ROUND(COALESCE(AVG(per_month.avg_raw), CAST(0.0 AS DOUBLE)), 6) AS average
-FROM months LEFT JOIN per_month USING (mois_annee)
-""",
+    "score-sante-touts-les-mois-avg": score_sante_mois_avg_sql(
+        str(_P["epoch"]), str(_P["as_of"])
+    ),
 }

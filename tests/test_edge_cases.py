@@ -13,7 +13,7 @@ import duckdb
 import pytest
 
 from projet_etl_spark.params import DEFAULTS
-from projet_etl_spark.plans.oracles import score_sante_mois_sql
+from projet_etl_spark.plans.oracles import score_sante_mois_avg_sql, score_sante_mois_sql
 from projet_etl_spark.plans.registry import REGISTRY
 from tests.conftest import SF_SMALL, TABLES, assert_matches_oracle
 
@@ -21,10 +21,11 @@ CAT = "Brand#4"
 FAB = 42
 
 
-def _write_star(spark, root, sales):
+def _write_star(spark, root, sales, brands=None):
     """Write lineitem, orders and part for ``sales``: one single-line
     order per (orderkey, store, partkey, supplier, shipdate) tuple, all
-    parts in category CAT."""
+    parts in category CAT unless ``brands`` maps the partkey to
+    another (or to None)."""
     # lineitem: (orderkey, partkey, suppkey, linenumber, qty, price,
     #            disc, tax, rflag, lstatus, shipdate)
     li = [
@@ -36,7 +37,8 @@ def _write_star(spark, root, sales):
         for orderkey, store, _partkey, _supp, when in sales
     ]
     part = [
-        (p, f"part{p}", CAT, "t", 1, 1.0) for p in sorted({s[2] for s in sales})
+        (p, f"part{p}", (brands or {}).get(p, CAT), "t", 1, 1.0)
+        for p in sorted({s[2] for s in sales})
     ]
 
     spark.createDataFrame(
@@ -219,6 +221,8 @@ def _windowed(name, lo, hi):
     """(keyword arguments, oracle SQL) of ``name`` over [lo, hi]."""
     if name == "score-sante-touts-les-mois":
         return {"epoch": lo, "as_of": hi}, score_sante_mois_sql(lo, hi)
+    if name == "score-sante-touts-les-mois-avg":
+        return {"epoch": lo, "as_of": hi}, score_sante_mois_avg_sql(lo, hi)
     sql = REGISTRY[name].oracle
     for default, bound in ((DEFAULTS["debut"], lo), (DEFAULTS["fin"], hi)):
         assert f"DATE '{default}'" in sql, name
@@ -246,6 +250,101 @@ def test_all_null_fab_store_counts_zero(spark, null_fab, name):
     assert rows[4].total_fabricants == 0  # not NULL, not -1
     assert rows[4].total_produits == 2
     assert rows[5].total_fabricants == 1 and rows[5].total_produits == 1
+
+
+@pytest.mark.parametrize(
+    "name", ["score-sante-touts-les-mois", "score-sante-touts-les-mois-avg"]
+)
+def test_reversed_month_range_matches_oracle(spark, micro, name):
+    """epoch after as_of: the oracle's generate_series is empty, so
+    the series has no rows and its average is 0.0."""
+    root, con = micro
+    kwargs, sql = _windowed(name, "1998-06-01", "1995-01-01")
+    df = REGISTRY[name].fn(spark, root, **kwargs)
+    assert_matches_oracle(df, con, sql, f"reversed:{name}")
+    if name.endswith("-avg"):
+        assert df.collect()[0].average == 0.0
+
+
+COMPOSITES = (
+    "top-1",
+    "avg-cat-fab-10-mag",
+    "avg-cat-fab-10-mag-avg",
+    "score-sante-touts-les-mois",
+    "score-sante-touts-les-mois-avg",
+)
+
+
+def _write_null_edge_star(spark, root):
+    """NULL edges of the composites' conditional aggregates.
+
+    - store 1: in-window sales of both fabs, plus fab-42 lines with a
+      NULL shipdate (stage 2 counts them, stage 1 never does)
+    - store 6: in-window sales, half of them of a part whose brand is
+      NULL (no category)
+    - store 7: in-window sales of fab 7; its only fab-42 lines are in
+      2003, outside every window
+    - store 8: in-window fab-7 sales; its fab-42 lines are in 1999,
+      inside the score-sante window but outside top-magasins-cat's
+    - store 9: only NULL-brand parts, in window (in the global top-10,
+      never in the category)
+    - store 10: the most category lines of all, every one with a NULL
+      shipdate, so never in a top-10
+    """
+    d1 = datetime.datetime(1996, 1, 10)
+    d3 = datetime.datetime(1996, 3, 10)
+    d99 = datetime.datetime(1999, 5, 10)
+    d03 = datetime.datetime(2003, 2, 10)
+    sales = [
+        (1, 1, 101, FAB, d1),
+        (2, 1, 102, 7, d3),
+        (3, 1, 103, FAB, None),
+        (4, 1, 104, FAB, None),
+        (5, 6, 101, FAB, d1),
+        (6, 6, 201, FAB, d1),
+        (7, 6, 201, 7, d3),
+        (8, 7, 102, 7, d1),
+        (9, 7, 105, FAB, d03),
+        (10, 8, 102, 7, d3),
+        (11, 8, 106, FAB, d99),
+        (12, 9, 201, 7, d1),
+        (13, 9, 202, FAB, d3),
+    ] + [(20 + i, 10, 110 + i, FAB, None) for i in range(6)]
+    _write_star(spark, root, sales, brands={201: None, 202: None})
+
+
+@pytest.fixture(scope="module")
+def null_edge(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("null_edge_star"))
+    _write_null_edge_star(spark, root)
+    con = _duck_over(root)
+    yield root, con
+    con.close()
+
+
+@pytest.mark.parametrize("window", ["default", "empty"])
+@pytest.mark.parametrize("name", COMPOSITES + ("top-magasins-cat",))
+def test_null_edge_star_matches_oracle(spark, null_edge, name, window):
+    root, con = null_edge
+    spec = REGISTRY[name]
+    if window == "default":
+        df, sql = spec.fn(spark, root), spec.oracle
+    else:
+        kwargs, sql = _windowed(name, *EMPTY_WINDOW)
+        df = spec.fn(spark, root, **kwargs)
+    assert_matches_oracle(df, con, sql, f"null-edge:{name}:{window}")
+
+
+def test_null_edge_star_stage_filters(spark, null_edge):
+    """The rows the conditional aggregates must drop or keep at 0."""
+    root, _ = null_edge
+    top1 = REGISTRY["top-1"].fn(spark, root).collect()
+    assert [r.magid for r in top1] == [1]  # not 10 (no in-window row)
+    m2 = {r.magid: r for r in REGISTRY["avg-cat-fab-10-mag"].fn(spark, root).collect()}
+    assert sorted(m2) == [1, 6, 7, 8]  # 9 has no category row, 10 no dated one
+    assert m2[1].nb_produits_fab == 3  # the NULL-date lines count in stage 2
+    assert m2[7].nb_produits_fab == 1  # fab 42 only in 2003: no date filter
+    assert m2[6].nb_produits_fab == 1  # the NULL-brand part is not in the category
 
 
 def test_funnel_order_constraint(spark):

@@ -331,12 +331,13 @@ def test_sp_gather_frame_is_bounded(spark, name):
 PER_STORE_AGGREGATES = {
     "top-magasins": 1,
     "top-magasins-cat": 1,
-    "top-1": 2,  # the global top-10, then its stores within the category
+    # the composites: one aggregate carries both stages' measures
+    "top-1": 1,
     "avg-prod-per-fab": 1,
-    # the category top-10 (read by the semi-join and the left join),
-    # then the manufacturer's products per store
-    "avg-cat-fab-10-mag": 3,
-    "score-sante-touts-les-mois": 2,  # the category top-10, then store x month
+    "avg-cat-fab-10-mag": 1,
+    "avg-cat-fab-10-mag-avg": 1,
+    "score-sante-touts-les-mois": 1,
+    "score-sante-touts-les-mois-avg": 1,
     "top-magasins-rollup": 1,
 }
 CATALYST_DISTINCT = ("mag-cat", "fab-cat", "nb-mag-cat-date", "nb-mag-cat-date-rollup")
@@ -392,3 +393,50 @@ def test_wide_group_distinct_keeps_catalyst_rewrite(spark, name):
     exprs = [e for n in _iter_physical_nodes(plan) for e in _aggregate_exprs(n)]
     assert [e for e in exprs if e.isDistinct()], f"[{name}] no COUNT(DISTINCT) planned"
     assert not [e for e in exprs if e.aggregateFunction().prettyName() == "collect_set"]
+
+
+# --- composites and month series ------------------------------------------
+
+COMPOSITES = (
+    "top-1",
+    "avg-cat-fab-10-mag",
+    "avg-cat-fab-10-mag-avg",
+    "score-sante-touts-les-mois",
+    "score-sante-touts-les-mois-avg",
+)
+MONTH_SERIES = (
+    "nb-mag-cat-date",
+    "nb-mag-cat-date-rollup",
+    "score-evolution",
+    "score-evolution-rollup",
+)
+
+
+@pytest.mark.parametrize("name", COMPOSITES)
+def test_composite_scans_the_view_once(spark, name):
+    """Both stages of a composite come from one scan of
+    points_de_vente: stage 2 is read from the top-10 rows, not from a
+    second aggregate over a second scan."""
+    plan = REGISTRY[name].fn(spark, SF_SMALL)._jdf.queryExecution().executedPlan()
+    scans = [
+        n
+        for n in _iter_physical_nodes(plan)
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+    assert len(scans) == 1, f"[{name}] {len(scans)} parquet scans"
+    assert "points_de_vente" in scans[0].toString(), name
+
+
+@pytest.mark.parametrize("name", MONTH_SERIES)
+def test_month_series_sorts_in_place(spark, name):
+    """A month-grained result is coalesced to one partition before
+    its orderBy, so the sort plans no range exchange (and runs no
+    sampling job)."""
+    plan = REGISTRY[name].fn(spark, SF_SMALL)._jdf.queryExecution().executedPlan()
+    ranged = [
+        n
+        for n in _iter_physical_nodes(plan)
+        if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+        and n.outputPartitioning().toString().startswith("rangepartitioning")
+    ]
+    assert not ranged, f"[{name}] range exchange under the sort"
