@@ -149,12 +149,15 @@ def make_byte_features():
         import pandas as _pd
 
         for pdf in batches:
+            # a NULL payload keeps its row with NULL features
             payloads = pdf["payload"]
             yield _pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "n_bytes": payloads.map(len).astype("int64"),
-                    "head_hex": payloads.map(lambda b: b[:8].hex().upper()),
+                    "n_bytes": payloads.map(len, na_action="ignore").astype("Int64"),
+                    "head_hex": payloads.map(
+                        lambda b: b[:8].hex().upper(), na_action="ignore"
+                    ),
                 }
             )
 
@@ -221,6 +224,8 @@ def make_frame_sampler(n_frames: int = N_FRAMES):
         for pdf in batches:
             out = {"doc_id": [], "frame_idx": [], "frame_chars": [], "frame_fp": []}
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                if payload is None:  # a NULL payload has no frames
+                    continue
                 text = bytes(payload).decode("utf-8")
                 # ceil-split into n_frames chunks; trailing short
                 # chunk allowed, empty chunks skipped

@@ -104,7 +104,8 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_chars.cast("long").alias("n_chars_obs"),
         n_tokens.cast("long").alias("n_tokens"),
         (n_chars / n_tokens).alias("chars_per_token"),
-        (n_punct / n_chars).alias("punct_ratio"),
+        # empty text: NULL, not DIVIDE_BY_ZERO (DuckDB's x / 0)
+        F.try_divide(n_punct, n_chars).alias("punct_ratio"),
         (stop_en / n_tokens).alias("stopword_ratio"),
     )
     quality = (

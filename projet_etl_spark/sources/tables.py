@@ -7,17 +7,23 @@ driver's TPC-H-ish star schema (FIXTURES.md §2):
   produits        = lineitem ⋈ part          (catalog observations)
   points_de_vente = lineitem ⋈ orders ⋈ part (sales-point observations)
 
+Both are row filters over ONE staged sales table (see _sales): every
+produits column is a points_de_vente column, so the join is built,
+sorted and written once per source fingerprint.
+
 Scale notes (100 TB design point):
 - Columns are pruned *before* the joins so the parquet scans read
-  only what the view needs (verify with .explain: ReadSchema).
+  only what the table needs (verify with .explain: ReadSchema).
 - ``part`` broadcasts via the auto-broadcast threshold at test
   SFs — not a forced hint, because part grows linearly with SF
   and stops being broadcastable at warehouse scale (AQE keeps
   choosing broadcast exactly as long as it actually fits);
-  lineitem⋈orders is a fact-fact equi-join on the natural key — at
+  lineitem⟕orders is a fact-fact equi-join on the natural key — at
   cluster scale both sides should be bucketed by orderkey
   (co-located join, no shuffle); in local runs AQE converts it to a
   broadcast join automatically when orders is small enough.
+- The staged table is range-partitioned by date with no fixed
+  partition count, so AQE sizes its files to the data.
 - No collect(), no driver-side state: every view is a lazy plan.
 """
 
@@ -136,39 +142,72 @@ def _native_path(sf_dir: str, name: str) -> str | None:
 
 
 
-# fingerprint-cached materialization of the two reference-mapped
-# views. The reference ITSELF materializes these as tables (its
-# ingest writes them into SQLite, data.py:21-42) — recomputing the
-# lineitem⋈orders⋈part join inside every parity query paid a
-# fact-fact join per call (measured: top-magasins 1.74→1.07 s,
-# top-1 2.65→1.48 s at sf0.1 once staged). The staged layout is
-# month-partitioned and dateid-sorted within partitions (write_table),
-# so date predicates prune row groups on the scan; build is refresh
-# cost under the shared ensure_staged protocol (fingerprint of the
-# source parquet files), the same accounting as the rollups and
+# One staged sales table serves both reference views. The reference
+# ITSELF materializes them as tables (its ingest writes them into
+# SQLite, data.py:21-42); recomputing the lineitem⋈orders⋈part join
+# inside every parity query paid a fact-fact join per call (measured:
+# top-magasins 1.74→1.07 s, top-1 2.65→1.48 s at sf0.1 once staged).
+# Every produits column is a points_de_vente column, so one table
+#
+#   S(dateid, prodid, catid, fabid, magid, pos)
+#     = lineitem ⋈ part ⟕ orders-grouped-by-key, position-exploded
+#
+# holds both: a line joins each order carrying its key (pos 0..k-1),
+# and a line no order carries keeps one row with a NULL pos. So
+#   points_de_vente = S where pos IS NOT NULL  (the inner 3-way join)
+#   produits        = S where pos IS NULL OR pos = 0  (one row a line)
+# and the one-column filter is pushed to the parquet scan. Build is
+# refresh cost under the shared ensure_staged protocol (fingerprint of
+# the three source files), the same accounting as the rollups and
 # streaming stores. At 100 TB this IS the ingested warehouse table —
 # the _native_path branch above — and the staging here just gives the
 # driver's raw star-schema fixture the same physics.
-_VIEW_STAGE_ROOT = _os.path.join(
+_SALES_STAGE_ROOT = _os.path.join(
     _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))),
     "spark-warehouse",
     "stores",
     "parity_views",
+    "points_de_vente",
 )
+_PRODUITS_COLS = ("dateid", "prodid", "catid", "fabid")
+_PDV_COLS = _PRODUITS_COLS + ("magid",)
+_PDV_ROWS = "pos IS NOT NULL"
+_PRODUITS_ROWS = "pos IS NULL OR pos = 0"
 
-_VIEW_SOURCES = {
-    "points_de_vente": ("lineitem.parquet", "orders.parquet", "part.parquet"),
-    "produits": ("lineitem.parquet", "part.parquet"),
-}
+
+def _sales_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The lazy S: lineitem ⋈ part, LEFT-joined to each order key's
+    ``collect_list(struct(o_custkey))`` and ``posexplode_outer``-ed,
+    so a duplicate order key yields one row per order (pos 0..k-1), a
+    NULL ``o_custkey`` a NULL ``magid`` (the struct keeps it in the
+    list), and a line without an order one row with a NULL pos."""
+    lineitem = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey", "l_suppkey", "l_shipdate"
+    )
+    orders = (
+        load_table(spark, sf_dir, "orders")
+        .groupBy("o_orderkey")
+        .agg(F.collect_list(F.struct("o_custkey")).alias("stores"))
+    )
+    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    return (
+        lineitem.join(part, lineitem.l_partkey == part.p_partkey)
+        .join(orders, lineitem.l_orderkey == orders.o_orderkey, "left")
+        .select(
+            F.to_date("l_shipdate").alias("dateid"),
+            F.col("l_partkey").alias("prodid"),
+            F.col("p_brand").alias("catid"),
+            F.col("l_suppkey").alias("fabid"),
+            F.posexplode_outer("stores").alias("pos", "store"),
+        )
+        .select(*_PRODUITS_COLS, F.col("store.o_custkey").alias("magid"), "pos")
+    )
 
 
-def _staged_view(spark, sf_dir, name, compute, cols):
-    """Serve ``compute()`` from a fingerprint-keyed parquet
-    materialization; fall back to the lazy plan when the corpus is
-    empty (a partitioned write of zero rows leaves no readable
-    footers) or the sources aren't fingerprintable."""
-    import os
-
+def _sales(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S served from its fingerprint-keyed parquet staging; the lazy
+    plan when the sources aren't fingerprintable or the staged table
+    is unreadable."""
     from pyspark.errors import AnalysisException
 
     from projet_etl_spark.sources.staging import (
@@ -178,119 +217,73 @@ def _staged_view(spark, sf_dir, name, compute, cols):
 
     try:
         fp = "|".join(
-            parquet_fingerprint(sf_dir, f) for f in _VIEW_SOURCES[name]
+            parquet_fingerprint(sf_dir, f)
+            for f in ("lineitem.parquet", "orders.parquet", "part.parquet")
         )
     except OSError:
-        return compute()
+        return _sales_plan(spark, sf_dir)
 
     def _build(root: str) -> None:
-        # a FEW date-range-sorted files, not month directories: the
-        # month-partitioned form wrote tasks×months ≈ 500 files at
-        # sf0.1 and every query re-paid listing + footer planning
-        # (~0.4 s/view/call — more than the join it saved). Range
-        # partitioning by dateid gives file-level min/max pruning for
-        # date predicates with single-digit footers; directory
-        # partitioning belongs to the real ingested warehouse
-        # (write_table's partition_by_month_of), where one table
-        # serves thousands of queries per listing.
-        df = (
-            compute()
-            .repartitionByRange(8, "dateid")
+        # date-range partitions with no fixed count: AQE coalesces
+        # them to the advisory size (or bytes/cores, if smaller, but
+        # never under its 1 MB minimum), so the table is one file at
+        # api scale, four at sf0.1 on 4 cores and 64 MB files at
+        # 100 TB, and each file's (and row group's) dateid min/max
+        # prunes date predicates. Month directories belong to the
+        # real ingested warehouse (write_table's partition_by_month_of):
+        # here they wrote tasks×months ≈ 500 files at sf0.1 and every
+        # query re-paid the listing.
+        (
+            _sales_plan(spark, sf_dir)
+            .repartitionByRange("dateid")
             .sortWithinPartitions("dateid")
+            .write.mode("overwrite")
+            .parquet(_os.path.join(root, "table"))
         )
-        df.write.mode("overwrite").parquet(os.path.join(root, "table"))
 
     path = ensure_staged(
-        os.path.join(_VIEW_STAGE_ROOT, name),
-        sf_dir,
-        fp,
-        "table",
-        _build,
-        version=f"view-{name}-v1",
+        _SALES_STAGE_ROOT, sf_dir, fp, "table", _build, version="sales-v1"
     )
     try:
-        return read_parquet(spark, path).select(*cols)
+        return read_parquet(spark, path)
     except AnalysisException:
-        return compute()
+        return _sales_plan(spark, sf_dir)
 
 
 def produits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Catalog-observation view: (dateid, prodid, catid, fabid).
 
-    Maps the reference ``produits`` table (reference data.py:21-28);
-    grain = one row per lineitem observation, duplicates meaningful.
-    Served from the fingerprint-cached materialization (see
-    _staged_view) exactly as the reference serves it from its own
-    ingested table.
+    Maps the reference ``produits`` table (reference data.py:21-28):
+    lineitem ⋈ part, one row per lineitem observation, duplicates
+    meaningful. Served from the staged sales table (see _sales)
+    exactly as the reference serves it from its own ingested table.
     """
     native = _native_path(sf_dir, "produits")
     if native:
-        return read_parquet(spark, native).select(
-            "dateid", "prodid", "catid", "fabid"
-        )
-    cols = ("dateid", "prodid", "catid", "fabid")
-    return _staged_view(
-        spark, sf_dir, "produits", lambda: _produits_plan(spark, sf_dir), cols
-    )
-
-
-def _produits_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_shipdate"
-    )
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    return (
-        lineitem.join(part, lineitem.l_partkey == part.p_partkey)
-        .select(
-            F.to_date("l_shipdate").alias("dateid"),
-            F.col("l_partkey").alias("prodid"),
-            F.col("p_brand").alias("catid"),
-            F.col("l_suppkey").alias("fabid"),
-        )
-    )
+        return read_parquet(spark, native).select(*_PRODUITS_COLS)
+    return _sales(spark, sf_dir).filter(_PRODUITS_ROWS).select(*_PRODUITS_COLS)
 
 
 def points_de_vente(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sales-point view: (dateid, prodid, catid, fabid, magid).
 
     Maps the reference ``points_de_vente`` table
-    (reference data.py:30-38); ``COUNT(*)`` over this view is
-    "total_ventes" (reference views.py:32). Served from the
-    fingerprint-cached materialization (see _staged_view) exactly as
-    the reference serves it from its own ingested table.
+    (reference data.py:30-38): lineitem ⋈ orders ⋈ part, with
+    ``magid`` the order's ``o_custkey``; ``COUNT(*)`` over this view
+    is "total_ventes" (reference views.py:32). Served from the staged
+    sales table (see _sales) exactly as the reference serves it from
+    its own ingested table.
     """
     native = _native_path(sf_dir, "points_de_vente")
     if native:
-        return read_parquet(spark, native).select(
-            "dateid", "prodid", "catid", "fabid", "magid"
-        )
-    cols = ("dateid", "prodid", "catid", "fabid", "magid")
-    return _staged_view(
-        spark,
-        sf_dir,
-        "points_de_vente",
-        lambda: _points_de_vente_plan(spark, sf_dir),
-        cols,
-    )
+        return read_parquet(spark, native).select(*_PDV_COLS)
+    return _sales(spark, sf_dir).filter(_PDV_ROWS).select(*_PDV_COLS)
 
 
 def _points_de_vente_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_shipdate"
-    )
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    return (
-        lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .join(part, lineitem.l_partkey == part.p_partkey)
-        .select(
-            F.to_date("l_shipdate").alias("dateid"),
-            F.col("l_partkey").alias("prodid"),
-            F.col("p_brand").alias("catid"),
-            F.col("l_suppkey").alias("fabid"),
-            F.col("o_custkey").alias("magid"),
-        )
-    )
+    """points_de_vente without the staging: the build plan that the
+    100 TB ingest runs."""
+    return _sales_plan(spark, sf_dir).filter(_PDV_ROWS).select(*_PDV_COLS)
 
 
 # DuckDB-oracle CTE definitions of the same two views, kept adjacent

@@ -31,6 +31,7 @@ training-pipeline capability.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,6 +76,15 @@ def _stage_event_chunks(sf_dir: str, chunk_dir: str) -> None:
         pq.write_table(table.slice(lo, hi - lo), f"{chunk_dir}/chunk{k:02d}.parquet")
 
 
+def _drain(q, chunks: str) -> None:
+    """Wait for an availableNow query, then delete the chunks it
+    replayed: the stream is their only reader (stores, compactions
+    and serving reads never open them, and a rebuild restages them
+    from the source), so a kept copy only doubles the staged bytes."""
+    q.awaitTermination()
+    shutil.rmtree(chunks)
+
+
 def _source_fingerprint(sf_dir: str) -> str:
     return parquet_fingerprint(sf_dir, "events.parquet")
 
@@ -95,7 +105,7 @@ def ensure_daily_counts_store(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(root, "ckpt"),
             available_now=True,
         )
-        q.awaitTermination()
+        _drain(q, chunks)
 
     return ensure_staged(
         STORE_ROOT, sf_dir, _source_fingerprint(sf_dir), "store", _build,
@@ -146,7 +156,7 @@ def ensure_bottomk_store(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(root, "ckpt"),
             available_now=True,
         )
-        q.awaitTermination()
+        _drain(q, chunks)
         compact_sample_store(spark, os.path.join(root, "store"))
 
     return ensure_staged(
@@ -225,7 +235,7 @@ def ensure_neardedup_pairs(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(root, "ckpt"),
             available_now=True,
         )
-        q.awaitTermination()
+        _drain(q, chunks)
 
     return ensure_staged(
         NEARDEDUP_ROOT,
@@ -295,7 +305,7 @@ def _ordered_stream_builder(spark: SparkSession, sf_dir: str, stream_fn):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        _drain(q, chunks)
 
     return _build
 
@@ -389,7 +399,7 @@ def _postings_builder(spark: SparkSession, sf_dir: str, *, compact: bool):
             os.path.join(root, "ckpt"),
             available_now=True,
         )
-        q.awaitTermination()
+        _drain(q, chunks)
         if compact:
             compact_postings_store(spark, store)
 
@@ -640,7 +650,7 @@ def ensure_ivf_assignment(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(root, "ckpt"),
             available_now=True,
         )
-        q.awaitTermination()
+        _drain(q, chunks)
 
     return ensure_staged(
         IVF_ROOT,
@@ -712,7 +722,7 @@ def ensure_dsir_store(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(root, "ckpt"),
             available_now=True,
         )
-        q.awaitTermination()
+        _drain(q, chunks)
 
     return ensure_staged(
         DSIR_STATS_ROOT,
@@ -780,7 +790,7 @@ def _frontier_builder(spark: SparkSession, sf_dir: str, compact: bool):
             os.path.join(root, "ckpt"),
             available_now=True,
         )
-        q.awaitTermination()
+        _drain(q, chunks)
         if compact:
             compact_frontier_store(spark, os.path.join(root, "store"))
 
@@ -927,7 +937,7 @@ def _embdedup_builder(spark: SparkSession, sf_dir: str, compact: bool):
             os.path.join(root, "ckpt"),
             available_now=True,
         )
-        q.awaitTermination()
+        _drain(q, chunks)
         if compact:
             compact_emb_dedup_store(
                 spark, os.path.join(root, "store"), os.path.join(root, "pairs")

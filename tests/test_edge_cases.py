@@ -497,6 +497,9 @@ def test_round5_text_ops_match_oracle_on_edge_corpus(spark, tmp_path):
             "dedup-longest-span",
             "token-freq-cms",
             "sample-stratified-n",
+            # empty text: a NULL punctuation ratio, as DuckDB's x / 0
+            "text-quality",
+            "quality-filter-per-lang",
         ):
             spec = REGISTRY[name]
             assert_matches_oracle(
@@ -557,6 +560,44 @@ def test_quality_scorer_twins_drop_null_text(spark, tmp_path):
             )
     finally:
         con.close()
+
+
+def test_multimodal_null_payload_matches_oracle(spark, tmp_path):
+    """A NULL-text document answers as the oracles do:
+    multimodal-bytes keeps its row with NULL features, and
+    multimodal-frame-sample emits no frames for it."""
+    docs = [
+        (0, None, "en", "web"),
+        (1, "the cat sat on the mat.", "en", "web"),
+        (2, "", "fr", "wiki"),
+        (3, None, "fr", "wiki"),
+    ]
+    path = str(tmp_path / "documents.parquet")
+    spark.createDataFrame(
+        [(i, t, lang, src, len(t or "")) for i, t, lang, src in docs],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.parquet(path)
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{path}/*.parquet')"
+    )
+    try:
+        for name in ("multimodal-bytes", "multimodal-frame-sample"):
+            spec = REGISTRY[name]
+            assert_matches_oracle(
+                spec.fn(spark, str(tmp_path)), con, spec.oracle, f"{name}-null-text"
+            )
+    finally:
+        con.close()
+    feats = {
+        r.doc_id: r
+        for r in REGISTRY["multimodal-bytes"].fn(spark, str(tmp_path)).collect()
+    }
+    assert feats[0].n_bytes is None and feats[0].head_hex is None
+    assert feats[2].n_bytes == 0 and feats[2].head_hex == ""
+    frames = REGISTRY["multimodal-frame-sample"].fn(spark, str(tmp_path)).collect()
+    assert {r.doc_id for r in frames} == {1}
 
 
 def test_event_transitions_tiebreak_on_simultaneous_events(spark, tmp_path):

@@ -40,6 +40,8 @@ def test_daily_counts_store_reuses_fingerprinted_build(spark, tmp_path, monkeypa
     assert os.path.getmtime(store2) == mtime  # no rebuild
     batches = [d for d in os.listdir(store1) if d.startswith("batch=")]
     assert len(batches) >= 2  # genuinely incremental, not one big batch
+    # the replayed event chunks are deleted once the stream is done
+    assert not os.path.exists(os.path.join(os.path.dirname(store1), "chunks"))
 
 
 def test_deciles_approx_twin_within_rank_error(spark):
