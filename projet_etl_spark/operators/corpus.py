@@ -40,16 +40,21 @@ def q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("t").cast("long").alias("n_tokens"),
         (
             F.least(F.size("t") / F.lit(100.0), F.lit(1.0)) * F.lit(0.4)
-            + (_count_in(F.col("t"), STOPWORDS["en"]) / F.size("t")) * F.lit(0.4)
+            + F.try_divide(_count_in(F.col("t"), STOPWORDS["en"]), F.size("t"))
+            * F.lit(0.4)
             + (
                 F.lit(1.0)
                 - F.least(
-                    (F.col("n_punct") / F.col("n_chars_obs")) * F.lit(10.0),
+                    F.try_divide(F.col("n_punct"), F.col("n_chars_obs"))
+                    * F.lit(10.0),
                     F.lit(1.0),
                 )
             )
             * F.lit(0.2)
         ).alias("quality"),
+        # try_divide: empty text has no characters (and may have no
+        # tokens); its ratios are NULL, as DuckDB's x / 0, instead of
+        # an ANSI DIVIDE_BY_ZERO
     ).filter(F.col("quality") >= F.lit(QUALITY_CUTOFF))
     keep = (
         scored.withColumn(

@@ -72,17 +72,13 @@ def q_supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = _edges(spark, sf_dir)
     outw = edges.groupBy("src").agg(F.sum("w").cast("long").alias("ow"))
-    # r14: hash-cluster the persisted edge frame on src so every
-    # iteration's join finds its probe side already partitioned on the
-    # join key (guide §2.4 — one exchange at materialization instead
-    # of one per iteration when ranks are too big to broadcast, which
-    # is exactly the 100 TB regime); persists are cache-tracked, not
-    # manually unpersisted, because iterations now execute at action
-    # time (below), not at build time
+    # persists are cache-tracked, not manually unpersisted, because
+    # iterations execute at action time (below), not at build time.
+    # An explicit repartition(src) here adds an exchange and runs the
+    # same jobs and stages no faster (sf0.1, 4 cores)
     norm = lazy_persist(
         edges.join(outw, "src")
         .select("src", "dst", (F.col("w").cast("double") / F.col("ow").cast("double")).alias("p"))
-        .repartition(F.col("src"))
     )
     nodes = lazy_persist(norm.select(F.col("src").alias("node")).distinct())
     n_total = nodes.count()  # bounded: one long for the uniform terms

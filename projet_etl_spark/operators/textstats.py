@@ -382,9 +382,10 @@ def q_dedup_cross_doc_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("n_dup_grams"), F.lit(0))
             .cast("long")
             .alias("n_dup_grams"),
-            (
-                F.coalesce(F.col("n_dup_grams"), F.lit(0)).cast("double")
-                / F.coalesce(F.col("n_grams"), F.lit(0)).cast("double")
+            # NULL for a gram-less document, as DuckDB's x / 0
+            F.try_divide(
+                F.coalesce(F.col("n_dup_grams"), F.lit(0)).cast("double"),
+                F.coalesce(F.col("n_grams"), F.lit(0)).cast("double"),
             ).alias("dup_frac"),
         )
         .orderBy("doc_id")

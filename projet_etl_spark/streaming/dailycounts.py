@@ -18,9 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from projet_etl_spark.streaming.neardedup import _write_batch_partition
+from projet_etl_spark.streaming.storeio import write_batch_partition
 
 DAILY_SCHEMA = "event_type string, day date, n long"
 
@@ -42,26 +41,7 @@ def upsert_daily_counts_batch(
     ev = ev_batch.select("event_type", "ts").localCheckpoint()
     if ev.isEmpty():
         return
-    _write_batch_partition(daily_counts_of_batch(ev), store_path, batch_id)
-
-
-def stream_daily_counts(
-    events_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Wire an events stream into the incremental daily-count store."""
-
-    def _body(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_daily_counts_batch(batch_df, batch_id, store_path)
-
-    writer = events_stream.writeStream.foreachBatch(_body).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    write_batch_partition(daily_counts_of_batch(ev), batch_id, store_path)
 
 
 def read_daily_counts(spark: SparkSession, store_path: str) -> DataFrame:

@@ -23,10 +23,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from projet_etl_spark.operators.dsir import bucket_partials
-from projet_etl_spark.streaming.neardedup import _write_batch_partition
+from projet_etl_spark.streaming.storeio import write_batch_partition
 
 DSIR_STORE_SCHEMA = "bucket long, ct long, cr long"
 
@@ -39,26 +38,7 @@ def upsert_dsir_batch(
     docs = doc_batch.select("source", "text").localCheckpoint()
     if docs.isEmpty():
         return
-    _write_batch_partition(bucket_partials(docs), store_path, batch_id)
-
-
-def stream_dsir_counts(
-    docs_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Wire a documents stream into the incremental DSIR-stats store."""
-
-    def _body(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_dsir_batch(batch_df, batch_id, store_path)
-
-    writer = docs_stream.writeStream.foreachBatch(_body).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    write_batch_partition(bucket_partials(docs), batch_id, store_path)
 
 
 def read_dsir_counts(spark: SparkSession, store_path: str) -> DataFrame:

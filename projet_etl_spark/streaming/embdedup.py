@@ -37,14 +37,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from projet_etl_spark.functions.vectors import cosine, fold_dot, fold_norm2
 from projet_etl_spark.operators.dedup import (
     HI_COSINE_THRESHOLD,
     _rphi_band_keys,
 )
-from projet_etl_spark.streaming.neardedup import _write_batch_partition
+from projet_etl_spark.streaming.storeio import write_batch_partition
 
 EMB_PAIR_SCHEMA = "vec_a long, vec_b long, cos double"
 
@@ -145,34 +144,9 @@ def emb_dedup_batch(
             .select("vec_a", "vec_b", F.round(cos, 6).alias("cos"))
             .filter(F.col("cos") >= F.lit(threshold))
         )
-    _write_batch_partition(
-        pairs.select("vec_a", "vec_b", "cos"), pairs_path, batch_id
-    )
-    _write_batch_partition(bands_new, bands_store, batch_id)
-    _write_batch_partition(withn, vecs_store, batch_id)
-
-
-def stream_emb_dedup(
-    vecs_stream: DataFrame,
-    store_path: str,
-    pairs_path: str,
-    checkpoint: str,
-    threshold: float = HI_COSINE_THRESHOLD,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Wire a (vec_id, v) stream into the incremental embedding
-    dedup: every micro-batch appends its verified pairs under
-    ``pairs_path`` and its signatures/vectors under ``store_path``."""
-
-    def _body(batch_df: DataFrame, batch_id: int) -> None:
-        emb_dedup_batch(batch_df, batch_id, store_path, pairs_path, threshold)
-
-    writer = vecs_stream.writeStream.foreachBatch(_body).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    write_batch_partition(pairs.select("vec_a", "vec_b", "cos"), batch_id, pairs_path)
+    write_batch_partition(bands_new, batch_id, bands_store)
+    write_batch_partition(withn, batch_id, vecs_store)
 
 
 def compact_emb_dedup_store(

@@ -26,11 +26,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from projet_etl_spark.functions import web
 from projet_etl_spark.operators.domains import SNAPSHOTS
-from projet_etl_spark.streaming.neardedup import _write_batch_partition
+from projet_etl_spark.streaming.storeio import write_batch_partition
 
 FRONTIER_SCHEMA = "url string, snap long, first_doc_id long, n long"
 
@@ -60,26 +59,7 @@ def upsert_frontier_batch(
     docs = docs_batch.select("doc_id").localCheckpoint()
     if docs.isEmpty():
         return
-    _write_batch_partition(frontier_of_batch(docs), store_path, batch_id)
-
-
-def stream_url_frontier(
-    docs_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Wire a documents (fetch-log) stream into the frontier store."""
-
-    def _body(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_frontier_batch(batch_df, batch_id, store_path)
-
-    writer = docs_stream.writeStream.foreachBatch(_body).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    write_batch_partition(frontier_of_batch(docs), batch_id, store_path)
 
 
 def compact_frontier_store(spark: SparkSession, store_path: str) -> int:

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from projet_etl_spark.functions.vectors import spark_norm2
 from projet_etl_spark.operators.similarity import (
@@ -28,7 +27,7 @@ from projet_etl_spark.operators.similarity import (
     _emb_with_norm,
     coarse_assign,
 )
-from projet_etl_spark.streaming.neardedup import _write_batch_partition
+from projet_etl_spark.streaming.storeio import write_batch_partition
 
 ASSIGN_SCHEMA = "vec_id long, cell long"
 
@@ -55,27 +54,7 @@ def upsert_assignment_batch(
     vecs = batch_vecs.select("vec_id", "embedding").localCheckpoint()
     if vecs.isEmpty():
         return
-    _write_batch_partition(assign_batch(vecs, cents), store_path, batch_id)
-
-
-def stream_ivf_assign(
-    vec_stream: DataFrame,
-    cents: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Wire a (vec_id, embedding) stream into the incremental index."""
-
-    def _body(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_assignment_batch(batch_df, batch_id, store_path, cents)
-
-    writer = vec_stream.writeStream.foreachBatch(_body).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    write_batch_partition(assign_batch(vecs, cents), batch_id, store_path)
 
 
 def read_assignment(spark: SparkSession, store_path: str) -> DataFrame:

@@ -33,7 +33,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from projet_etl_spark.operators.dedup import (
     JACCARD_THRESHOLD,
@@ -41,20 +40,9 @@ from projet_etl_spark.operators.dedup import (
     _minhash_band_keys,
     doc_shingles,
 )
+from projet_etl_spark.streaming.storeio import write_batch_partition
 
 PAIR_SCHEMA = "doc_a long, doc_b long, jaccard double"
-
-
-def _write_batch_partition(df: DataFrame, path: str, batch_id: int) -> None:
-    """Idempotent per-batch append: overwrite only this batch's
-    partition (replay-safe), leave every other batch untouched."""
-    (
-        df.withColumn("batch", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(path)
-    )
 
 
 def near_dedup_batch(
@@ -128,34 +116,11 @@ def near_dedup_batch(
         pairs = _jaccard_pairs(sh_verify, pairs=cands).filter(
             F.col("jaccard") >= F.lit(threshold)
         )
-    _write_batch_partition(pairs.select("doc_a", "doc_b", "jaccard"), pairs_path, batch_id)
-    _write_batch_partition(bands_new, bands_store, batch_id)
-    _write_batch_partition(docs, docs_store, batch_id)
-
-
-def stream_near_dedup(
-    docs_stream: DataFrame,
-    store_path: str,
-    pairs_path: str,
-    checkpoint: str,
-    threshold: float = JACCARD_THRESHOLD,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Wire a (doc_id, text) stream into the incremental near-dedup:
-    every micro-batch appends its verified near-dup pairs under
-    ``pairs_path`` and its signatures/texts under ``store_path``.
-    ``available_now`` drains the currently-available input and stops
-    (backfill / test mode) instead of running continuously."""
-
-    def _body(batch_df: DataFrame, batch_id: int) -> None:
-        near_dedup_batch(batch_df, batch_id, store_path, pairs_path, threshold)
-
-    writer = docs_stream.writeStream.foreachBatch(_body).option(
-        "checkpointLocation", checkpoint
+    write_batch_partition(
+        pairs.select("doc_a", "doc_b", "jaccard"), batch_id, pairs_path
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    write_batch_partition(bands_new, batch_id, bands_store)
+    write_batch_partition(docs, batch_id, docs_store)
 
 
 def compact_store(

@@ -32,10 +32,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from projet_etl_spark.functions.text import tokens
-from projet_etl_spark.streaming.neardedup import _write_batch_partition
+from projet_etl_spark.streaming.storeio import write_batch_partition
 
 POSTINGS_SCHEMA = "doc_id long, token string, tf long"
 DOCLEN_SCHEMA = "doc_id long, dl long"
@@ -65,27 +64,8 @@ def upsert_postings_batch(
     if docs.isEmpty():
         return
     post, doclen = postings_of_batch(docs)
-    _write_batch_partition(post, os.path.join(store_path, "postings"), batch_id)
-    _write_batch_partition(doclen, os.path.join(store_path, "doclen"), batch_id)
-
-
-def stream_postings(
-    docs_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Wire a (doc_id, text) stream into the incremental index."""
-
-    def _body(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_postings_batch(batch_df, batch_id, store_path)
-
-    writer = docs_stream.writeStream.foreachBatch(_body).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    write_batch_partition(post, batch_id, os.path.join(store_path, "postings"))
+    write_batch_partition(doclen, batch_id, os.path.join(store_path, "doclen"))
 
 
 # token-bucket fan-out of the compacted index: files per probe-able

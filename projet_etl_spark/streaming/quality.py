@@ -25,11 +25,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from projet_etl_spark.functions.text import tokens
 from projet_etl_spark.operators.quality_model import score_documents
-from projet_etl_spark.streaming.neardedup import _write_batch_partition
+from projet_etl_spark.streaming.storeio import write_batch_partition
 
 BUDGET_SCHEMA = "lang string, keep boolean, n_docs long, n_tokens long"
 
@@ -62,27 +61,7 @@ def upsert_budget_batch(
     docs = batch_docs.select("doc_id", "text", "lang").localCheckpoint()
     if docs.isEmpty():
         return
-    _write_batch_partition(budget_of_batch(docs), store_path, batch_id)
-
-
-def stream_quality_budget(
-    docs_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Wire a (doc_id, text, lang) stream into the incremental budget:
-    every micro-batch appends its per-(lang, keep) partials."""
-
-    def _body(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_budget_batch(batch_df, batch_id, store_path)
-
-    writer = docs_stream.writeStream.foreachBatch(_body).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    write_batch_partition(budget_of_batch(docs), batch_id, store_path)
 
 
 def read_budget(spark: SparkSession, store_path: str) -> DataFrame:

@@ -22,11 +22,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from projet_etl_spark.functions.text import portable_hash60
 from projet_etl_spark.operators.sketches import QSAMPLE_K
-from projet_etl_spark.streaming.neardedup import _write_batch_partition
+from projet_etl_spark.streaming.storeio import write_batch_partition
 
 SAMPLE_SCHEMA = "hk long, value double"
 
@@ -52,26 +51,7 @@ def upsert_bottomk_batch(
     ev = batch_events.select("event_id", "value").localCheckpoint()
     if ev.isEmpty():
         return
-    _write_batch_partition(bottomk_of_batch(ev), store_path, batch_id)
-
-
-def stream_value_sample(
-    events_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Wire an (event_id, value) stream into the incremental sample."""
-
-    def _body(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_bottomk_batch(batch_df, batch_id, store_path)
-
-    writer = events_stream.writeStream.foreachBatch(_body).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    write_batch_partition(bottomk_of_batch(ev), batch_id, store_path)
 
 
 def read_sample(spark: SparkSession, store_path: str) -> DataFrame:

@@ -19,11 +19,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from projet_etl_spark.functions.text import tokens
 from projet_etl_spark.operators.sketches import _row_ids, cms_bucket
-from projet_etl_spark.streaming.neardedup import _write_batch_partition
+from projet_etl_spark.streaming.storeio import write_batch_partition
 
 CELLS_SCHEMA = "r int, bucket long, c long"
 
@@ -46,26 +45,7 @@ def upsert_cms_batch(batch_docs: DataFrame, batch_id: int, store_path: str) -> N
     docs = batch_docs.select("text").localCheckpoint()
     if docs.isEmpty():
         return
-    _write_batch_partition(cms_of_batch(docs), store_path, batch_id)
-
-
-def stream_token_cms(
-    docs_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Wire a (doc_id, text) stream into the incremental sketch."""
-
-    def _body(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_cms_batch(batch_df, batch_id, store_path)
-
-    writer = docs_stream.writeStream.foreachBatch(_body).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    write_batch_partition(cms_of_batch(docs), batch_id, store_path)
 
 
 def read_cms(spark: SparkSession, store_path: str) -> DataFrame:

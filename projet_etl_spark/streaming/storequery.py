@@ -1,27 +1,36 @@
-"""Batch queries over streaming-maintained stores — the driver-visible
-face of the streaming surface.
+"""Batch queries over the streaming-maintained stores: the
+driver-visible face of the streaming surface.
 
 Every other streaming module is pinned by batch-parity pytest only
 (a SQL oracle can't watch a stream run). This module closes that gap
-for the daily-count store: the registry query ``daily-counts-store``
-REBUILDS the store through the real Structured Streaming path
-(file-source chunks → availableNow micro-batches → idempotent
-per-batch partition writes, streaming/dailycounts.py), then reads the
-folded store back as a plain batch DataFrame — which a DuckDB oracle
-CAN check, because the folded store must equal the batch daily counts
-over the same events exactly (partial counts are additive).
+for 14 registry queries, each served from its own store: daily
+counts, the bottom-K sample, near-dup pairs, BM25 postings, SCD2
+user state, gap sessions, click attribution, the IVF assignment,
+DSIR statistics, the URL frontier and embedding-dedup pairs, plus
+the ``compacted`` twins of the postings, frontier and
+embedding-dedup layouts. Each query REBUILDS its
+store through the real Structured Streaming path, then reads the
+store back as a plain batch DataFrame, which a DuckDB oracle CAN
+check: the folded store must equal the batch query over the same
+source exactly. So a green CORRECTNESS row for a store query is hard
+evidence that the incremental path computes the same answer as a
+rescan — store→query parity, checked by the external driver, not
+just pytest.
 
-So a green CORRECTNESS row for ``daily-counts-store`` is hard
-evidence the incremental path computes the same answer as a rescan —
-store→query parity, checked by the external driver, not just pytest.
+All stores are fed by one protocol, ``_replayed_store``: stage the
+source as key-ordered chunks, replay them one chunk per availableNow
+micro-batch through the store's foreachBatch body (storeio), delete
+the chunks, optionally compact, all under the fingerprint-keyed
+``ensure_staged``. A store differs from another only in its feed,
+its body and its compact step.
 
-Scale design (100 TB): the stream touches each event once and lands
-a days×types-sized partial per micro-batch; the store stays bounded
-by the key grain, and the batch read folds |batches|×grain rows —
-never the event history. Store build is REFRESH cost: it runs once
-per source fingerprint (size+mtime marker) and is reused until the
-source changes, so the measured query cost is the fold+read, same
-accounting as the materialized monthly rollup.
+Scale design (100 TB): a stream touches each input row once and lands
+a bounded partial (or its own rows) per micro-batch; the batch read
+folds the partials, never the history. Store build is REFRESH cost:
+it runs once per source fingerprint (size+mtime marker) and builder
+version and is reused until either changes, so the measured query
+cost is the fold+read, same accounting as the materialized monthly
+rollup.
 
 Reference: the reference app has no streaming or incremental
 maintenance (SURVEY.md §2.11 — none); this is a beyond-reference
@@ -32,16 +41,23 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
+from functools import partial
+from typing import TYPE_CHECKING, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from projet_etl_spark.sources.staging import ensure_staged, parquet_fingerprint
+from projet_etl_spark.streaming import storeio
 from projet_etl_spark.streaming.dailycounts import (
     read_daily_counts,
-    stream_daily_counts,
+    upsert_daily_counts_batch,
 )
 from projet_etl_spark.streaming.windows import read_events_stream
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 # streaming stores live beside the Spark warehouse dir (gitignored,
 # inside the repo sandbox)
@@ -51,42 +67,118 @@ STORE_ROOT = os.path.join(
     "stores",
     "daily_counts",
 )
-N_CHUNKS = 4
 
 
-def _stage_event_chunks(sf_dir: str, chunk_dir: str) -> None:
-    """Split the events table into N_CHUNKS row-slice parquet files so
-    the file source delivers multiple micro-batches. Daily counts are
-    additive, so chunk boundaries don't affect the folded result; the
-    slice order is still made deterministic (ts, event_id) so the
-    staged bytes are reproducible run to run."""
-    import pyarrow.compute as pc
+class _Feed(NamedTuple):
+    """What a store replays. ``source`` names the fixture parquet
+    whose fingerprint keys the store; ``rows()`` is the Arrow table
+    staged from it, replayed in ``keys`` order; ``stream(chunks)``
+    reads the staged chunks back one file per trigger."""
+
+    source: str
+    keys: tuple[str, ...]
+    rows: Callable[[], pa.Table]
+    stream: Callable[[str], DataFrame]
+
+
+def _read_source(
+    sf_dir: str, source: str, columns: list[str] | None = None
+) -> pa.Table:
     import pyarrow.parquet as pq
 
-    table = pq.read_table(os.path.join(sf_dir, "events.parquet"))
-    if table.num_rows:
-        order = pc.sort_indices(
-            table, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
-        )
-        table = table.take(order)
-    os.makedirs(chunk_dir, exist_ok=True)
-    n = table.num_rows
-    for k in range(N_CHUNKS):
-        lo, hi = k * n // N_CHUNKS, (k + 1) * n // N_CHUNKS
-        pq.write_table(table.slice(lo, hi - lo), f"{chunk_dir}/chunk{k:02d}.parquet")
+    return pq.read_table(os.path.join(sf_dir, source), columns=columns)
 
 
-def _drain(q, chunks: str) -> None:
-    """Wait for an availableNow query, then delete the chunks it
-    replayed: the stream is their only reader (stores, compactions
-    and serving reads never open them, and a rebuild restages them
-    from the source), so a kept copy only doubles the staged bytes."""
-    q.awaitTermination()
-    shutil.rmtree(chunks)
+def _event_feed(
+    spark: SparkSession,
+    sf_dir: str,
+    shape: Callable[[DataFrame], DataFrame] = lambda ev: ev,
+) -> _Feed:
+    """The events table in (ts, event_id) order, read back through
+    read_events_stream (either fixture ts vintage) and then
+    ``shape``: a projection or a stateful streaming plan."""
+    return _Feed(
+        "events.parquet",
+        ("ts", "event_id"),
+        lambda: _read_source(sf_dir, "events.parquet"),
+        lambda chunks: shape(
+            read_events_stream(spark, chunks, max_files_per_trigger=1)
+        ),
+    )
 
 
-def _source_fingerprint(sf_dir: str) -> str:
-    return parquet_fingerprint(sf_dir, "events.parquet")
+def _file_feed(
+    spark: SparkSession,
+    sf_dir: str,
+    source: str,
+    schema: str,
+    rows: Callable[[], pa.Table] | None = None,
+) -> _Feed:
+    """The columns named by the DDL ``schema`` of ``source`` (or
+    ``rows()`` when the staged table is derived), replayed in the
+    order of the first column, a unique id (doc_id, vec_id)."""
+    cols = [f.split()[0] for f in schema.split(",")]
+    return _Feed(
+        source,
+        (cols[0],),
+        rows or (lambda: _read_source(sf_dir, source, cols)),
+        lambda chunks: spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(chunks),
+    )
+
+
+def _bound(body: Callable, **paths: str) -> Callable[[str], Callable]:
+    """``body`` with each keyword bound to that name under the store
+    root: ``_bound(f, store_path="store")(root)`` is
+    ``partial(f, store_path=<root>/store)``."""
+    return lambda root: partial(
+        body, **{k: os.path.join(root, v) for k, v in paths.items()}
+    )
+
+
+def _replayed_store(
+    root_base: str,
+    sf_dir: str,
+    feed: _Feed,
+    *,
+    version: str,
+    body: Callable[[str], Callable[[DataFrame, int], None]],
+    out: str = "store",
+    compact: Callable[[str], object] | None = None,
+) -> str:
+    """Build (or reuse) one replayed store; return ``<root>/<out>``.
+
+    Under ensure_staged (so it rebuilds only when the source
+    fingerprint or ``version`` moves): stage ``feed`` as key-ordered
+    chunks, replay them one chunk per availableNow micro-batch
+    through ``body(root)``, delete the chunks, then run
+    ``compact(root)`` if given. ``body`` is bound after staging, so
+    a body that needs Spark state (the IVF centroids) computes it
+    only on a rebuild."""
+
+    def _build(root: str) -> None:
+        chunks = os.path.join(root, "chunks")
+        storeio.stage_chunks(feed.rows(), feed.keys, chunks)
+        storeio.replay(
+            feed.stream(chunks), body(root), os.path.join(root, "ckpt")
+        ).awaitTermination()
+        # the stream is the chunks' only reader (stores, compactions
+        # and serving reads never open them, and a rebuild restages
+        # them from the source), so a kept copy only doubles the
+        # staged bytes
+        shutil.rmtree(chunks)
+        if compact is not None:
+            compact(root)
+
+    return ensure_staged(
+        root_base,
+        sf_dir,
+        parquet_fingerprint(sf_dir, feed.source),
+        out,
+        _build,
+        version=version,
+    )
 
 
 def ensure_daily_counts_store(spark: SparkSession, sf_dir: str) -> str:
@@ -95,21 +187,12 @@ def ensure_daily_counts_store(spark: SparkSession, sf_dir: str) -> str:
     (the shared ensure_staged protocol): a regenerated fixture
     invalidates it, repeat queries reuse it — build is refresh cost,
     not query cost."""
-
-    def _build(root: str) -> None:
-        chunks = os.path.join(root, "chunks")
-        _stage_event_chunks(sf_dir, chunks)
-        q = stream_daily_counts(
-            read_events_stream(spark, chunks, max_files_per_trigger=1),
-            os.path.join(root, "store"),
-            os.path.join(root, "ckpt"),
-            available_now=True,
-        )
-        _drain(q, chunks)
-
-    return ensure_staged(
-        STORE_ROOT, sf_dir, _source_fingerprint(sf_dir), "store", _build,
+    return _replayed_store(
+        STORE_ROOT,
+        sf_dir,
+        _event_feed(spark, sf_dir),
         version="daily-counts-v1",
+        body=_bound(upsert_daily_counts_batch, store_path="store"),
     )
 
 
@@ -142,26 +225,16 @@ def ensure_bottomk_store(spark: SparkSession, sf_dir: str) -> str:
     store."""
     from projet_etl_spark.streaming.quantiles import (
         compact_sample_store,
-        stream_value_sample,
+        upsert_bottomk_batch,
     )
 
-    def _build(root: str) -> None:
-        chunks = os.path.join(root, "chunks")
-        _stage_event_chunks(sf_dir, chunks)
-        q = stream_value_sample(
-            read_events_stream(spark, chunks, max_files_per_trigger=1).select(
-                "event_id", "value"
-            ),
-            os.path.join(root, "store"),
-            os.path.join(root, "ckpt"),
-            available_now=True,
-        )
-        _drain(q, chunks)
-        compact_sample_store(spark, os.path.join(root, "store"))
-
-    return ensure_staged(
-        BOTTOMK_ROOT, sf_dir, _source_fingerprint(sf_dir), "store", _build,
+    return _replayed_store(
+        BOTTOMK_ROOT,
+        sf_dir,
+        _event_feed(spark, sf_dir, lambda ev: ev.select("event_id", "value")),
         version="bottomk-v1",
+        body=_bound(upsert_bottomk_batch, store_path="store"),
+        compact=lambda root: compact_sample_store(spark, os.path.join(root, "store")),
     )
 
 
@@ -191,59 +264,22 @@ NEARDEDUP_ROOT = os.path.join(
 )
 
 
-def _stage_doc_chunks(
-    sf_dir: str, chunk_dir: str, columns: tuple[str, ...] = ("doc_id", "text")
-) -> None:
-    """Split documents into N_CHUNKS (doc_id-ordered row slices) so
-    the file source delivers several micro-batches; the emitted pair
-    UNION is chunking-invariant (each batch pairs its docs against
-    the store plus itself), which is exactly the parity the oracle
-    checks."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    table = pq.read_table(
-        os.path.join(sf_dir, "documents.parquet"), columns=list(columns)
-    )
-    if table.num_rows:
-        table = table.take(pc.sort_indices(table, sort_keys=[("doc_id", "ascending")]))
-    os.makedirs(chunk_dir, exist_ok=True)
-    n = table.num_rows
-    for k in range(N_CHUNKS):
-        lo, hi = k * n // N_CHUNKS, (k + 1) * n // N_CHUNKS
-        pq.write_table(table.slice(lo, hi - lo), f"{chunk_dir}/chunk{k:02d}.parquet")
-
-
 def ensure_neardedup_pairs(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) the streaming near-dedup pairs sink for
     ``sf_dir`` (fingerprint-keyed, same refresh-cost accounting as
-    the daily-count store)."""
-    from projet_etl_spark.streaming.neardedup import stream_near_dedup
+    the daily-count store). Each batch pairs its docs against the
+    store plus itself, so the emitted pair UNION is
+    chunking-invariant, which is exactly the parity the oracle
+    checks."""
+    from projet_etl_spark.streaming.neardedup import near_dedup_batch
 
-    def _build(root: str) -> None:
-        chunks = os.path.join(root, "chunks")
-        _stage_doc_chunks(sf_dir, chunks)
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunks)
-        )
-        q = stream_near_dedup(
-            stream,
-            os.path.join(root, "store"),
-            os.path.join(root, "pairs"),
-            os.path.join(root, "ckpt"),
-            available_now=True,
-        )
-        _drain(q, chunks)
-
-    return ensure_staged(
+    return _replayed_store(
         NEARDEDUP_ROOT,
         sf_dir,
-        parquet_fingerprint(sf_dir, "documents.parquet"),
-        "pairs",
-        _build,
+        _file_feed(spark, sf_dir, "documents.parquet", "doc_id long, text string"),
         version="neardedup-v1",
+        body=_bound(near_dedup_batch, store_path="store", pairs_path="pairs"),
+        out="pairs",
     )
 
 
@@ -267,64 +303,23 @@ def q_neardedup_pairs_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 HISTORY_ROOT = os.path.join(os.path.dirname(STORE_ROOT), "user_state_history")
 
 
-def _stage_ordered_event_chunks(sf_dir: str, chunk_dir: str) -> None:
-    """Event chunks for ORDER-SENSITIVE streams: same global
-    (ts, event_id)-sorted row slices as _stage_event_chunks, plus
-    strictly increasing mtimes so the file source triggers them in
-    sequence — SCD2 drops cross-batch out-of-order events at the
-    high-water mark (the documented CDC ordering contract), so the
-    feed must deliver chunks in event order to equal the batch
-    rebuild."""
-    import time
-
-    _stage_event_chunks(sf_dir, chunk_dir)
-    base = time.time()
-    for i, f in enumerate(sorted(os.listdir(chunk_dir))):
-        os.utime(os.path.join(chunk_dir, f), (base + i, base + i))
-
-
-def _ordered_stream_builder(spark: SparkSession, sf_dir: str, stream_fn):
-    """ensure_staged build step shared by every order-sensitive
-    event-stream store (SCD2 history, sessions, attribution): stage
-    ordered event chunks, run ``stream_fn(stream)`` through
-    availableNow micro-batches, land each batch idempotently under
-    its batch partition."""
-    from projet_etl_spark.streaming.neardedup import _write_batch_partition
-
-    def _build(root: str) -> None:
-        store = os.path.join(root, "store")
-        chunks = os.path.join(root, "chunks")
-        _stage_ordered_event_chunks(sf_dir, chunks)
-        out = stream_fn(read_events_stream(spark, chunks, max_files_per_trigger=1))
-        q = (
-            out.writeStream.foreachBatch(
-                lambda df, bid: _write_batch_partition(df, store, bid)
-            )
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, chunks)
-
-    return _build
-
-
 def ensure_user_state_store(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) the streaming-maintained SCD2 history store
     for ``sf_dir``: events flow through the real
     applyInPandasWithState path (streaming/history.py) in availableNow
-    micro-batches; every emission lands idempotently under its batch
+    micro-batches delivered in event order — SCD2 drops cross-batch
+    out-of-order events at the high-water mark (the documented CDC
+    ordering contract), so only an ordered feed equals the batch
+    rebuild; every emission lands idempotently under its batch
     partition. Fingerprint-keyed — build is refresh cost."""
     from projet_etl_spark.streaming.history import user_state_history_stream
 
-    return ensure_staged(
+    return _replayed_store(
         HISTORY_ROOT,
         sf_dir,
-        _source_fingerprint(sf_dir),
-        "store",
-        _ordered_stream_builder(spark, sf_dir, user_state_history_stream),
+        _event_feed(spark, sf_dir, user_state_history_stream),
         version="user-state-scd2-v1",
+        body=_bound(storeio.write_batch_partition, path="store"),
     )
 
 
@@ -342,13 +337,12 @@ def q_user_state_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     hard driver fact."""
     from projet_etl_spark.operators.events_windows import TS_FMT
     from projet_etl_spark.streaming.history import OUTPUT_SCHEMA
-    from projet_etl_spark.streaming.storeio import read_store
 
     store = ensure_user_state_store(spark, sf_dir)
     # empty events -> the stream commits no rows and the store dir has
     # no footers; read_store serves the legitimately-empty frame while
     # still raising on a genuinely broken store
-    rows = read_store(
+    rows = storeio.read_store(
         spark,
         store,
         OUTPUT_SCHEMA,
@@ -377,46 +371,18 @@ def q_user_state_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 POSTINGS_ROOT = os.path.join(os.path.dirname(STORE_ROOT), "bm25_postings")
 
 
-def _postings_builder(spark: SparkSession, sf_dir: str, *, compact: bool):
-    """ensure_staged build step for the inverted-postings stores:
-    stream documents into the index in availableNow micro-batches,
-    then (compacted variant) fold the replay-committed batches into
-    the token-bucketed layout."""
-    from projet_etl_spark.streaming.postings import (
-        compact_postings_store,
-        stream_postings,
-    )
-
-    def _build(root: str) -> None:
-        store = os.path.join(root, "store")
-        chunks = os.path.join(root, "chunks")
-        _stage_doc_chunks(sf_dir, chunks)
-        q = stream_postings(
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunks),
-            store,
-            os.path.join(root, "ckpt"),
-            available_now=True,
-        )
-        _drain(q, chunks)
-        if compact:
-            compact_postings_store(spark, store)
-
-    return _build
-
-
 def ensure_postings_store(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) the streaming-written inverted-postings store
     for ``sf_dir`` (fingerprint-keyed on documents.parquet, same
     refresh-cost accounting as the other stores)."""
-    return ensure_staged(
+    from projet_etl_spark.streaming.postings import upsert_postings_batch
+
+    return _replayed_store(
         POSTINGS_ROOT,
         sf_dir,
-        parquet_fingerprint(sf_dir, "documents.parquet"),
-        "store",
-        _postings_builder(spark, sf_dir, compact=False),
+        _file_feed(spark, sf_dir, "documents.parquet", "doc_id long, text string"),
         version="postings-v1",
+        body=_bound(upsert_postings_batch, store_path="store"),
     )
 
 
@@ -430,13 +396,18 @@ def ensure_compacted_postings_store(spark: SparkSession, sf_dir: str) -> str:
     compaction over it — its own root, so ``bm25-store`` keeps
     serving the uncompacted layout (each query's cost stays
     independent of which ran first)."""
-    return ensure_staged(
+    from projet_etl_spark.streaming.postings import (
+        compact_postings_store,
+        upsert_postings_batch,
+    )
+
+    return _replayed_store(
         COMPACTED_POSTINGS_ROOT,
         sf_dir,
-        parquet_fingerprint(sf_dir, "documents.parquet"),
-        "store",
-        _postings_builder(spark, sf_dir, compact=True),
+        _file_feed(spark, sf_dir, "documents.parquet", "doc_id long, text string"),
         version="postings-compacted-v1",
+        body=_bound(upsert_postings_batch, store_path="store"),
+        compact=lambda root: compact_postings_store(spark, os.path.join(root, "store")),
     )
 
 
@@ -485,13 +456,12 @@ def ensure_sessions_store(spark: SparkSession, sf_dir: str) -> str:
     partition. Fingerprint-keyed — build is refresh cost."""
     from projet_etl_spark.streaming.sessions import sessionize_stream
 
-    return ensure_staged(
+    return _replayed_store(
         SESSIONS_ROOT,
         sf_dir,
-        _source_fingerprint(sf_dir),
-        "store",
-        _ordered_stream_builder(spark, sf_dir, sessionize_stream),
+        _event_feed(spark, sf_dir, sessionize_stream),
         version="sessions-v1",
+        body=_bound(storeio.write_batch_partition, path="store"),
     )
 
 
@@ -509,10 +479,9 @@ def q_sessions_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch answer end to end."""
     from projet_etl_spark.operators.events_windows import TS_FMT
     from projet_etl_spark.streaming.sessions import OUTPUT_SCHEMA
-    from projet_etl_spark.streaming.storeio import read_store
 
     store = ensure_sessions_store(spark, sf_dir)
-    rows = read_store(
+    rows = storeio.read_store(
         spark,
         store,
         OUTPUT_SCHEMA + ", batch long",
@@ -555,13 +524,12 @@ def ensure_attribution_store(spark: SparkSession, sf_dir: str) -> str:
         click_purchase_attribution_stream,
     )
 
-    return ensure_staged(
+    return _replayed_store(
         ATTRIB_ROOT,
         sf_dir,
-        _source_fingerprint(sf_dir),
-        "store",
-        _ordered_stream_builder(spark, sf_dir, click_purchase_attribution_stream),
+        _event_feed(spark, sf_dir, click_purchase_attribution_stream),
         version="attribution-v1",
+        body=_bound(storeio.write_batch_partition, path="store"),
     )
 
 
@@ -574,10 +542,8 @@ def q_attribution_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     so this query SHARES events-click-attribution's oracle — a green
     driver row proves watermarked stream-stream state produces the
     identical match set end to end."""
-    from projet_etl_spark.streaming.storeio import read_store
-
     store = ensure_attribution_store(spark, sf_dir)
-    rows = read_store(
+    rows = storeio.read_store(
         spark,
         store,
         "user_id long, click_id long, purchase_id long, "
@@ -601,64 +567,30 @@ def q_attribution_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_ROOT = os.path.join(os.path.dirname(STORE_ROOT), "ivf_assignment")
 
 
-def _stage_vec_chunks(sf_dir: str, chunk_dir: str) -> None:
-    """Split embeddings into N_CHUNKS vec_id-ordered row slices so
-    the file source delivers several micro-batches; assignment is
-    per-vector so chunking can't affect the folded index."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    table = pq.read_table(
-        os.path.join(sf_dir, "embeddings.parquet"),
-        columns=["vec_id", "embedding"],
-    )
-    if table.num_rows:
-        table = table.take(
-            pc.sort_indices(table, sort_keys=[("vec_id", "ascending")])
-        )
-    os.makedirs(chunk_dir, exist_ok=True)
-    n = table.num_rows
-    for k in range(N_CHUNKS):
-        lo, hi = k * n // N_CHUNKS, (k + 1) * n // N_CHUNKS
-        pq.write_table(table.slice(lo, hi - lo), f"{chunk_dir}/chunk{k:02d}.parquet")
-
-
 def ensure_ivf_assignment(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) the streaming-maintained IVF coarse
     assignment for ``sf_dir``: fixed offline centroids, each
     micro-batch of vectors assigned with the batch build's own
-    coarse_assign plan and appended under its batch partition.
-    Fingerprint-keyed refresh cost."""
+    coarse_assign plan and appended under its batch partition
+    (assignment is per vector, so chunking can't affect the folded
+    index). Fingerprint-keyed refresh cost."""
     from projet_etl_spark.streaming.ivf import (
         index_centroids,
-        stream_ivf_assign,
+        upsert_assignment_batch,
     )
 
-    def _build(root: str) -> None:
-        chunks = os.path.join(root, "chunks")
-        _stage_vec_chunks(sf_dir, chunks)
-        cents = index_centroids(spark, sf_dir).localCheckpoint()
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunks)
-        )
-        q = stream_ivf_assign(
-            stream,
-            cents,
-            os.path.join(root, "store"),
-            os.path.join(root, "ckpt"),
-            available_now=True,
-        )
-        _drain(q, chunks)
-
-    return ensure_staged(
+    return _replayed_store(
         IVF_ROOT,
         sf_dir,
-        parquet_fingerprint(sf_dir, "embeddings.parquet"),
-        "store",
-        _build,
+        _file_feed(
+            spark, sf_dir, "embeddings.parquet", "vec_id long, embedding array<float>"
+        ),
         version="ivf-assign-v1",
+        body=lambda root: partial(
+            upsert_assignment_batch,
+            store_path=os.path.join(root, "store"),
+            cents=index_centroids(spark, sf_dir).localCheckpoint(),
+        ),
     )
 
 
@@ -706,31 +638,19 @@ def ensure_dsir_store(spark: SparkSession, sf_dir: str) -> str:
     store for ``sf_dir`` — documents replayed as availableNow
     micro-batches, each landing its own (bucket, ct, cr) partial.
     Fingerprint-keyed refresh cost, like every other store."""
-    from projet_etl_spark.streaming.dsirstats import stream_dsir_counts
+    from projet_etl_spark.streaming.dsirstats import upsert_dsir_batch
 
-    def _build(root: str) -> None:
-        chunks = os.path.join(root, "chunks")
-        _stage_doc_chunks(sf_dir, chunks, columns=("doc_id", "text", "source"))
-        stream = (
-            spark.readStream.schema("doc_id long, text string, source string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunks)
-        )
-        q = stream_dsir_counts(
-            stream,
-            os.path.join(root, "store"),
-            os.path.join(root, "ckpt"),
-            available_now=True,
-        )
-        _drain(q, chunks)
-
-    return ensure_staged(
+    return _replayed_store(
         DSIR_STATS_ROOT,
         sf_dir,
-        parquet_fingerprint(sf_dir, "documents.parquet"),
-        "store",
-        _build,
+        _file_feed(
+            spark,
+            sf_dir,
+            "documents.parquet",
+            "doc_id long, text string, source string",
+        ),
         version="dsir-stats-v1",
+        body=_bound(upsert_dsir_batch, store_path="store"),
     )
 
 
@@ -766,37 +686,6 @@ def q_dsir_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 FRONTIER_ROOT = os.path.join(os.path.dirname(STORE_ROOT), "url_frontier")
 
 
-def _frontier_builder(spark: SparkSession, sf_dir: str, compact: bool):
-    """Builder closure for the frontier store: replay the documents
-    fetch log as availableNow micro-batches; with ``compact``, fold
-    the replay-committed partials afterwards (the bm25 compacted-twin
-    pattern — layout changes, rows don't)."""
-    from projet_etl_spark.streaming.frontier import (
-        compact_frontier_store,
-        stream_url_frontier,
-    )
-
-    def _build(root: str) -> None:
-        chunks = os.path.join(root, "chunks")
-        _stage_doc_chunks(sf_dir, chunks, columns=("doc_id",))
-        stream = (
-            spark.readStream.schema("doc_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunks)
-        )
-        q = stream_url_frontier(
-            stream,
-            os.path.join(root, "store"),
-            os.path.join(root, "ckpt"),
-            available_now=True,
-        )
-        _drain(q, chunks)
-        if compact:
-            compact_frontier_store(spark, os.path.join(root, "store"))
-
-    return _build
-
-
 def ensure_url_frontier_store(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) the streaming-maintained URL frontier for
     ``sf_dir``: the documents fetch log replayed as availableNow
@@ -807,14 +696,14 @@ def ensure_url_frontier_store(spark: SparkSession, sf_dir: str) -> str:
     store like a data change would."""
     from projet_etl_spark.functions.web import PAGE_MOD
     from projet_etl_spark.operators.domains import SNAPSHOTS
+    from projet_etl_spark.streaming.frontier import upsert_frontier_batch
 
-    return ensure_staged(
+    return _replayed_store(
         FRONTIER_ROOT,
         sf_dir,
-        parquet_fingerprint(sf_dir, "documents.parquet"),
-        "store",
-        _frontier_builder(spark, sf_dir, compact=False),
+        _file_feed(spark, sf_dir, "documents.parquet", "doc_id long"),
         version=f"url-frontier-v1:pm={PAGE_MOD}:snaps={SNAPSHOTS}",
+        body=_bound(upsert_frontier_batch, store_path="store"),
     )
 
 
@@ -827,17 +716,23 @@ def ensure_compacted_url_frontier_store(spark: SparkSession, sf_dir: str) -> str
     """Build a frontier store AND run the partial-merging compaction
     over it — its own root, so ``url-frontier-store`` keeps serving
     the uncompacted layout (each query's cost stays independent of
-    which ran first)."""
+    which ran first). The compaction merges partials with their own
+    algebra, so rows change and the fold does not (the bm25
+    compacted-twin pattern)."""
     from projet_etl_spark.functions.web import PAGE_MOD
     from projet_etl_spark.operators.domains import SNAPSHOTS
+    from projet_etl_spark.streaming.frontier import (
+        compact_frontier_store,
+        upsert_frontier_batch,
+    )
 
-    return ensure_staged(
+    return _replayed_store(
         COMPACTED_FRONTIER_ROOT,
         sf_dir,
-        parquet_fingerprint(sf_dir, "documents.parquet"),
-        "store",
-        _frontier_builder(spark, sf_dir, compact=True),
+        _file_feed(spark, sf_dir, "documents.parquet", "doc_id long"),
         version=f"url-frontier-compacted-v1:pm={PAGE_MOD}:snaps={SNAPSHOTS}",
+        body=_bound(upsert_frontier_batch, store_path="store"),
+        compact=lambda root: compact_frontier_store(spark, os.path.join(root, "store")),
     )
 
 
@@ -877,75 +772,6 @@ def q_url_frontier_store_compacted(spark: SparkSession, sf_dir: str) -> DataFram
 EMBDEDUP_ROOT = os.path.join(os.path.dirname(STORE_ROOT), "emb_dedup")
 
 
-def _stage_planted_chunks(spark: SparkSession, sf_dir: str, chunk_dir: str) -> None:
-    """Stage the planted corpus (operators/dedup.planted_embeddings)
-    as N_CHUNKS vec_id-ordered parquet slices. Ordering by vec_id
-    puts every ORIGINAL (ids < PLANT_OFFSET) in the early
-    micro-batches and every planted twin (ids >= PLANT_OFFSET) in the
-    late ones, so EVERY true pair crosses a batch boundary — the
-    batch x STORE path is what finds them all, not the easy
-    batch x batch join. Driver-side like the other chunk stagers
-    (refresh-time fixture replay, bounded by the fixture size; at
-    deployment the stream source is the real vector feed)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from projet_etl_spark.operators.dedup import planted_embeddings
-
-    pdf = (
-        planted_embeddings(spark, sf_dir)
-        .orderBy("vec_id")
-        .toPandas()
-    )
-    table = pa.table(
-        {
-            "vec_id": pa.array(pdf["vec_id"], type=pa.int64()),
-            "v": pa.array(
-                [list(x) for x in pdf["v"]], type=pa.list_(pa.float64())
-            ),
-        }
-    )
-    os.makedirs(chunk_dir, exist_ok=True)
-    n = table.num_rows
-    for k in range(N_CHUNKS):
-        lo, hi = k * n // N_CHUNKS, (k + 1) * n // N_CHUNKS
-        pq.write_table(table.slice(lo, hi - lo), f"{chunk_dir}/chunk{k:02d}.parquet")
-
-
-def _embdedup_builder(spark: SparkSession, sf_dir: str, compact: bool):
-    """Builder closure for the embedding-dedup sink: replay the
-    planted corpus as availableNow micro-batches; with ``compact``,
-    fold the replay-committed batches of all three tables afterwards
-    (verbatim fold — rows are facts, layout is what changes)."""
-    from projet_etl_spark.streaming.embdedup import (
-        compact_emb_dedup_store,
-        stream_emb_dedup,
-    )
-
-    def _build(root: str) -> None:
-        chunks = os.path.join(root, "chunks")
-        _stage_planted_chunks(spark, sf_dir, chunks)
-        stream = (
-            spark.readStream.schema("vec_id long, v array<double>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunks)
-        )
-        q = stream_emb_dedup(
-            stream,
-            os.path.join(root, "store"),
-            os.path.join(root, "pairs"),
-            os.path.join(root, "ckpt"),
-            available_now=True,
-        )
-        _drain(q, chunks)
-        if compact:
-            compact_emb_dedup_store(
-                spark, os.path.join(root, "store"), os.path.join(root, "pairs")
-            )
-
-    return _build
-
-
 def _embdedup_version(tag: str) -> str:
     """Version token folding every constant the pair set depends on
     (plant device incl. PLANT_OFFSET — r12 advisor low: the offset
@@ -968,19 +794,42 @@ def _embdedup_version(tag: str) -> str:
     )
 
 
+def _planted_feed(spark: SparkSession, sf_dir: str) -> _Feed:
+    """The planted corpus (operators/dedup.planted_embeddings),
+    keyed by the embeddings file. Replayed in vec_id order, it puts
+    every ORIGINAL (ids < PLANT_OFFSET) in the early micro-batches
+    and every planted twin (ids >= PLANT_OFFSET) in the late ones, so
+    EVERY true pair crosses a batch boundary — the batch x STORE path
+    is what finds them all, not the easy batch x batch join.
+    Collected to the driver like the other staged feeds
+    (refresh-time fixture replay, bounded by the fixture size; at
+    deployment the stream source is the real vector feed)."""
+    from projet_etl_spark.operators.dedup import planted_embeddings
+
+    return _file_feed(
+        spark,
+        sf_dir,
+        "embeddings.parquet",
+        "vec_id long, v array<double>",
+        rows=lambda: planted_embeddings(spark, sf_dir).toArrow(),
+    )
+
+
 def ensure_embdedup_pairs(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) the incremental embedding-dedup pairs sink
     for ``sf_dir``: the planted corpus replayed as availableNow
     micro-batches through streaming/embdedup.py. Fingerprint-keyed
     refresh cost; see :func:`_embdedup_version` for the invalidation
     token."""
-    return ensure_staged(
+    from projet_etl_spark.streaming.embdedup import emb_dedup_batch
+
+    return _replayed_store(
         EMBDEDUP_ROOT,
         sf_dir,
-        parquet_fingerprint(sf_dir, "embeddings.parquet"),
-        "pairs",
-        _embdedup_builder(spark, sf_dir, compact=False),
+        _planted_feed(spark, sf_dir),
         version=_embdedup_version("v1"),
+        body=_bound(emb_dedup_batch, store_path="store", pairs_path="pairs"),
+        out="pairs",
     )
 
 
@@ -993,14 +842,23 @@ def ensure_compacted_embdedup_pairs(spark: SparkSession, sf_dir: str) -> str:
     """Build an embedding-dedup sink AND fold its per-batch tables
     (pairs, band index, vector store) through the verbatim
     compaction — its own root, so ``embedding-pairs-store`` keeps
-    serving the uncompacted layout."""
-    return ensure_staged(
+    serving the uncompacted layout. Rows are facts, so the fold
+    changes the layout, never the pairs."""
+    from projet_etl_spark.streaming.embdedup import (
+        compact_emb_dedup_store,
+        emb_dedup_batch,
+    )
+
+    return _replayed_store(
         COMPACTED_EMBDEDUP_ROOT,
         sf_dir,
-        parquet_fingerprint(sf_dir, "embeddings.parquet"),
-        "pairs",
-        _embdedup_builder(spark, sf_dir, compact=True),
+        _planted_feed(spark, sf_dir),
         version=_embdedup_version("compacted-v1"),
+        body=_bound(emb_dedup_batch, store_path="store", pairs_path="pairs"),
+        out="pairs",
+        compact=lambda root: compact_emb_dedup_store(
+            spark, os.path.join(root, "store"), os.path.join(root, "pairs")
+        ),
     )
 
 

@@ -151,11 +151,8 @@ def test_neardedup_pairs_survive_crash_during_compaction(
 ):
     from pyspark.sql import functions as F
 
-    from projet_etl_spark.streaming.neardedup import (
-        _write_batch_partition,
-        compact_store,
-        read_pairs,
-    )
+    from projet_etl_spark.streaming.neardedup import compact_store, read_pairs
+    from projet_etl_spark.streaming.storeio import write_batch_partition
 
     pairs_path = str(tmp_path / "pairs")
     for b in range(3):
@@ -163,7 +160,7 @@ def test_neardedup_pairs_survive_crash_during_compaction(
             [(b * 10 + i, b * 10 + i + 1, 0.9) for i in range(4)],
             "doc_a long, doc_b long, jaccard double",
         )
-        _write_batch_partition(df, pairs_path, b)
+        write_batch_partition(df, b, pairs_path)
     snap = sorted(
         map(tuple, read_pairs(spark, pairs_path).collect())
     )

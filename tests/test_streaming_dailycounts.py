@@ -5,10 +5,13 @@ store equals the raw-events query bit for bit."""
 
 from __future__ import annotations
 
+from functools import partial
+
 from projet_etl_spark.operators.stats import cusum_over_daily, q_events_cusum_drift
+from projet_etl_spark.streaming import storeio
 from projet_etl_spark.streaming.dailycounts import (
     read_daily_counts,
-    stream_daily_counts,
+    upsert_daily_counts_batch,
 )
 from projet_etl_spark.streaming.windows import read_events_stream
 from tests.conftest import SF_SMALL
@@ -19,18 +22,15 @@ def test_store_fed_cusum_equals_raw_rescan(spark, tmp_path):
     root = str(tmp_path / "daily_stream")
     _stage_ordered_chunks(spark, SF_SMALL, root)
     store = str(tmp_path / "daily_store")
-    q = stream_daily_counts(
+    q = storeio.replay(
         read_events_stream(spark, root, max_files_per_trigger=1),
-        store,
+        partial(upsert_daily_counts_batch, store_path=store),
         str(tmp_path / "ckpt"),
-        available_now=True,
     )
     q.awaitTermination()
     # replay one micro-batch under its existing batch_id: the
     # partition overwrite makes it a no-op (the at-least-once
     # contract of foreachBatch — re-delivery carries the batch_id)
-    from projet_etl_spark.streaming.dailycounts import upsert_daily_counts_batch
-
     replay_src = spark.read.parquet(f"{root}/chunk00.parquet")
     upsert_daily_counts_batch(replay_src, 0, store)
 

@@ -4,6 +4,8 @@ and a replayed batch must not duplicate index entries."""
 
 from __future__ import annotations
 
+from functools import partial
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
@@ -14,10 +16,10 @@ from projet_etl_spark.operators.similarity import (
     _emb_with_norm,
     coarse_assign,
 )
+from projet_etl_spark.streaming import storeio
 from projet_etl_spark.streaming.ivf import (
     index_centroids,
     read_assignment,
-    stream_ivf_assign,
     upsert_assignment_batch,
 )
 from tests.conftest import SF_SMALL
@@ -56,14 +58,12 @@ def test_stream_ivf_equals_batch_assignment(spark, tmp_path):
     _stage(spark, tmp_path / "vec_stream")
     cents = index_centroids(spark, SF_SMALL).localCheckpoint()
     store = str(tmp_path / "ivf")
-    q = stream_ivf_assign(
+    q = storeio.replay(
         spark.readStream.schema(VEC_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(tmp_path / "vec_stream")),
-        cents,
-        store,
+        partial(upsert_assignment_batch, store_path=store, cents=cents),
         str(tmp_path / "ckpt"),
-        available_now=True,
     )
     q.awaitTermination()
     got = _index(read_assignment(spark, store))

@@ -5,14 +5,16 @@ and a replayed batch must not duplicate pairs or store rows."""
 
 from __future__ import annotations
 
+from functools import partial
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 
 from projet_etl_spark.operators.dedup import q_dedup_minhash_lsh
+from projet_etl_spark.streaming import storeio
 from projet_etl_spark.streaming.neardedup import (
     near_dedup_batch,
     read_pairs,
-    stream_near_dedup,
 )
 from tests.conftest import SF_SMALL
 
@@ -47,12 +49,14 @@ def test_stream_near_dedup_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(tmp_path / "docs_stream"))
     )
-    q = stream_near_dedup(
+    q = storeio.replay(
         stream,
-        str(tmp_path / "store"),
-        str(tmp_path / "pairs"),
+        partial(
+            near_dedup_batch,
+            store_path=str(tmp_path / "store"),
+            pairs_path=str(tmp_path / "pairs"),
+        ),
         str(tmp_path / "ckpt"),
-        available_now=True,
     )
     q.awaitTermination()
 

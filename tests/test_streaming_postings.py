@@ -4,16 +4,18 @@ batch query row-for-row, and replay must not duplicate postings."""
 
 from __future__ import annotations
 
+from functools import partial
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from projet_etl_spark.functions.text import tokens
 from projet_etl_spark.operators.retrieval import q_bm25_topk
+from projet_etl_spark.streaming import storeio
 from projet_etl_spark.streaming.postings import (
     bm25_from_store,
     read_postings,
-    stream_postings,
     upsert_postings_batch,
 )
 from tests.conftest import SF_SMALL
@@ -44,13 +46,12 @@ def _stage(spark, stream_dir, n_files=3):
 def test_stream_postings_equal_batch_and_serve_bm25(spark, tmp_path):
     _stage(spark, tmp_path / "docs_stream")
     store = str(tmp_path / "idx")
-    q = stream_postings(
+    q = storeio.replay(
         spark.readStream.schema(DOC_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(tmp_path / "docs_stream")),
-        store,
+        partial(upsert_postings_batch, store_path=store),
         str(tmp_path / "ckpt"),
-        available_now=True,
     )
     q.awaitTermination(180)
 

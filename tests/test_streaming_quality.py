@@ -5,14 +5,16 @@ preserve the folded result while collapsing partitions."""
 
 from __future__ import annotations
 
+from functools import partial
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 
 from projet_etl_spark.operators.quality_model import q_corpus_quality_budget
+from projet_etl_spark.streaming import storeio
 from projet_etl_spark.streaming.quality import (
     compact_budget,
     read_budget,
-    stream_quality_budget,
     upsert_budget_batch,
 )
 from tests.conftest import SF_SMALL
@@ -49,13 +51,12 @@ def _as_map(df):
 def test_stream_budget_equals_batch(spark, tmp_path):
     _stage(spark, tmp_path / "docs_stream")
     store = str(tmp_path / "budget")
-    q = stream_quality_budget(
+    q = storeio.replay(
         spark.readStream.schema(DOC_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(tmp_path / "docs_stream")),
-        store,
+        partial(upsert_budget_batch, store_path=store),
         str(tmp_path / "ckpt"),
-        available_now=True,
     )
     q.awaitTermination()
     got = _as_map(read_budget(spark, store))

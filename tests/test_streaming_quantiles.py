@@ -4,16 +4,18 @@ must not change the store."""
 
 from __future__ import annotations
 
+from functools import partial
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from projet_etl_spark.operators.sketches import q_quantiles_hash_sample
 from projet_etl_spark.sources.tables import events
+from projet_etl_spark.streaming import storeio
 from projet_etl_spark.streaming.quantiles import (
     read_quantiles,
     read_sample,
-    stream_value_sample,
     upsert_bottomk_batch,
 )
 from tests.conftest import SF_SMALL
@@ -46,13 +48,12 @@ def _stage(spark, stream_dir, n_files=3):
 def test_stream_sample_equals_batch(spark, tmp_path):
     _stage(spark, tmp_path / "ev_stream")
     store = str(tmp_path / "bottomk")
-    q = stream_value_sample(
+    q = storeio.replay(
         spark.readStream.schema(EV_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(tmp_path / "ev_stream")),
-        store,
+        partial(upsert_bottomk_batch, store_path=store),
         str(tmp_path / "ckpt"),
-        available_now=True,
     )
     q.awaitTermination(120)
 

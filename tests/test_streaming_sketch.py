@@ -5,16 +5,18 @@ answer point queries with the batch operator's estimates."""
 
 from __future__ import annotations
 
+from functools import partial
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from projet_etl_spark.operators.sketches import q_token_freq_cms
+from projet_etl_spark.streaming import storeio
 from projet_etl_spark.streaming.sketch import (
     cms_of_batch,
     estimate_counts,
     read_cms,
-    stream_token_cms,
     upsert_cms_batch,
 )
 from tests.conftest import SF_SMALL
@@ -50,13 +52,12 @@ def _cells(df):
 def test_stream_cms_equals_batch_cells(spark, tmp_path):
     _stage(spark, tmp_path / "docs_stream")
     store = str(tmp_path / "cms")
-    q = stream_token_cms(
+    q = storeio.replay(
         spark.readStream.schema(DOC_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(tmp_path / "docs_stream")),
-        store,
+        partial(upsert_cms_batch, store_path=store),
         str(tmp_path / "ckpt"),
-        available_now=True,
     )
     q.awaitTermination()
     folded = _cells(read_cms(spark, store))
