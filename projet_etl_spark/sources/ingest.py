@@ -15,6 +15,10 @@ predicates (P4/P6) prune partitions instead of scanning everything.
 
 from __future__ import annotations
 
+import fcntl
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -97,7 +101,6 @@ def _probe_first_lines(
     probe sees exactly the files the executors will and works on any
     FS with a Hadoop connector (file:, hdfs:, s3a:, ...)."""
     import glob
-    import os
     import re
 
     if re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://", path) or path.startswith("file:"):
@@ -245,20 +248,11 @@ def read_orc(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     return spark.read.schema(schema).orc(path)
 
 
-# a swap lock fresher than this marks an IN-FLIGHT publish; the lock
-# is held only across swap_publish's two renames (microseconds), so
-# 60 s is orders of magnitude beyond any live rename window — a
-# fresher-than-this lock next to a missing live dir means the writer
-# is (or was moments ago) mid-swap, not crashed long ago
-SWAP_LOCK_STALE_SEC = 60.0
-
-
 class StoreWriterConflict(RuntimeError):
     """A second writer tried to mutate a store whose ``._writerlock``
     is held by a LIVE process — the single-writer assumption was
     about to be violated, so the late writer fails loudly instead of
-    interleaving renames with the owner (r11, verdict item 3: the
-    assumption is now checked, not documented)."""
+    interleaving renames with the owner."""
 
 
 def _local_host() -> str:
@@ -269,22 +263,14 @@ def _local_host() -> str:
 
 
 def _lock_ident(lock: str) -> tuple[str, int]:
-    """(hostname, pid) recorded in the lock file. Legacy bare-pid
-    content (pre-r13 locks, and the injected-fault tests' shorthand)
-    parses as a SAME-host lease — the only writers that could have
-    produced it ran this code on local storage. Unreadable/empty
-    reads as ("", 0), which no live writer can match."""
+    """(hostname, pid) recorded in the lock file. Only the conflict
+    message reads it; liveness is the kernel lock's, never this.
+    Unreadable or malformed content reads as ("", 0)."""
     try:
         with open(lock, encoding="utf-8") as fh:
-            raw = fh.read().strip()
-    except OSError:
-        return ("", 0)
-    host, sep, pid_s = raw.rpartition(":")
-    if not sep:
-        host, pid_s = _local_host(), raw
-    try:
-        return (host, int(pid_s or "0"))
-    except ValueError:
+            host, _, pid_s = fh.read().strip().rpartition(":")
+        return (host, int(pid_s))
+    except (OSError, ValueError):
         return ("", 0)
 
 
@@ -293,294 +279,90 @@ def _writer_lock_holder(lock: str) -> int:
     return _lock_ident(lock)[1]
 
 
-def _pid_alive(pid: int) -> bool | None:
-    """Liveness probe for a same-host lock holder (signal 0): True /
-    False, or ``None`` when liveness is UNOBSERVABLE (an os.kill
-    failure that asserts nothing about the pid — e.g. a PID
-    namespace that hides it). ``None`` hands the verdict to the
-    mtime lease (:data:`LEASE_TTL_SEC` via :func:`_holder_live`).
-
-    Only ever called for a SAME-host holder: os.kill probes the
-    LOCAL pid table, so a pid recorded by a writer on another host
-    asserts nothing here — ProcessLookupError against a foreign pid
-    would judge a LIVE remote writer dead and break its lease,
-    defeating mutual exclusion cross-host (r12 advisor, medium).
-    :func:`_holder_live` routes foreign-host locks straight to the
-    TTL lease without consulting this probe — at deployment on
-    shared storage that pair IS the lease service: the protocol
-    (owner-live -> conflict, owner-dead/expired -> break) is
-    unchanged; only the liveness oracle degrades from pid to TTL."""
-    import os
-
-    if pid <= 0:
-        return False
-    try:
-        os.kill(pid, 0)
-        return True
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True  # exists, owned by someone else
-    except OSError:
-        return None  # probe says nothing: fall back to the TTL lease
-
-
-# writer-lease TTL (r12, r11 verdict item 5): when pid liveness is
-# unobservable (same-host probe failure, or a FOREIGN-host lock), a
-# lock counts as LIVE while its mtime is fresher than this. Mutators
-# re-touch their lock at every fence() point AND a heartbeat thread
-# re-touches it throughout write_tmp (r12 advisor, medium — the
-# unbounded table-rewrite phase used to outlive the TTL silently), so
-# a healthy publish — however long write_tmp takes — keeps its lease
-# fresh, while a truly dead-but-unobservable holder can wedge a store
-# for at most this long. Deployment guidance: the TTL must exceed the
-# longest heartbeat gap (HEARTBEAT_FRACTION of the TTL by
-# construction) plus storage mtime-propagation lag — NOT the write
-# duration, which the heartbeat covers. Tunable per-deployment via
-# $SPARK_GRAFT_LEASE_TTL_SEC (r12 verdict item 6).
-LEASE_TTL_SEC = 300.0
-HEARTBEAT_FRACTION = 0.25  # heartbeat period = TTL / 4
-
-
-def _lease_ttl() -> float:
-    """The effective writer-lease TTL: $SPARK_GRAFT_LEASE_TTL_SEC
-    when set (per-deployment knob), else :data:`LEASE_TTL_SEC`."""
-    import os
-
-    raw = os.environ.get("SPARK_GRAFT_LEASE_TTL_SEC", "")
-    try:
-        ttl = float(raw)
-        return ttl if ttl > 0 else LEASE_TTL_SEC
-    except ValueError:
-        return LEASE_TTL_SEC
-
-
-def _holder_live(lock: str) -> bool:
-    """Is the writer holding ``lock`` live? Same-host pid probe when
-    observable; a FOREIGN-host lock (or an unobservable same-host
-    pid) is governed by the mtime lease: fresher than the TTL means
-    live. A vanished lock reads as not-live (the caller re-races
-    acquisition through the atomic link, so this cannot grant anyone
-    the store)."""
-    import os
-    import time
-
-    host, pid = _lock_ident(lock)
-    alive = _pid_alive(pid) if host == _local_host() else None
-    if alive is not None:
-        return alive
-    try:
-        return time.time() - os.stat(lock).st_mtime < _lease_ttl()
-    except OSError:
-        return False
-
-
 class _writer_lock:
-    """Mutual exclusion for every mutating storeio entrypoint
-    (``swap_publish``, ``compact``, ``recover_swap``): a pid lease
-    file beside the table. A lock whose holder is live raises
-    :class:`StoreWriterConflict` — including our OWN pid, which would
-    mean nested public mutators on one path (the internal
-    ``_recover_swap``/``_swap_publish`` variants exist so that cannot
-    happen legitimately). Dead/expired holders' locks are broken and
-    acquisition retried; the retry count is bounded so a pathological
-    create/break race cannot spin forever.
+    """Mutual exclusion for every store mutation (``swap_publish``,
+    ``compact``, ``recover_swap``, and the crashed-swap branch of
+    ``live_read_path``): an exclusive ``flock`` on
+    ``<store>._writerlock``. The kernel releases the lock when its
+    holder's process dies, so a held lock IS a live writer: there is
+    no lease to expire, refresh or break. A held lock raises
+    :class:`StoreWriterConflict` — including one held through another
+    open in our OWN process, which would mean nested public mutators
+    on one path (the internal ``_recover_swap``/``_swap_publish``
+    bodies exist so that cannot happen).
 
-    r12 (advisor, medium): the r11 O_CREAT|O_EXCL protocol had TOCTOU
-    races — (a) the pid was written only AFTER create, so a contender
-    reading in that window saw pid 0, judged the holder dead, and
-    removed a LIVE lock; (b) two contenders both observing a dead
-    holder could both os.remove(), the second unlink deleting the
-    first's freshly created lock; and __exit__ removed whatever file
-    was at the path. The protocol is now:
+    - ACQUIRE: open (create) the lock file and ``flock`` it
+      ``LOCK_EX | LOCK_NB``; keep the lock only if the path still
+      names the fd's inode — otherwise a releaser unlinked the file
+      between our open and our lock, so reopen. The ``hostname:pid``
+      body is written after locking, for the conflict message only.
+    - RELEASE: unlink the path only while it still names our inode,
+      then close the fd. A file left behind by a killed holder is
+      unlocked, so the next writer takes it over.
+    - FENCE: mutators call :meth:`fence` before each rename window; it
+      raises if the path no longer names our inode. The open fd keeps
+      our inode alive, so no successor file can reuse its number.
 
-    - ACQUIRE: hard-link a fully-written unique pid file onto the
-      lock path — content is atomically in place with creation
-      (there is never an empty-lock window) — then verify by inode
-      that the file at the lock path is ours (a contender acting on
-      a stale read could have buried it in between; if so, retry).
-    - BREAK: rename the dead lock to a unique grave first, so exactly
-      one breaker wins; re-check the BURIED file is still the dead
-      lease it judged, and if a live lock was stolen instead, restore
-      it with link (which cannot clobber a newer lock) — then unlink
-      only the grave.
-    - RELEASE / FENCE: act only while the inode at the lock path is
-      ours (``owns``); mutators call :meth:`fence` immediately before
-      each rename window, which both re-asserts ownership (raising
-      :class:`StoreWriterConflict` on a lost lease instead of
-      interleaving renames) and re-touches the mtime so a live
-      publish never expires its own TTL lease.
-    - HEARTBEAT (r13, r12 advisor medium): fence() alone runs only
-      before/after ``write_tmp``, so a table rewrite longer than the
-      TTL used to expire its own lease mid-write under the TTL
-      regime — a contender would break the lock and both writers
-      would target the same ``._compacting`` path. Mutators now wrap
-      the unbounded phase in :meth:`heartbeat`, a daemon thread that
-      re-touches the lock every ``HEARTBEAT_FRACTION * ttl`` while
-      the lease is still owned, making the docstring's "however long
-      write_tmp takes" claim true by construction.
-
-    Cross-host identity (r13, r12 advisor medium): the lock records
-    ``hostname:pid``. os.kill probes the LOCAL pid table only, so a
-    pid recorded on another host says nothing here — foreign-host
-    locks skip the pid probe entirely and are governed by the mtime
-    TTL lease (``_holder_live``), which is exactly the shared-storage
-    deployment mode the TTL was added for.
-
-    Residual (documented, not closable with POSIX primitives alone):
-    owns()-then-act is itself a stat/act pair, so a holder that
-    outlives its lease by LEASE_TTL_SEC under an UNOBSERVABLE pid can
-    race a breaker inside that microsecond window; with observable
-    pid liveness (this harness) a live holder is never judged dead
-    and the window is unreachable."""
-
-    _ATTEMPTS = 64
+    Scope: a POSIX store directory. On Linux NFS ``flock`` is emulated
+    with whole-file POSIX locks: exclusion then holds across hosts,
+    but two opens inside one process no longer exclude each other.
+    Object stores are out of scope, as the swap protocol already
+    relies on ``os.rename``."""
 
     def __init__(self, path: str) -> None:
-        import os
-
         self.lock = path.rstrip("/") + "._writerlock"
-        self._os = os
-        self._ident: tuple[int, int] | None = None  # our (st_dev, st_ino)
+        self._fd: int | None = None
 
     def owns(self) -> bool:
-        """Is the file at the lock path still OUR lease? Checked by
-        inode AND recorded (host, pid) — a filesystem may recycle the
-        inode of a removed lock for its replacement (tmpfs does,
-        observed in the r12 tests), so inode identity alone can alias
-        a successor lease to ours; no successor can carry our
-        host:pid."""
+        """Does the lock path still name the inode we hold locked?"""
         try:
-            st = self._os.stat(self.lock)
+            return self._fd is not None and os.path.samestat(
+                os.fstat(self._fd), os.stat(self.lock)
+            )
         except OSError:
             return False
-        return (
-            self._ident == (st.st_dev, st.st_ino)
-            and _lock_ident(self.lock) == (_local_host(), self._os.getpid())
-        )
 
     def fence(self) -> None:
-        """Assert the lease is still ours and refresh its mtime —
-        called by the mutating bodies immediately before each rename
-        window (the lost-lease equivalent of a fencing token)."""
+        """Assert the lock is still ours — called by the mutating
+        bodies immediately before each rename window."""
         if not self.owns():
             raise StoreWriterConflict(
-                f"writer lease {self.lock} was lost to another writer "
+                f"writer lock {self.lock} was removed or replaced "
                 f"mid-mutation"
             )
-        try:
-            self._os.utime(self.lock)
-        except OSError:
-            pass  # refresh is best-effort; ownership was just checked
-
-    def _break_dead_lock(self, attempt: int) -> None:
-        """Bury a dead/expired lock: rename-to-grave (one breaker
-        wins), verify the grave, unlink. Restores a live lock stolen
-        by a stale read (rename preserves mtime, so the TTL verdict
-        on the grave is the verdict on what we buried)."""
-        os = self._os
-        grave = f"{self.lock}.{os.getpid()}.{attempt}.grave"
-        try:
-            os.rename(self.lock, grave)
-        except OSError:
-            return  # another breaker won, or the lock vanished: retry
-        try:
-            if _holder_live(grave):
-                # stale read: we buried a lock that is LIVE (acquired
-                # between our liveness check and the rename) — put it
-                # back; link cannot clobber a newer lock, and the
-                # victim's own acquire-verify/fence covers that case
-                try:
-                    os.link(grave, self.lock)
-                except OSError:
-                    pass
-        finally:
-            try:
-                os.remove(grave)
-            except OSError:
-                pass
 
     def __enter__(self) -> "_writer_lock":
-        os = self._os
-        pid = os.getpid()
-        for attempt in range(self._ATTEMPTS):
-            tmp = f"{self.lock}.{pid}.{attempt}.tmp"
-            with open(tmp, "w", encoding="utf-8") as fh:
-                fh.write(f"{_local_host()}:{pid}")
+        while not self.owns():
+            self._close()
+            fd = os.open(self.lock, os.O_RDWR | os.O_CREAT, 0o644)
             try:
-                os.link(tmp, self.lock)
-            except FileExistsError:
-                os.remove(tmp)
-                if _holder_live(self.lock):
-                    holder = _writer_lock_holder(self.lock)
-                    raise StoreWriterConflict(
-                        f"store {self.lock[: -len('._writerlock')]} is "
-                        f"owned by live writer pid {holder}"
-                    )
-                self._break_dead_lock(attempt)
-                continue
-            except OSError:
-                os.remove(tmp)
-                raise
-            st = os.stat(tmp)  # the lock's inode, via our own name
-            os.remove(tmp)
-            ident = (st.st_dev, st.st_ino)
-            try:
-                st_lock = os.stat(self.lock)
-            except OSError:
-                continue  # buried by a stale-read breaker: re-race
-            if (st_lock.st_dev, st_lock.st_ino) != ident:
-                continue  # someone else owns the path now: re-race
-            self._ident = ident
-            return self
-        raise StoreWriterConflict(
-            f"could not acquire {self.lock} after {self._ATTEMPTS} attempts"
-        )
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except OSError as e:
+                os.close(fd)
+                if not isinstance(e, BlockingIOError):
+                    raise
+                raise StoreWriterConflict(
+                    f"store {self.lock[: -len('._writerlock')]} is "
+                    f"owned by live writer pid "
+                    f"{_writer_lock_holder(self.lock)}"
+                ) from None
+            self._fd = fd
+        os.ftruncate(self._fd, 0)
+        os.write(self._fd, f"{_local_host()}:{os.getpid()}".encode())
+        return self
 
     def __exit__(self, *exc) -> None:
-        if self.owns():  # never remove another writer's lease
+        if self.owns():  # never remove another writer's lock file
             try:
-                self._os.remove(self.lock)
+                os.remove(self.lock)
             except OSError:
                 pass
-        self._ident = None
+        self._close()
 
-    def heartbeat(self):
-        """Context manager that keeps the TTL lease fresh across an
-        UNBOUNDED phase (write_tmp's full table rewrite, compact's
-        full-table count): a daemon thread re-touches the lock every
-        ``HEARTBEAT_FRACTION * ttl`` seconds while we still own it
-        (r13, r12 advisor medium — fence() alone let a write longer
-        than the TTL expire its own lease mid-write). Stops touching
-        the instant ownership is lost — it must never refresh a lock
-        that now belongs to someone else."""
-        import contextlib
-        import threading
-
-        @contextlib.contextmanager
-        def _beat():
-            stop = threading.Event()
-
-            def tick() -> None:
-                while not stop.wait(_lease_ttl() * HEARTBEAT_FRACTION):
-                    if not self.owns():
-                        return
-                    try:
-                        self._os.utime(self.lock)
-                    except OSError:
-                        pass  # best-effort; fence() re-asserts after
-
-            t = threading.Thread(
-                target=tick, name="writer-lease-heartbeat", daemon=True
-            )
-            t.start()
-            try:
-                yield
-            finally:
-                stop.set()
-                t.join(timeout=5.0)
-
-        return _beat()
+    def _close(self) -> None:
+        if self._fd is not None:
+            os.close(self._fd)
+            self._fd = None
 
 
 def recover_swap(path: str) -> None:
@@ -590,38 +372,26 @@ def recover_swap(path: str) -> None:
     is a finished swap whose cleanup died — just clear it. Call
     before WRITING a table that may have a pending swap.
 
-    WRITE PATH ONLY (r10, verdict item 6): this mutates the table
-    directory unconditionally, which is safe for a writer (exactly
-    one driver owns a store's write path — the same assumption
-    Structured Streaming's checkpoint protocol imposes) but not for
-    readers racing a live compactor. Readers use ``live_read_path``,
-    which mutates nothing unless the swap artifacts are provably
-    stale (the ``._swaplock`` age gate).
-
-    Single-writer is ENFORCED (r11, verdict item 3): acquires the
-    ``._writerlock`` and raises :class:`StoreWriterConflict` if a
-    live process already owns the store. A path whose parent does
-    not exist has nothing to recover — returns without locking.
+    WRITE PATH: this mutates the table directory unconditionally,
+    under the ``._writerlock``; it raises :class:`StoreWriterConflict`
+    if a live process already owns the store. Readers use
+    ``live_read_path``, which mutates only when it can take the lock
+    itself. A path whose parent does not exist has nothing to
+    recover — returns without locking.
     """
-    import os
-
     if not os.path.isdir(os.path.dirname(path.rstrip("/")) or "."):
         return
     with _writer_lock(path) as lk:
         _recover_swap(path, lk)
 
 
-def _recover_swap(path: str, lk: "_writer_lock | None" = None) -> None:
-    """``recover_swap`` body — caller MUST hold the writer lock."""
-    import os
-    import shutil
-
-    if lk is not None:
-        lk.fence()
+def _recover_swap(path: str, lk: _writer_lock) -> None:
+    """``recover_swap`` body — caller MUST hold the writer lock. Also
+    clears a ``._swaplock`` marker left behind by older code."""
+    lk.fence()
     base = path.rstrip("/")
     aside = base + "._precompact"
     tmp = base + "._compacting"
-    lock = base + "._swaplock"
     if os.path.exists(aside):
         if os.path.exists(path):
             shutil.rmtree(aside)
@@ -630,7 +400,7 @@ def _recover_swap(path: str, lk: "_writer_lock | None" = None) -> None:
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
     try:
-        os.remove(lock)
+        os.remove(base + "._swaplock")
     except OSError:
         pass
 
@@ -639,51 +409,25 @@ def live_read_path(path: str) -> str:
     """Where a READER should read the table: ``path`` normally, the
     parked ``._precompact`` directory while a publish is in flight.
 
-    The read-path half of the swap protocol (r10, verdict item 6 —
-    the r9 reader ran ``recover_swap`` on every read, so a reader
-    racing a concurrent compactor could rename the parked aside back
-    between the publisher's two renames or delete its in-flight tmp).
-    This never touches ``._compacting`` (writer-owned garbage at
-    worst) and mutates only when the swap is provably DEAD:
-
-    - no aside -> ``path`` (the normal case).
-    - aside AND live dir -> ``path`` (a finished swap whose cleanup
-      died, or the instant before cleanup; the live dir is valid —
-      leave the aside for the next writer's ``recover_swap``).
-    - aside, no live dir, lock fresher than SWAP_LOCK_STALE_SEC ->
-      the writer is between its two renames RIGHT NOW: read the
-      parked bytes (they are the complete pre-publish store), touch
-      nothing.
-    - aside, no live dir, lock stale or absent -> a crashed swap:
-      restore the aside and clear the stale lock (the r8 guarantee —
-      a crashed swap must never read as a legitimately empty store).
-    - NEW (r11, verdict item 3): all of the above applies only when
-      no LIVE process holds the ``._writerlock``. A live owner means
-      the store is mid-mutation no matter how old the swap artifacts
-      look (a writer stalled past SWAP_LOCK_STALE_SEC between its
-      renames is slow, not dead) — the reader serves the parked
-      bytes and touches NOTHING that belongs to the owner.
+    - no aside, or aside AND live dir -> ``path``, touching nothing
+      (a finished swap whose cleanup died leaves the aside for the
+      next writer's ``recover_swap``).
+    - aside, no live dir (the layout between ``swap_publish``'s two
+      renames) -> ask the writer lock. Held: a publish is in flight,
+      so read the parked bytes (the complete pre-publish store) and
+      touch nothing that belongs to the owner. Acquired: no writer is
+      live, so the swap crashed — restore it under the lock and read
+      ``path`` (a crashed swap must never read as a legitimately
+      empty store).
     """
-    import os
-    import time
-
-    base = path.rstrip("/")
-    aside = base + "._precompact"
-    lock = base + "._swaplock"
+    aside = path.rstrip("/") + "._precompact"
     if not os.path.exists(aside) or os.path.exists(path):
         return path
-    if _holder_live(base + "._writerlock"):
-        return aside  # owned store: never mutate, read pre-publish bytes
     try:
-        if time.time() - os.stat(lock).st_mtime < SWAP_LOCK_STALE_SEC:
-            return aside
-    except OSError:
-        pass  # no lock: a pre-lock-era or long-dead swap
-    os.rename(aside, path)
-    try:
-        os.remove(lock)
-    except OSError:
-        pass
+        with _writer_lock(path) as lk:
+            _recover_swap(path, lk)
+    except StoreWriterConflict:
+        return aside
     return path
 
 
@@ -698,50 +442,28 @@ def swap_publish(path: str, write_tmp) -> None:
     swap can never be double-parked. ``write_tmp`` may lazily read
     from ``path`` — the source stays live until it returns.
 
-    The ``._swaplock`` marker brackets the rename window (touched
-    after ``write_tmp`` returns, removed after cleanup) so concurrent
-    READERS can tell an in-flight swap from a crashed one by the
-    lock's age (``live_read_path``) instead of assuming single-writer
-    ownership extends to them.
-
-    The ``._writerlock`` lease is held for the WHOLE publish —
+    The ``._writerlock`` is held for the WHOLE publish —
     ``write_tmp`` included — so a second writer or compactor racing
     this one fails with :class:`StoreWriterConflict` before touching
-    anything (r11, verdict item 3).
+    anything, and a reader that finds the table parked aside knows
+    from the held lock that the publish is in flight.
     """
-    import os
-
     os.makedirs(os.path.dirname(path.rstrip("/")) or ".", exist_ok=True)
     with _writer_lock(path) as lk:
         _swap_publish(path, write_tmp, lk)
 
 
-def _swap_publish(path: str, write_tmp, lk: "_writer_lock | None" = None) -> None:
+def _swap_publish(path: str, write_tmp, lk: _writer_lock) -> None:
     """``swap_publish`` body — caller MUST hold the writer lock."""
-    import os
-    import shutil
-
     base = path.rstrip("/")
     _recover_swap(path, lk)
     tmp = base + "._compacting"
     aside = base + "._precompact"
-    lock = base + "._swaplock"
-    if lk is not None:
-        # write_tmp is the unbounded phase (a full table rewrite):
-        # heartbeat the lease throughout (a rewrite longer than the
-        # TTL must not expire its own lease mid-write — r12 advisor),
-        # then re-assert ownership before the renames
-        with lk.heartbeat():
-            write_tmp(tmp)
-        lk.fence()
-    else:
-        write_tmp(tmp)
-    with open(lock, "w", encoding="utf-8") as fh:
-        fh.write(str(os.getpid()))
+    write_tmp(tmp)
+    lk.fence()
     os.rename(path, aside)
     os.rename(tmp, path)
     shutil.rmtree(aside)
-    os.remove(lock)
 
 
 def compact(
@@ -764,8 +486,7 @@ def compact(
     with _writer_lock(path) as lk:
         _recover_swap(path, lk)
         df = getattr(spark.read, fmt)(path)
-        with lk.heartbeat():  # full-table count: unbounded phase
-            n = df.count()
+        n = df.count()
         n_files = max(1, -(-n // target_rows_per_file))
         _swap_publish(
             path,

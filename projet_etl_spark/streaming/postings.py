@@ -106,8 +106,8 @@ def _read_compacted(spark: SparkSession, store_path: str) -> DataFrame:
     # of the compacted table parked aside; resolving here (the shared
     # read entry; _covered_batch resolves identically) restores or
     # serves it before the missing-path branch could misread "no
-    # compacted data yet" — without mutating under an IN-FLIGHT
-    # publisher (r10: live_read_path, not recover_swap, on reads).
+    # compacted data yet" — without mutating while a publisher holds
+    # the writer lock (live_read_path, not recover_swap, on reads).
     comp = live_read_path(os.path.join(store_path, "postings_compacted"))
     return read_store(
         spark,
@@ -137,8 +137,8 @@ def read_postings(
     # the live table is also swap-published (compaction's shrink step);
     # a crash between its two renames parks the only copy aside, and
     # reading the missing dir as "no data yet" would silently drop
-    # every uncovered batch from the union below (read-safe resolve,
-    # r10: never mutates under an in-flight publisher)
+    # every uncovered batch from the union below (read-safe resolve:
+    # never mutates while a publisher holds the writer lock)
     live_dir = live_read_path(os.path.join(store_path, "postings"))
     comp = _read_compacted(spark, store_path)
     if terms:
@@ -206,8 +206,8 @@ def compact_postings_store(spark: SparkSession, store_path: str) -> int:
     cov = _covered_batch(store_path)
     # recover the live dir BEFORE probing it: a parked-aside-only
     # state (crash between swap renames) must not read as "no
-    # postings yet" now that readers no longer restore as a side
-    # effect (live_read_path is non-mutating, r10)
+    # postings yet" — the existence probe below resolves no swap,
+    # and the compactor must not wait for a reader to restore it
     recover_swap(post_dir)
     if not os.path.exists(post_dir):
         return cov

@@ -49,16 +49,15 @@ keeps the newest partition verbatim; a replayed newest batch then
 rewrites exactly its own partition, idempotently, with zero
 double-count exposure.
 
-**Reads are safe against a concurrent compactor** (round-10, verdict
-item 6 — the round-9 layer assumed single-writer ownership extended
-to readers): ``read_store`` routes through ``live_read_path`` instead
-of running the mutating ``recover_swap``. A reader now never touches
-an in-flight ``._compacting`` directory and never renames the parked
-aside while the publisher's ``._swaplock`` is fresh — it simply reads
-the parked bytes (the complete pre-publish store) for the duration of
-the rename window. Mutation happens on the read path only when a swap
-is provably DEAD (aside with no live dir and a stale/absent lock),
-preserving the r8 guarantee that a crashed swap never reads as a
+**Reads are safe against a concurrent compactor**: ``read_store``
+routes through ``live_read_path`` instead of running the mutating
+``recover_swap``. A reader never touches an in-flight
+``._compacting`` directory. When it finds the table parked aside
+with no live directory, it asks the store's writer lock (a kernel
+``flock``, sources.ingest ``_writer_lock``): held means a publish is
+in flight, so it reads the parked bytes (the complete pre-publish
+store) and renames nothing; free means the swap crashed, so it
+restores the aside under the lock — a crashed swap never reads as a
 legitimately empty store. The single-writer assumption still applies
 to WRITERS (Structured Streaming's checkpoint protocol imposes it
 anyway); it no longer needs to cover readers.
@@ -119,9 +118,25 @@ def replay(
     input available now, in as many micro-batches as the source's
     per-trigger limit makes, then stops. ``body(batch_df, batch_id)``
     is typically a module's ``upsert_*_batch`` with its store paths
-    bound by ``functools.partial``."""
+    bound by ``functools.partial``.
+
+    Micro-batches run on the stream's own thread, which Spark puts in
+    a job group named for the run id. When the caller has set a job
+    group, ``body`` re-applies it there, so the batches' jobs count
+    under the caller's group (a traced span, a profiled query). So
+    ``StreamingQuery.stop()``, which cancels jobs by the run-id group,
+    would not cancel a running batch's jobs; the engine never stops a
+    replay, it awaits termination."""
+    sc = stream.sparkSession.sparkContext
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    desc = sc.getLocalProperty("spark.job.description")
+
+    def in_callers_group(batch_df: DataFrame, batch_id: int) -> None:
+        sc.setJobGroup(group, desc)
+        body(batch_df, batch_id)
+
     return (
-        stream.writeStream.foreachBatch(body)
+        stream.writeStream.foreachBatch(body if group is None else in_callers_group)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
@@ -148,17 +163,15 @@ def read_store(
     """Read a per-batch parquet store, or an empty frame when the
     store legitimately has no data yet. Broken stores raise.
 
-    Resolves an interrupted or in-flight compaction swap first
-    (round-8 recovery, round-10 concurrency): a crash between
-    swap_publish's park and publish renames leaves the data parked
-    aside with no live directory — without resolving that, the window
-    read as "legitimately empty" and a ranking served from it
-    silently lost the whole store (the exact silent-loss class this
-    module exists to prevent). live_read_path restores a provably
-    DEAD swap, serves the parked bytes through a LIVE one (fresh
-    ``._swaplock``), and mutates nothing otherwise — so readers no
-    longer race a concurrent compactor (module docstring). It is a
-    no-op for stores with no pending swap."""
+    Resolves an interrupted or in-flight compaction swap first: a
+    crash between swap_publish's park and publish renames leaves the
+    data parked aside with no live directory, which would otherwise
+    read as "legitimately empty" and silently lose the whole store.
+    live_read_path serves the parked bytes while the store's writer
+    lock is held (a publish in flight), restores the swap under that
+    lock when it is free (the swap crashed), and touches nothing when
+    no swap is pending — the common case costs two ``exists`` checks.
+    """
     from projet_etl_spark.sources.ingest import live_read_path
 
     path = live_read_path(path)

@@ -1,11 +1,15 @@
 from __future__ import annotations
 
+import contextlib
+import errno
 import os
+import subprocess
 import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from projet_etl_spark.session import get_spark  # noqa: E402
 
@@ -16,6 +20,40 @@ TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
 ).split()
+
+
+def unobservable_kill(pid, sig):
+    """An ``os.kill`` stand-in that asserts nothing about the pid (the
+    PID-namespace case a pid probe cannot see through)."""
+    raise OSError(errno.EINVAL, "pid liveness unobservable")
+
+
+@contextlib.contextmanager
+def writer_lock_holder(path: str):
+    """A live writer in another process: a child that holds
+    ``path``'s ``_writer_lock`` from entry until this context exits
+    (it closes the child's stdin; the child then releases the lock
+    as any writer does). Yields the child's ``Popen``."""
+    script = (
+        f"import sys; sys.path.insert(0, {REPO_ROOT!r})\n"
+        "from projet_etl_spark.sources import ingest\n"
+        f"with ingest._writer_lock({path!r}):\n"
+        "    print('held', flush=True)\n"
+        "    sys.stdin.read()\n"
+    )
+    proc = subprocess.Popen(
+        [sys.executable, "-c", script],
+        stdin=subprocess.PIPE,
+        stdout=subprocess.PIPE,
+        text=True,
+    )
+    try:
+        assert proc.stdout.readline() == "held\n"
+        yield proc
+    finally:
+        proc.stdin.close()
+        proc.wait(timeout=60)
+        proc.stdout.close()
 
 
 @pytest.fixture(scope="session")

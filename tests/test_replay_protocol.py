@@ -1,8 +1,9 @@
 """The one replay protocol behind every streaming store: the shared
 builder hands micro-batch k exactly staged slice k in key order,
 deletes the chunks once the stream has drained, and reuses the store
-on a marker hit; and ``foreachBatch`` is written in one module only,
-so a new store cannot grow its own copy of the protocol."""
+on a marker hit; the micro-batches' jobs run in the caller's job
+group; and ``foreachBatch`` is written in one module only, so a new
+store cannot grow its own copy of the protocol."""
 
 from __future__ import annotations
 
@@ -67,3 +68,22 @@ def test_foreach_batch_lives_only_in_storeio():
         if "foreachBatch(" in p.read_text(encoding="utf-8")
     )
     assert homes == ["streaming/storeio.py"]
+
+
+def test_replayed_batches_run_in_the_callers_job_group(spark, tmp_path):
+    chunks = str(tmp_path / "chunks")
+    storeio.stage_chunks(pa.table({"k": pa.array(range(8), pa.int64())}), ["k"], chunks)
+    stream = (
+        spark.readStream.schema("k long").option("maxFilesPerTrigger", 1).parquet(chunks)
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("replay-caller", "replay-caller")
+    try:
+        storeio.replay(
+            stream, lambda df, _: df.count(), str(tmp_path / "ckpt")
+        ).awaitTermination()
+        jobs = sc.statusTracker().getJobIdsForGroup("replay-caller")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # one count per micro-batch at least, all on the stream's thread
+    assert len(jobs) >= storeio.N_CHUNKS

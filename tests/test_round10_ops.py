@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 import pytest
 
@@ -107,8 +106,8 @@ def test_driver_prefix_is_generated_by_rotation_rule():
 #
 # r9's read path ran the MUTATING recover_swap on every read, which is
 # only safe under a single-writer assumption readers shouldn't need.
-# live_read_path mutates nothing while a publish is provably in
-# flight (fresh ._swaplock): it serves the parked bytes instead.
+# live_read_path mutates nothing while a publish is in flight (the
+# publisher holds the store's writer lock): it serves the parked bytes.
 
 
 def _make_store(spark, tmp_path, name):
@@ -127,39 +126,38 @@ def _read_rows(spark, store):
 
 
 def test_reader_serves_parked_bytes_under_inflight_swap(spark, tmp_path):
-    """Mid-swap state with a FRESH lock (the publisher is between its
-    two renames): the reader must return the full parked store and
-    must not touch the publisher's artifacts."""
+    """Mid-swap state while the publisher holds the writer lock (it is
+    between its two renames): the reader must return the full parked
+    store and must not touch the publisher's artifacts."""
+    from projet_etl_spark.sources.ingest import _writer_lock
+
     store = _make_store(spark, tmp_path, "swap_inflight")
     os.rename(store, store + "._precompact")
-    with open(store + "._swaplock", "w", encoding="utf-8") as fh:
-        fh.write("4242")
-
-    assert _read_rows(spark, store) == {(1, 10), (2, 20)}
-    # no mutation: the swap is still exactly as the publisher left it
-    assert os.path.exists(store + "._precompact")
-    assert os.path.exists(store + "._swaplock")
-    assert not os.path.exists(store)
+    with _writer_lock(store):  # the in-flight publisher
+        assert _read_rows(spark, store) == {(1, 10), (2, 20)}
+        # no mutation: the swap is still exactly as the publisher left it
+        assert os.path.exists(store + "._precompact")
+        assert os.path.exists(store + "._writerlock")
+        assert not os.path.exists(store)
 
 
 def test_reader_recovers_stale_swap(spark, tmp_path):
-    """Mid-swap state whose lock is STALE (crashed publisher): the r8
+    """Mid-swap state left by a crashed publisher (no writer holds the
+    lock), with the ``._swaplock`` marker older code wrote: the r8
     guarantee holds — the reader restores the parked store instead of
-    reading it as legitimately empty, and clears the dead lock."""
-    from projet_etl_spark.sources.ingest import SWAP_LOCK_STALE_SEC
-
+    reading it as legitimately empty, and clears the dead marker. The
+    marker's age no longer matters; only the writer lock does."""
     store = _make_store(spark, tmp_path, "swap_stale")
     os.rename(store, store + "._precompact")
     lock = store + "._swaplock"
     with open(lock, "w", encoding="utf-8") as fh:
         fh.write("4242")
-    old = time.time() - (SWAP_LOCK_STALE_SEC + 60)
-    os.utime(lock, (old, old))
 
     assert _read_rows(spark, store) == {(1, 10), (2, 20)}
     assert os.path.exists(store)
     assert not os.path.exists(store + "._precompact")
     assert not os.path.exists(lock)
+    assert not os.path.exists(store + "._writerlock")
 
 
 def test_reader_recovers_lockless_parked_store(spark, tmp_path):

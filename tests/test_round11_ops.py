@@ -451,8 +451,10 @@ def _mk_store(spark, tmp_path, name="store"):
 
 
 def test_live_writer_blocks_second_mutator(spark, tmp_path):
-    """Every mutating entrypoint fails loudly while a LIVE process
-    (here: ourselves, via an injected lock file) owns the store."""
+    """Every mutating entrypoint fails loudly while a LIVE writer (here:
+    another open of the lock in our own process, the nested/second
+    writer case the lock exists to kill) owns the store, and leaves
+    the owner's lock in place."""
     import os
 
     import pytest as _pytest
@@ -460,11 +462,7 @@ def test_live_writer_blocks_second_mutator(spark, tmp_path):
     from projet_etl_spark.sources import ingest
 
     p = _mk_store(spark, tmp_path)
-    with open(p + "._writerlock", "w", encoding="utf-8") as fh:
-        fh.write(str(os.getpid()))  # a live holder that is not "us
-        # holding it through the context manager" — exactly the
-        # nested/second-writer case the lock exists to kill
-    try:
+    with ingest._writer_lock(p) as owner:
         for fn in (
             lambda: ingest.recover_swap(p),
             lambda: ingest.swap_publish(p, lambda t: os.makedirs(t)),
@@ -472,8 +470,8 @@ def test_live_writer_blocks_second_mutator(spark, tmp_path):
         ):
             with _pytest.raises(ingest.StoreWriterConflict):
                 fn()
-    finally:
-        os.remove(p + "._writerlock")
+            assert owner.owns()
+    assert not os.path.exists(p + "._writerlock")
 
 
 def test_dead_writer_lock_is_broken_and_write_proceeds(spark, tmp_path):
@@ -495,26 +493,26 @@ def test_dead_writer_lock_is_broken_and_write_proceeds(spark, tmp_path):
 
 
 def test_reader_never_mutates_an_owned_store(spark, tmp_path):
-    """Crashed-swap layout (aside parked, live dir gone, swap lock
-    STALE) plus a LIVE writer lock: the reader must serve the parked
-    bytes and rename nothing — a writer stalled past the swap-lock
-    age gate is slow, not dead. Once the owner is gone, the same
-    reader restores the aside (the r8 guarantee)."""
+    """Crashed-swap layout (aside parked, live dir gone, no swap
+    marker) plus a LIVE writer in another process: the reader must
+    serve the parked bytes and rename nothing — a writer stalled
+    between its renames is slow, not dead. Once the owner is gone,
+    the same reader restores the aside (the r8 guarantee)."""
     import os
 
     from projet_etl_spark.sources import ingest
+    from tests.conftest import writer_lock_holder
 
     p = _mk_store(spark, tmp_path)
     aside = p + "._precompact"
     os.rename(p, aside)  # crash between the two publish renames
-    with open(p + "._writerlock", "w", encoding="utf-8") as fh:
-        fh.write(str(os.getpid()))  # owner is alive (us)
-    # no ._swaplock at all -> the pre-r11 reader would have mutated
-    assert ingest.live_read_path(p) == aside
-    assert os.path.exists(aside) and not os.path.exists(p)
-    os.remove(p + "._writerlock")  # owner releases (or dies)
+    with writer_lock_holder(p):  # owner is alive
+        assert ingest.live_read_path(p) == aside
+        assert os.path.exists(aside) and not os.path.exists(p)
+    # owner released
     assert ingest.live_read_path(p) == p
     assert os.path.exists(p) and not os.path.exists(aside)
+    assert not os.path.exists(p + "._writerlock")
 
 
 def test_compactor_racing_publish_conflicts_inside_window(spark, tmp_path):

@@ -1,8 +1,9 @@
 """Round-12 tests: the PSL-lite growth grid (r11 verdict item 6), the
-canonical-url left-boundary fix (r11 advisor), the writer-lease
-TOCTOU rework + TTL lease (r11 advisor medium, verdict item 5), the
-deployment-threshold embedding-dedup regime (verdict item 2), and the
-URL-frontier store (verdict item 4)."""
+canonical-url left-boundary fix (r11 advisor), the writer lock's
+exclusion and release safety (an ``flock`` on ``<store>._writerlock``
+since the pid/TTL lease was retired), the deployment-threshold
+embedding-dedup regime (verdict item 2), and the URL-frontier store
+(verdict item 4)."""
 
 from __future__ import annotations
 
@@ -11,7 +12,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMALL
+from tests.conftest import (
+    REPO_ROOT,
+    SF_SMALL,
+    unobservable_kill,
+    writer_lock_holder,
+)
 
 # ---------------------------------------------------------------
 # public-suffix-lite growth (r11 verdict item 6): the grid test is
@@ -160,7 +166,7 @@ def test_canonical_url_idempotent_on_survivors(spark, query):
 
 
 # ---------------------------------------------------------------
-# writer-lease rework (r11 advisor medium + verdict item 5)
+# writer lock: exclusion, release and fencing
 # ---------------------------------------------------------------
 
 
@@ -171,14 +177,20 @@ def _mk_store(spark, tmp_path, name="store"):
 
 
 def test_lock_content_is_atomic_with_creation(tmp_path):
-    """The pid-0 window is structurally gone: the instant the lock
-    path exists, it carries the holder's pid (link-from-written-tmp
-    acquire)."""
+    """The holder's ``hostname:pid`` body is written after locking, so
+    a contender may read an empty file — harmless, because liveness
+    is the kernel lock, never the content: an empty body still
+    refuses the contender."""
     from projet_etl_spark.sources import ingest
 
     p = str(tmp_path / "t")
     with ingest._writer_lock(p) as lk:
         assert ingest._writer_lock_holder(lk.lock) == os.getpid()
+        assert lk.owns()
+        os.truncate(lk.lock, 0)  # the window before the body lands
+        with pytest.raises(ingest.StoreWriterConflict):
+            with ingest._writer_lock(p):
+                pass
         assert lk.owns()
     assert not os.path.exists(p + "._writerlock")
 
@@ -220,51 +232,52 @@ def test_fence_raises_on_lost_lease(tmp_path):
 
 
 def test_breaker_restores_live_lock_seen_through_stale_read(tmp_path):
-    """The advisor's double-unlink arm: a contender that judged the
-    holder dead from a STALE read must not destroy a live lock — the
-    grave re-check restores it."""
+    """A contender acting on a stale "dead" read can no longer destroy
+    a live lock: there is no breaker, a refused contender leaves the
+    holder's file in place, and releasing without holding touches
+    nothing."""
     from projet_etl_spark.sources import ingest
 
     p = str(tmp_path / "t")
-    lock = p + "._writerlock"
-    with open(lock, "w", encoding="utf-8") as fh:
-        fh.write(str(os.getpid()))  # live holder
-    contender = ingest._writer_lock(p)
-    contender._break_dead_lock(0)  # acting on a stale "dead" verdict
-    assert os.path.exists(lock)
-    assert ingest._writer_lock_holder(lock) == os.getpid()
-    os.remove(lock)
+    with ingest._writer_lock(p) as holder:
+        contender = ingest._writer_lock(p)
+        with pytest.raises(ingest.StoreWriterConflict):
+            contender.__enter__()
+        contender.__exit__(None, None, None)
+        assert holder.owns()
+        assert ingest._writer_lock_holder(holder.lock) == os.getpid()
+    assert not os.path.exists(p + "._writerlock")
 
 
 def test_unobservable_pid_fresh_lease_conflicts(tmp_path, monkeypatch):
-    """TTL lease (verdict item 5), live half: when pid liveness is
-    unobservable (the unkillable-pid simulation), a FRESH lock is a
-    live lease — the second writer must conflict, not break."""
+    """A live holder in another process whose pid cannot be probed
+    still owns the store: liveness is the kernel lock, so the second
+    writer conflicts and the holder's file is untouched."""
     from projet_etl_spark.sources import ingest
 
-    monkeypatch.setattr(ingest, "_pid_alive", lambda pid: None)
     p = str(tmp_path / "t")
     lock = p + "._writerlock"
-    with open(lock, "w", encoding="utf-8") as fh:
-        fh.write("12345")
-    with pytest.raises(ingest.StoreWriterConflict):
-        with ingest._writer_lock(p):
-            pass
-    assert os.path.exists(lock)  # untouched
+    with writer_lock_holder(p):
+        monkeypatch.setattr(os, "kill", unobservable_kill)
+        ino = os.stat(lock).st_ino
+        with pytest.raises(ingest.StoreWriterConflict):
+            with ingest._writer_lock(p):
+                pass
+        assert os.stat(lock).st_ino == ino  # untouched
 
 
 def test_unobservable_pid_expired_lease_breaks(tmp_path, monkeypatch):
-    """TTL lease, dead half: an unobservable holder whose lease aged
-    past LEASE_TTL_SEC is expired — the next writer breaks it and
-    acquires."""
+    """A lock file nobody holds (an old lease naming some pid, aged
+    long past any TTL) does not wedge the store, whatever a pid probe
+    says: the next writer takes it over at once."""
     from projet_etl_spark.sources import ingest
 
-    monkeypatch.setattr(ingest, "_pid_alive", lambda pid: None)
+    monkeypatch.setattr(os, "kill", unobservable_kill)
     p = str(tmp_path / "t")
     lock = p + "._writerlock"
     with open(lock, "w", encoding="utf-8") as fh:
         fh.write("12345")
-    old = os.path.getmtime(lock) - ingest.LEASE_TTL_SEC - 10
+    old = os.path.getmtime(lock) - 3600
     os.utime(lock, (old, old))
     with ingest._writer_lock(p) as lk:
         assert ingest._writer_lock_holder(lock) == os.getpid()
@@ -273,19 +286,18 @@ def test_unobservable_pid_expired_lease_breaks(tmp_path, monkeypatch):
 
 
 def test_unobservable_pid_reader_serves_parked_bytes(spark, tmp_path, monkeypatch):
-    """live_read_path honors the TTL lease too: an unobservable but
-    FRESH writer lease means mid-mutation — the reader serves the
-    parked aside and mutates nothing."""
+    """live_read_path asks the same lock: a live holder in another
+    process whose pid cannot be probed means mid-mutation — the
+    reader serves the parked aside and mutates nothing."""
     from projet_etl_spark.sources import ingest
 
-    monkeypatch.setattr(ingest, "_pid_alive", lambda pid: None)
     p = _mk_store(spark, tmp_path, "r")
     aside = p + "._precompact"
     os.rename(p, aside)  # a publish parked the store and is mid-swap
-    with open(p + "._writerlock", "w", encoding="utf-8") as fh:
-        fh.write("12345")
-    assert ingest.live_read_path(p) == aside
-    assert os.path.exists(aside) and not os.path.exists(p)
+    with writer_lock_holder(p):
+        monkeypatch.setattr(os, "kill", unobservable_kill)
+        assert ingest.live_read_path(p) == aside
+        assert os.path.exists(aside) and not os.path.exists(p)
 
 
 def test_swap_publish_fences_under_lease(spark, tmp_path):
@@ -626,45 +638,52 @@ def test_canonical_url_seeded_fuzz_cross_engine(spark):
 
 
 def test_writer_lock_mutual_exclusion_under_contention(tmp_path):
-    """Real concurrency witness for the r12 protocol: 8 processes
-    each acquire/release the same lock 5 times with a crash-free
-    critical section that detects any overlap (a marker file that
-    must never exist on entry). The TOCTOU classes the advisor named
-    — empty-lock window, double-break, foreign release — all
-    manifest as two holders at once, which this catches as a torn
-    marker."""
+    """Real concurrency witness: 8 processes each acquire/release the
+    same lock 5 times around a critical section that detects any
+    overlap (a marker file that must not exist on entry and must
+    still exist at exit). Each child reports its overlaps and its
+    starved rounds (2000 refused attempts in a row) as one JSON line,
+    so a failure names the child and the kind."""
+    import json
     import subprocess
     import sys
     import textwrap
 
     p = str(tmp_path / "t")
     script = textwrap.dedent(f"""
-        import os, sys, time
-        sys.path.insert(0, "/root/repo")
+        import json, os, sys, time
+        sys.path.insert(0, {REPO_ROOT!r})
         from projet_etl_spark.sources import ingest
         path = {p!r}
         marker = path + ".inside"
-        errors = 0
+        overlaps = starved = 0
         for i in range(5):
             for attempt in range(2000):
                 try:
                     with ingest._writer_lock(path):
                         if os.path.exists(marker):
-                            errors += 1  # overlap: two holders
+                            overlaps += 1  # another holder is inside
                         open(marker, "w").close()
                         time.sleep(0.002)
-                        os.remove(marker)
+                        try:
+                            os.remove(marker)
+                        except FileNotFoundError:
+                            overlaps += 1  # another holder removed it
                     break
                 except ingest.StoreWriterConflict:
                     time.sleep(0.001)
             else:
-                errors += 100  # starved: never acquired
-        sys.exit(errors)
+                starved += 1  # never acquired this round
+        print(json.dumps({{"overlaps": overlaps, "starved": starved}}))
     """)
     procs = [
-        subprocess.Popen([sys.executable, "-c", script])
+        subprocess.Popen([sys.executable, "-c", script], stdout=subprocess.PIPE, text=True)
         for _ in range(8)
     ]
-    codes = [pr.wait() for pr in procs]
-    assert codes == [0] * 8, f"mutual exclusion violated/starved: {codes}"
+    outs = [pr.communicate(timeout=600)[0] for pr in procs]
+    for i, (pr, out) in enumerate(zip(procs, outs)):
+        assert pr.returncode == 0, f"child {i} crashed with exit {pr.returncode}"
+        report = json.loads(out.strip().splitlines()[-1])
+        assert report["overlaps"] == 0, f"child {i}: two holders at once: {report}"
+        assert report["starved"] == 0, f"child {i}: starved: {report}"
     assert not os.path.exists(p + "._writerlock")  # all released

@@ -1,16 +1,20 @@
-"""Round-13 tests: cross-host writer-lease identity, the write_tmp
-heartbeat, the TTL env knob (r12 advisor mediums + verdict item 6),
-store compaction for the frontier/embdedup stores (verdict item 3),
-the storeio-disciplined embdedup history probe (item 4), and the
-wide-band RPHI geometry the staircase knob prescribes (item 2).
+"""Round-13 tests: the writer lock's host:pid record and its
+independence from any clock, pid probe or heartbeat (the lock is an
+``flock`` since the pid/TTL lease was retired), store compaction for
+the frontier/embdedup stores (verdict item 3), the storeio-disciplined
+embdedup history probe (item 4), and the wide-band RPHI geometry the
+staircase knob prescribes (item 2).
 """
 
 from __future__ import annotations
 
 import os
+import threading
 import time
 
 import pytest
+
+from tests.conftest import unobservable_kill, writer_lock_holder
 
 
 def _mk_store(spark, tmp_path, name="store"):
@@ -20,7 +24,7 @@ def _mk_store(spark, tmp_path, name="store"):
 
 
 # ---------------------------------------------------------------
-# cross-host lease identity (r12 advisor, medium 1)
+# the lock's host:pid record (read by the conflict message only)
 # ---------------------------------------------------------------
 
 
@@ -38,140 +42,169 @@ def test_lock_records_hostname_and_pid(tmp_path):
 
 
 def test_legacy_bare_pid_lock_parses_as_same_host(tmp_path):
-    from projet_etl_spark.sources import ingest
-
-    lock = str(tmp_path / "t._writerlock")
-    with open(lock, "w", encoding="utf-8") as fh:
-        fh.write("12345")
-    assert ingest._lock_ident(lock) == (ingest._local_host(), 12345)
-
-
-def test_foreign_host_live_pid_is_not_judged_by_local_pid_table(tmp_path):
-    """The advisor's cross-host arm: a lock recorded on ANOTHER host
-    must be governed by the TTL lease, not by probing the LOCAL pid
-    table. A fresh foreign lock whose pid does not exist locally used
-    to be judged dead (ProcessLookupError -> break) — it must now
-    CONFLICT while fresh."""
+    """A bare-pid lock file left by older code — here naming our own
+    live pid — is a file nobody holds locked: it does not block, and
+    the next writer takes it over with a ``hostname:pid`` record."""
     from projet_etl_spark.sources import ingest
 
     p = str(tmp_path / "t")
     lock = p + "._writerlock"
-    # a pid that almost certainly does not exist in the local table
     with open(lock, "w", encoding="utf-8") as fh:
-        fh.write("not-this-host:999999999")
-    assert ingest._holder_live(lock)  # fresh mtime -> live via TTL
-    with pytest.raises(ingest.StoreWriterConflict):
-        with ingest._writer_lock(p):
-            pass
-    assert os.path.exists(lock)  # the remote writer's lease survived
+        fh.write(str(os.getpid()))
+    with ingest._writer_lock(p) as lk:
+        assert lk.owns()
+        assert ingest._lock_ident(lock) == (ingest._local_host(), os.getpid())
+    assert not os.path.exists(lock)
+
+
+def test_foreign_host_live_pid_is_not_judged_by_local_pid_table(tmp_path):
+    """A live holder whose record names ANOTHER host and a pid absent
+    from the local table is still live: liveness is the kernel lock,
+    never the record, so the contender conflicts and the holder's
+    file survives."""
+    from projet_etl_spark.sources import ingest
+
+    p = str(tmp_path / "t")
+    lock = p + "._writerlock"
+    with writer_lock_holder(p):
+        with open(lock, "w", encoding="utf-8") as fh:
+            fh.write("not-this-host:999999999")
+        with pytest.raises(ingest.StoreWriterConflict):
+            with ingest._writer_lock(p):
+                pass
+        assert ingest._lock_ident(lock) == ("not-this-host", 999999999)
 
 
 def test_foreign_host_expired_lease_breaks(tmp_path):
-    """TTL half for foreign locks: aged past the TTL, a foreign-host
-    lease is expired and the next writer breaks it — even when the
-    recorded pid IS live locally (pid tables are per-host; a local
-    process with a coinciding pid must not keep a dead remote lease
-    alive)."""
+    """A foreign-host lock file nobody holds — even one naming a pid
+    that IS live locally, aged long past any lease — does not wedge
+    the store: the next writer takes it over."""
     from projet_etl_spark.sources import ingest
 
     p = str(tmp_path / "t")
     lock = p + "._writerlock"
     with open(lock, "w", encoding="utf-8") as fh:
         fh.write(f"not-this-host:{os.getpid()}")  # OUR live pid, wrong host
-    old = os.path.getmtime(lock) - ingest.LEASE_TTL_SEC - 10
+    old = os.path.getmtime(lock) - 3600
     os.utime(lock, (old, old))
-    assert not ingest._holder_live(lock)
     with ingest._writer_lock(p) as lk:
         assert lk.owns()
     assert not os.path.exists(lock)
 
 
 # ---------------------------------------------------------------
-# TTL env knob (r12 verdict item 6) + write_tmp heartbeat (medium 2)
+# no clock: no TTL knob, no heartbeat, no pid probe
 # ---------------------------------------------------------------
 
 
-def test_lease_ttl_env_knob(monkeypatch):
+def test_lease_ttl_env_knob(tmp_path, monkeypatch):
+    """The lease TTL knob is gone: ``$SPARK_GRAFT_LEASE_TTL_SEC``,
+    whatever its value, neither expires a live holder nor exists as
+    an engine setting."""
     from projet_etl_spark.sources import ingest
 
-    monkeypatch.delenv("SPARK_GRAFT_LEASE_TTL_SEC", raising=False)
-    assert ingest._lease_ttl() == ingest.LEASE_TTL_SEC
-    monkeypatch.setenv("SPARK_GRAFT_LEASE_TTL_SEC", "0.5")
-    assert ingest._lease_ttl() == 0.5
-    monkeypatch.setenv("SPARK_GRAFT_LEASE_TTL_SEC", "bogus")
-    assert ingest._lease_ttl() == ingest.LEASE_TTL_SEC
-    monkeypatch.setenv("SPARK_GRAFT_LEASE_TTL_SEC", "-3")
-    assert ingest._lease_ttl() == ingest.LEASE_TTL_SEC
-
-
-def test_short_ttl_breaks_wedged_holder_on_schedule(tmp_path, monkeypatch):
-    """A wedged unobservable holder is broken after the CONFIGURED
-    TTL, not the default: with a 0.2 s lease, a 0.4 s-old lock falls
-    to the next writer."""
-    from projet_etl_spark.sources import ingest
-
-    monkeypatch.setattr(ingest, "_pid_alive", lambda pid: None)
-    monkeypatch.setenv("SPARK_GRAFT_LEASE_TTL_SEC", "0.2")
     p = str(tmp_path / "t")
-    lock = p + "._writerlock"
-    with open(lock, "w", encoding="utf-8") as fh:
-        fh.write("12345")
-    assert ingest._holder_live(lock)  # fresh: still live
-    time.sleep(0.4)
-    assert not ingest._holder_live(lock)  # expired on the knob's clock
     with ingest._writer_lock(p) as lk:
+        for raw in ("0.001", "bogus", "-3"):
+            monkeypatch.setenv("SPARK_GRAFT_LEASE_TTL_SEC", raw)
+            time.sleep(0.01)
+            with pytest.raises(ingest.StoreWriterConflict):
+                with ingest._writer_lock(p):
+                    pass
+            assert lk.owns()
+    for name in ("LEASE_TTL_SEC", "HEARTBEAT_FRACTION", "_lease_ttl"):
+        assert not hasattr(ingest, name)
+
+
+def test_short_ttl_breaks_wedged_holder_on_schedule(tmp_path):
+    """A SIGKILLed holder frees the store immediately: the kernel
+    drops its lock with the process, so no schedule is involved and
+    the file it leaves behind is taken over at once."""
+    from projet_etl_spark.sources import ingest
+
+    p = str(tmp_path / "t")
+    with writer_lock_holder(p) as holder:
+        holder.kill()
+        holder.wait()
+        assert os.path.exists(p + "._writerlock")  # left behind
+        t0 = time.monotonic()
+        with ingest._writer_lock(p) as lk:
+            assert lk.owns()
+        assert time.monotonic() - t0 < 1.0
+    assert not os.path.exists(p + "._writerlock")
+
+
+def test_live_holder_is_never_broken_by_the_clock(tmp_path, monkeypatch):
+    """A live holder whose pid cannot be probed, holding well past a
+    0.2 s lease, is never broken: every attempt for 0.8 s is refused,
+    and once the holder exits the next attempt succeeds at once."""
+    from projet_etl_spark.sources import ingest
+
+    p = str(tmp_path / "t")
+    monkeypatch.setenv("SPARK_GRAFT_LEASE_TTL_SEC", "0.2")
+    with writer_lock_holder(p):
+        monkeypatch.setattr(os, "kill", unobservable_kill)
+        t0 = time.monotonic()
+        while time.monotonic() - t0 < 0.8:
+            with pytest.raises(ingest.StoreWriterConflict):
+                with ingest._writer_lock(p):
+                    pass
+            time.sleep(0.02)
+    with ingest._writer_lock(p) as lk:  # the holder has exited
         assert lk.owns()
 
 
 def test_heartbeat_keeps_long_write_tmp_alive(spark, tmp_path, monkeypatch):
-    """The advisor's medium 2: a publish whose write_tmp exceeds the
-    TTL must keep its lease fresh throughout (heartbeat), so a
-    contender mid-write CONFLICTS instead of breaking the lock and
-    double-writing ._compacting."""
+    """A publish whose write_tmp outlasts any short lease keeps
+    exclusion with no heartbeat: the lock starts no thread, and a
+    contender mid-write, with pid probes unobservable and a 0.4 s
+    lease knob set, conflicts instead of double-writing
+    ._compacting."""
     from projet_etl_spark.sources import ingest
 
-    monkeypatch.setattr(ingest, "_pid_alive", lambda pid: None)
+    monkeypatch.setattr(os, "kill", unobservable_kill)
     monkeypatch.setenv("SPARK_GRAFT_LEASE_TTL_SEC", "0.4")
     p = _mk_store(spark, tmp_path, "hb")
     lock = p + "._writerlock"
+    threads = threading.active_count()
     observed = {}
 
     def write_tmp(tmp):
-        # sleep well past the TTL: without the heartbeat the lease
-        # would expire mid-write and a contender would break it
         time.sleep(1.2)
-        observed["live_mid_write"] = ingest._holder_live(lock)
+        observed["threads_mid_write"] = threading.active_count()
         with pytest.raises(ingest.StoreWriterConflict):
             with ingest._writer_lock(p):
                 pass
         spark.range(3).toDF("v").coalesce(1).write.parquet(tmp)
 
     ingest.swap_publish(p, write_tmp)
-    assert observed["live_mid_write"] is True
+    assert observed["threads_mid_write"] == threads
     assert spark.read.parquet(p).count() == 3
     assert not os.path.exists(lock)
 
 
-def test_heartbeat_stops_touching_after_release(tmp_path, monkeypatch):
-    """The heartbeat must never refresh a lock it no longer owns —
-    losing the lease stops the toucher."""
+def test_heartbeat_stops_touching_after_release(tmp_path):
+    """Release never touches a lock file that replaced ours behind our
+    back: same inode, same content, same mtime after our exit."""
     from projet_etl_spark.sources import ingest
 
-    monkeypatch.setenv("SPARK_GRAFT_LEASE_TTL_SEC", "0.2")
     p = str(tmp_path / "t")
     lk = ingest._writer_lock(p)
     lk.__enter__()
+    os.remove(lk.lock)  # ours removed behind the protocol's back
+    with open(lk.lock, "w", encoding="utf-8") as fh:
+        fh.write("somewhere-else:4242")
+    old = os.path.getmtime(lk.lock) - 60
+    os.utime(lk.lock, (old, old))
+    before = os.stat(lk.lock)
     try:
-        with lk.heartbeat():
-            os.remove(lk.lock)  # lease stolen/removed mid-phase
-            with open(lk.lock, "w", encoding="utf-8") as fh:
-                fh.write("somewhere-else:4242")
-            before = os.stat(lk.lock).st_mtime
-            time.sleep(0.5)  # several heartbeat periods
-            assert os.stat(lk.lock).st_mtime == before  # untouched
+        assert not lk.owns()
+        lk.__exit__(None, None, None)
+        after = os.stat(lk.lock)
+        assert (after.st_ino, after.st_mtime_ns) == (before.st_ino, before.st_mtime_ns)
+        assert ingest._lock_ident(lk.lock) == ("somewhere-else", 4242)
     finally:
         os.remove(lk.lock)
-        lk._ident = None
 
 
 # ---------------------------------------------------------------
