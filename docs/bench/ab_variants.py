@@ -17,7 +17,10 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0,
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+)
 
 from projet_etl_spark.cache import release_caches  # noqa: E402
 from projet_etl_spark.session import get_spark  # noqa: E402

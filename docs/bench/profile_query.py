@@ -14,11 +14,13 @@ Explain output goes to plans/r13/<query>_<tag>.txt so plan claims in
 OPTIMIZATION_r13.md are checkable without running Spark.
 
 Each rep runs under its own job group; each line reports every
-rep's job and stage counts, read from Spark's status tracker, and the
+rep's plan-build time and the py4j round trips the build made (the
+commands the building thread sent through the gateway client), its
+job and stage counts, read from Spark's status tracker, and the
 generated classes the reps compiled with the time spent compiling
 them, read from Spark's CodegenMetrics and CodeGenerator counters: the
-compile layer beside jobs and stages. A cache hit compiles nothing,
-so the first rep usually pays them all.
+build layer and the compile layer beside jobs and stages. A cache hit
+compiles nothing, so the first rep usually pays them all.
 
 This is a diagnostic harness only — the driver contract stays
 bench.py.
@@ -27,8 +29,10 @@ bench.py.
 from __future__ import annotations
 
 import argparse
+import gc
 import os
 import sys
+import threading
 import time
 
 sys.path.insert(
@@ -85,15 +89,33 @@ def main() -> None:
                 stages.update(info.stageIds)
         return len(job_ids), len(stages)
 
+    # py4j round trips of the building thread; py4j's finalizer thread
+    # frees earlier proxies through the same client, so it is not counted
+    client = sc._gateway._gateway_client
+    send = client.send_command
+    caller = threading.get_ident()
+    trips = [0]
+
+    def counted(*a, **kw):
+        if threading.get_ident() == caller:
+            trips[0] += 1
+        return send(*a, **kw)
+
+    client.send_command = counted
+
     for i, name in enumerate(args.names):
-        times, jobs, stages = [], [], []
+        times, builds, build_trips, jobs, stages = [], [], [], [], []
         n0, ns0 = compiles.getCount(), codegen.compileTime()
         for rep in range(args.reps):
             release_caches(rollups=False)
             group = f"profile:{i}:{name}:{rep}"
             sc.setJobGroup(group, f"profile:{name}")
+            gc.collect()
+            trips[0] = 0
             t0 = time.perf_counter()
             df = qs[name](spark, args.sf)
+            builds.append(time.perf_counter() - t0)
+            build_trips.append(trips[0])
             df.write.format("noop").mode("overwrite").save()
             times.append(time.perf_counter() - t0)
             n_jobs, n_stages = jobs_and_stages(group)
@@ -112,6 +134,7 @@ def main() -> None:
                 f.write(plan)
         print(
             f"{name}: min={min(times):.3f}s  all={[round(t, 3) for t in times]}"
+            f"  build_ms={[round(t * 1000, 1) for t in builds]} round_trips={build_trips}"
             f"  jobs={jobs} stages={stages}"
             f"  compiled={n_compiled} classes in {compile_s:.3f}s",
             flush=True,

@@ -2,14 +2,17 @@
 
 The reference materializes each stage at the driver and finishes
 with Python loops (views.py:206-254, 256-339). Here each pipeline is
-ONE aggregate: a single ``groupBy("magid")`` over the category's rows
-computes stage 1's measures under ``F.when(in_range, …)`` and stage
-2's under ``F.when(fab, …)``, so the plan has one scan, one exchange
-on magid and one TakeOrderedAndProject(10), and stage 2 is read from
-the same ten rows. The dense month calendar is a generated relation
-left-joined to the ten stores' month averages — the reference's
-O(months x stores) pandas loop becomes a join of two single-partition
-frames bounded by months.
+one parameterized SQL statement over the named ``points_de_vente``
+view (``sources/tables.views_sql``) around ONE aggregate: a single
+``GROUP BY magid`` over the category's rows computes stage 1's
+measures under ``CASE WHEN <in range>`` and stage 2's under
+``CASE WHEN fabid = …``, so the plan has one scan, one exchange on
+magid and one TakeOrderedAndProject(10), and stage 2 is read from
+the same ten rows. The dense month calendar is the month spine
+(``functions/dates.MONTH_SPINE_SQL``) left-joined to the ten stores'
+month averages under a ``MERGE`` hint — the reference's
+O(months x stores) pandas loop becomes a join of two
+single-partition relations bounded by months.
 
 Semantic subtleties preserved exactly (SURVEY.md §2.10.6):
 - Stage 1 ranks only stores with a row inside the window (a NULL
@@ -36,53 +39,115 @@ cannot flip the value hash.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from projet_etl_spark.functions.aggs import distinct_count
-from projet_etl_spark.functions.dates import month_key, month_spine
-from projet_etl_spark.operators.topk import cat_score3, in_dates, ranked, store_measures
+from projet_etl_spark.functions.dates import IN_RANGE, MONTH_SPINE_SQL
+from projet_etl_spark.functions.scores import SCORE3, score_sql
 from projet_etl_spark.params import DEFAULTS
-from projet_etl_spark.sources.tables import points_de_vente
+from projet_etl_spark.sources.tables import views_sql
 
 
-def _top10_cat_with(
-    spark: SparkSession, sf_dir: str, cat_id, debut: str, fin: str, *stage2: Column
-) -> DataFrame:
-    """top-magasins-cat's ten rows over [debut, fin], each carrying
-    the ``stage2`` aggregates over all of the store's category rows,
+def _top10(lo: str, hi: str, stage2: str) -> str:
+    """top-magasins-cat's ten rows over [lo, hi], each carrying the
+    ``stage2`` aggregates over all of the store's category rows,
     whatever their date."""
-    agg = (
-        points_de_vente(spark, sf_dir)
-        .filter(F.col("catid") == F.lit(cat_id))
-        .groupBy("magid")
-        .agg(*store_measures("fabid", "prodid", within=in_dates(debut, fin)), *stage2)
-        .filter(F.col("total_ventes") > 0)
+    in_range = IN_RANGE.format(lo=lo, hi=hi)
+    return f"""
+    SELECT *, {score_sql(SCORE3)} AS score
+    FROM (
+        SELECT magid,
+               CAST(size(collect_set(CASE WHEN {in_range} THEN fabid END)) AS BIGINT)
+                   AS total_fabricants,
+               CAST(size(collect_set(CASE WHEN {in_range} THEN prodid END)) AS BIGINT)
+                   AS total_produits,
+               count(CASE WHEN {in_range} THEN 1 END) AS total_ventes,
+               {stage2}
+        FROM IDENTIFIER(:pdv)
+        WHERE catid = :cat
+        GROUP BY magid
     )
-    return ranked(agg, cat_score3(), DEFAULTS["topk"])
+    WHERE total_ventes > 0
+    ORDER BY score DESC, magid
+    LIMIT {DEFAULTS["topk"]}"""
 
 
-def _m2_per_store(
-    spark: SparkSession, sf_dir: str, cat_id, fab_id, debut: str, fin: str
-) -> DataFrame:
-    # stage 2: per-store distinct products for cat+fab across ALL dates
-    # (reference views.py:213-219 applies no date filter)
-    fab = F.col("fabid") == F.lit(fab_id)
-    top10 = _top10_cat_with(
-        spark,
-        sf_dir,
-        cat_id,
-        debut,
-        fin,
-        distinct_count(F.when(fab, F.col("prodid"))).alias("nb_produits_fab"),
+# stage 2: per-store distinct products for cat+fab across ALL dates
+# (reference views.py:213-219 applies no date filter)
+_M2_STAGE2 = (
+    "CAST(size(collect_set(CASE WHEN fabid = :fab THEN prodid END)) AS BIGINT)"
+    " AS nb_produits_fab"
+)
+_M2 = f"""
+WITH top10 AS ({_top10(":debut", ":fin", _M2_STAGE2)}
+),
+per_store AS (
+    SELECT *,
+           CASE WHEN total_produits != 0
+                THEN nb_produits_fab / total_produits * 100
+                ELSE 0.0D END AS pct_raw
+    FROM top10
+)
+"""
+
+_AVG_CAT_FAB_10_MAG = _M2 + """
+SELECT magid, total_produits, nb_produits_fab, round(pct_raw, 6) AS percentage
+FROM per_store
+ORDER BY magid
+"""
+
+_AVG_CAT_FAB_10_MAG_AVG = _M2 + """
+SELECT round(coalesce(avg(CASE WHEN total_produits != 0 THEN pct_raw END), 0.0D), 6)
+           AS average
+FROM per_store
+"""
+
+# stage 2: per-(store, month) distinct products for cat+fab; like M2
+# the reference applies no date filter here (views.py:290-296). The
+# set is deduplicated, so counting its non-NULL products per month is
+# the distinct count; a month whose products are all NULL stays in at
+# 0. Each month averages over only the stores with data that month
+# (reference views.py:317-327). Both sides of the spine join are one
+# partition, so a sort-merge join needs no exchange; a broadcast would
+# run the ten stores' stage as a job of its own.
+_M3_STAGE2 = (
+    "collect_set(CASE WHEN fabid = :fab"
+    " THEN struct(date_format(dateid, 'yyyy-MM') AS mois_annee, prodid) END)"
+    " AS fab_sales"
+)
+_M3 = f"""
+WITH top10 AS ({_top10(":epoch", ":as_of", _M3_STAGE2)}
+),
+monthly AS (
+    SELECT *, nb_prod_mois / total_produits * 100 AS pct_raw
+    FROM (
+        SELECT magid, total_produits, mois_annee, count(prodid) AS nb_prod_mois
+        FROM (
+            SELECT magid, total_produits, inline(fab_sales)
+            FROM top10
+            WHERE total_produits != 0
+        )
+        GROUP BY magid, total_produits, mois_annee
     )
-    return top10.withColumn(
-        "pct_raw",
-        F.when(
-            F.col("total_produits") != 0,
-            F.col("nb_produits_fab") / F.col("total_produits") * F.lit(100),
-        ).otherwise(F.lit(0.0)),
-    )
+),
+per_month AS (
+    SELECT mois_annee, avg(pct_raw) AS avg_raw
+    FROM monthly
+    GROUP BY mois_annee
+),
+months AS ({MONTH_SPINE_SQL})
+"""
+
+_SCORE_SANTE_MOIS = _M3 + """
+SELECT /*+ MERGE(per_month) */
+       mois_annee, round(coalesce(avg_raw, 0.0D), 6) AS avg_percentage
+FROM months LEFT JOIN per_month USING (mois_annee)
+ORDER BY mois_annee
+"""
+
+_SCORE_SANTE_MOIS_AVG = _M3 + """
+SELECT /*+ MERGE(per_month) */ round(coalesce(avg(avg_raw), 0.0D), 6) AS average
+FROM months LEFT JOIN per_month USING (mois_annee)
+"""
 
 
 def q_avg_cat_fab_10_mag(
@@ -100,13 +165,9 @@ def q_avg_cat_fab_10_mag(
     fab_id = fab_id if fab_id is not None else DEFAULTS["fab_id"]
     debut = debut or DEFAULTS["debut"]
     fin = fin or DEFAULTS["fin"]
-    per_store = _m2_per_store(spark, sf_dir, cat_id, fab_id, debut, fin)
-    return per_store.select(
-        "magid",
-        "total_produits",
-        "nb_produits_fab",
-        F.round(F.col("pct_raw"), 6).alias("percentage"),
-    ).orderBy("magid")
+    return views_sql(
+        spark, sf_dir, _AVG_CAT_FAB_10_MAG, cat=cat_id, fab=fab_id, debut=debut, fin=fin
+    )
 
 
 def q_avg_cat_fab_10_mag_avg(
@@ -124,53 +185,9 @@ def q_avg_cat_fab_10_mag_avg(
     fab_id = fab_id if fab_id is not None else DEFAULTS["fab_id"]
     debut = debut or DEFAULTS["debut"]
     fin = fin or DEFAULTS["fin"]
-    per_store = _m2_per_store(spark, sf_dir, cat_id, fab_id, debut, fin)
-    return per_store.agg(
-        F.round(
-            F.coalesce(
-                F.avg(F.when(F.col("total_produits") != 0, F.col("pct_raw"))),
-                F.lit(0.0),
-            ),
-            6,
-        ).alias("average")
+    return views_sql(
+        spark, sf_dir, _AVG_CAT_FAB_10_MAG_AVG, cat=cat_id, fab=fab_id, debut=debut, fin=fin
     )
-
-
-def _m3_month_avgs(
-    spark: SparkSession, sf_dir: str, cat_id, fab_id, epoch: str, as_of: str
-) -> DataFrame:
-    # stage 2: per-(store, month) distinct products for cat+fab; like
-    # M2 the reference applies no date filter here (views.py:290-296)
-    fab = F.col("fabid") == F.lit(fab_id)
-    sales = F.struct(month_key(F.col("dateid")).alias("mois_annee"), "prodid")
-    top10 = _top10_cat_with(
-        spark,
-        sf_dir,
-        cat_id,
-        epoch,
-        as_of,
-        F.collect_set(F.when(fab, sales)).alias("fab_sales"),
-    )
-    # the set is deduplicated, so counting its non-NULL products per
-    # month is the distinct count; a month whose products are all
-    # NULL stays in at 0
-    monthly = (
-        top10.filter(F.col("total_produits") != 0)
-        .select("magid", "total_produits", F.inline("fab_sales"))
-        .groupBy("magid", "total_produits", "mois_annee")
-        .agg(F.count("prodid").alias("nb_prod_mois"))
-        .withColumn(
-            "pct_raw", F.col("nb_prod_mois") / F.col("total_produits") * F.lit(100)
-        )
-    )
-    # month average over only the stores with data that month
-    # (reference views.py:317-327)
-    per_month = monthly.groupBy("mois_annee").agg(F.avg("pct_raw").alias("avg_raw"))
-    spine = month_spine(spark, epoch, as_of)
-    # both sides are one partition, so a sort-merge join needs no
-    # exchange; a broadcast would run the ten stores' stage as a job
-    # of its own
-    return spine.join(per_month.hint("merge"), "mois_annee", "left")
 
 
 def q_score_sante_mois(
@@ -189,11 +206,9 @@ def q_score_sante_mois(
     fab_id = fab_id if fab_id is not None else DEFAULTS["fab_id"]
     epoch = epoch or DEFAULTS["epoch"]
     as_of = as_of or DEFAULTS["as_of"]
-    joined = _m3_month_avgs(spark, sf_dir, cat_id, fab_id, epoch, as_of)
-    return joined.select(
-        "mois_annee",
-        F.round(F.coalesce(F.col("avg_raw"), F.lit(0.0)), 6).alias("avg_percentage"),
-    ).orderBy("mois_annee")
+    return views_sql(
+        spark, sf_dir, _SCORE_SANTE_MOIS, cat=cat_id, fab=fab_id, epoch=epoch, as_of=as_of
+    )
 
 
 def q_score_sante_mois_avg(
@@ -210,7 +225,6 @@ def q_score_sante_mois_avg(
     fab_id = fab_id if fab_id is not None else DEFAULTS["fab_id"]
     epoch = epoch or DEFAULTS["epoch"]
     as_of = as_of or DEFAULTS["as_of"]
-    joined = _m3_month_avgs(spark, sf_dir, cat_id, fab_id, epoch, as_of)
-    return joined.agg(
-        F.round(F.coalesce(F.avg("avg_raw"), F.lit(0.0)), 6).alias("average")
+    return views_sql(
+        spark, sf_dir, _SCORE_SANTE_MOIS_AVG, cat=cat_id, fab=fab_id, epoch=epoch, as_of=as_of
     )

@@ -4,9 +4,11 @@ Covers reference QUERY_MAP ``nb-mag-cat-date`` (views.py:62-71) and
 ``score-evolution`` (views.py:73-88): month bucketing, year
 predicate, conditional aggregation, and the null-safe ratio.
 
-Each result has one row per month, so it is coalesced to one
-partition before its ``orderBy`` (as ``functions/dates.month_spine``
-is): the sort then runs in place, with no range exchange and no
+Each request is one parameterized SQL statement over the named
+``points_de_vente`` view (``sources/tables.views_sql``). Each result
+has one row per month, so the ``/*+ COALESCE(1) */`` hint puts it in
+one partition before its ORDER BY (as ``functions/dates.month_spine``
+does): the sort then runs in place, with no range exchange and no
 sampling job.
 
 The year predicate uses ``year(dateid)`` rather than the reference's
@@ -20,9 +22,33 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from projet_etl_spark.functions.dates import month_key
+from projet_etl_spark.functions.dates import IN_RANGE
 from projet_etl_spark.params import DEFAULTS
-from projet_etl_spark.sources.tables import points_de_vente
+from projet_etl_spark.sources.tables import views_sql
+
+_NB_MAG_CAT_DATE = """
+SELECT /*+ COALESCE(1) */
+       date_format(dateid, 'yyyy-MM') AS mois,
+       count(DISTINCT magid) AS nbmag
+FROM IDENTIFIER(:pdv)
+WHERE catid = :cat AND year(dateid) = :annee
+GROUP BY date_format(dateid, 'yyyy-MM')
+ORDER BY mois
+"""
+
+_SCORE_EVOLUTION = f"""
+SELECT /*+ COALESCE(1) */
+       *, coalesce(ventes_fab * 100.0D / nullif(total_ventes, 0), 0.0D) AS score_sante
+FROM (
+    SELECT date_format(dateid, 'yyyy-MM') AS mois,
+           count(*) AS total_ventes,
+           sum(CASE WHEN fabid = :fab THEN 1 ELSE 0 END) AS ventes_fab
+    FROM IDENTIFIER(:pdv)
+    WHERE catid = :cat AND {IN_RANGE.format(lo=":epoch", hi=":as_of")}
+    GROUP BY date_format(dateid, 'yyyy-MM')
+)
+ORDER BY mois
+"""
 
 
 def q_nb_mag_cat_date(
@@ -31,15 +57,7 @@ def q_nb_mag_cat_date(
     """Distinct stores per month for a category+year (views.py:62-71)."""
     cat_id = cat_id if cat_id is not None else DEFAULTS["cat_id"]
     annee = annee or DEFAULTS["annee"]
-    return (
-        points_de_vente(spark, sf_dir)
-        .filter(F.col("catid") == F.lit(cat_id))
-        .filter(F.year("dateid") == F.lit(int(annee)))
-        .groupBy(month_key(F.col("dateid")).alias("mois"))
-        .agg(F.countDistinct("magid").alias("nbmag"))
-        .coalesce(1)
-        .orderBy("mois")
-    )
+    return views_sql(spark, sf_dir, _NB_MAG_CAT_DATE, cat=cat_id, annee=int(annee))
 
 
 def q_score_evolution(
@@ -59,27 +77,8 @@ def q_score_evolution(
     fab_id = fab_id if fab_id is not None else DEFAULTS["fab_id"]
     epoch = epoch or DEFAULTS["epoch"]
     as_of = as_of or DEFAULTS["as_of"]
-    ventes_fab = F.sum(
-        F.when(F.col("fabid") == F.lit(fab_id), 1).otherwise(0)
-    ).alias("ventes_fab")
-    total = F.count(F.lit(1)).alias("total_ventes")
-    return (
-        points_de_vente(spark, sf_dir)
-        .filter(F.col("catid") == F.lit(cat_id))
-        .filter(F.col("dateid").between(F.to_date(F.lit(epoch)), F.to_date(F.lit(as_of))))
-        .groupBy(month_key(F.col("dateid")).alias("mois"))
-        .agg(total, ventes_fab)
-        .withColumn(
-            "score_sante",
-            F.coalesce(
-                F.col("ventes_fab")
-                * F.lit(100.0)
-                / F.nullif(F.col("total_ventes"), F.lit(0)),
-                F.lit(0.0),
-            ),
-        )
-        .coalesce(1)
-        .orderBy("mois")
+    return views_sql(
+        spark, sf_dir, _SCORE_EVOLUTION, cat=cat_id, fab=fab_id, epoch=epoch, as_of=as_of
     )
 
 

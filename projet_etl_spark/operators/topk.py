@@ -4,19 +4,25 @@ Covers reference QUERY_MAP ``top-magasins`` (views.py:27-43, the
 flagship query), ``top-magasins-cat`` (views.py:45-60), and the
 fixed ``top-1`` composite (views.py:157-190).
 
+Each request is one parameterized SQL statement over the named
+``points_de_vente`` view (``sources/tables.views_sql``), the
+reference's own template shape; the score is its
+``functions/scores`` profile rendered as SQL.
+
 Spark-first notes:
 - ORDER BY score LIMIT k plans as TakeOrderedAndProject — a true
   distributed top-k (per-partition heap + driver merge), no global
   sort even at 100 TB.
-- The per-store distinct counts are ``distinct_count``
-  (size(collect_set)): each store's rows cross one exchange on magid
-  with map-side deduplicated sets. Three COUNT(DISTINCT) would plan
-  Catalyst's Expand (every row copied per distinct column) and two
-  shuffles. A store's set is its assortment, bounded at any scale.
+- The per-store distinct counts are
+  ``CAST(size(collect_set(x)) AS BIGINT)``: each store's rows cross
+  one exchange on magid with map-side deduplicated sets. Three
+  COUNT(DISTINCT) would plan Catalyst's Expand (every row copied per
+  distinct column) and two shuffles. A store's set is its
+  assortment, bounded at any scale (functions/aggs.py).
 - ``top-1`` is one aggregate over the whole view: the global top-10's
-  measures count only the in-range rows (``F.when(in_range, …)``) and
-  stage 2's only the category's rows (``F.when(cat, …)``), so both
-  stages come from one scan, one exchange on magid and one
+  measures count only the in-range rows (``CASE WHEN <in range>``)
+  and stage 2's only the category's rows (``CASE WHEN catid = …``),
+  so both stages come from one scan, one exchange on magid and one
   TakeOrderedAndProject(10); stage 2 is read from the same ten rows.
   ``top-magasins`` and ``top-magasins-cat`` keep their date filter in
   the scan, where it prunes the date-sorted staged files.
@@ -26,69 +32,80 @@ Spark-first notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from projet_etl_spark.functions.aggs import distinct_count
-from projet_etl_spark.functions.scores import score3, score3_top1, score4
+from projet_etl_spark.functions.dates import IN_RANGE
+from projet_etl_spark.functions.scores import SCORE3, SCORE3_TOP1, SCORE4, score_sql
 from projet_etl_spark.params import DEFAULTS
-from projet_etl_spark.sources.tables import points_de_vente
+from projet_etl_spark.sources.tables import views_sql
 
-_TOTALS = {
-    "fabid": "total_fabricants",
-    "catid": "total_categories",
-    "prodid": "total_produits",
-}
+_IN_DEBUT_FIN = IN_RANGE.format(lo=":debut", hi=":fin")
 
+_TOP_MAGASINS = f"""
+SELECT magid,
+       CAST(size(collect_set(fabid)) AS BIGINT) AS total_fabricants,
+       CAST(size(collect_set(catid)) AS BIGINT) AS total_categories,
+       CAST(size(collect_set(prodid)) AS BIGINT) AS total_produits,
+       count(*) AS total_ventes,
+       {score_sql(SCORE4)} AS score
+FROM IDENTIFIER(:pdv)
+WHERE {_IN_DEBUT_FIN}
+GROUP BY magid
+ORDER BY score DESC, magid
+LIMIT :k
+"""
 
-def store_measures(
-    *cols: str, within: Column | None = None, suffix: str = ""
-) -> list[Column]:
-    """A store's score inputs: the distinct count of each of ``cols``
-    (``total_fabricants``/``total_categories``/``total_produits``) and
-    the row count ``total_ventes``, each name ending in ``suffix``.
+_TOP_MAGASINS_CAT = f"""
+SELECT magid,
+       CAST(size(collect_set(fabid)) AS BIGINT) AS total_fabricants,
+       CAST(size(collect_set(prodid)) AS BIGINT) AS total_produits,
+       count(*) AS total_ventes,
+       {score_sql(SCORE3)} AS score
+FROM IDENTIFIER(:pdv)
+WHERE catid = :cat AND {_IN_DEBUT_FIN}
+GROUP BY magid
+ORDER BY score DESC, magid
+LIMIT :k
+"""
 
-    With ``within``, every measure counts only the rows where it is
-    true (a NULL is not), so one aggregate can carry the measures of
-    two stages side by side.
-    """
-
-    def only(c: Column) -> Column:
-        return c if within is None else F.when(within, c)
-
-    return [
-        distinct_count(only(F.col(c))).alias(_TOTALS[c] + suffix) for c in cols
-    ] + [F.count(only(F.lit(1))).alias("total_ventes" + suffix)]
-
-
-def in_dates(debut: str, fin: str) -> Column:
-    """``dateid`` in [debut, fin]; NULL for a NULL ``dateid``."""
-    return F.col("dateid").between(F.to_date(F.lit(debut)), F.to_date(F.lit(fin)))
-
-
-def ranked(agg: DataFrame, score: Column, k: int) -> DataFrame:
-    """The ``k`` best rows of ``agg`` by ``score``, ties by magid."""
-    return (
-        agg.withColumn("score", score)
-        .orderBy(F.desc("score"), F.asc("magid"))
-        .limit(k)
+# stage 1 ranks only the stores that sold inside the window; stage 2
+# keeps the top-10 stores that sold in the category
+_TOP_1 = f"""
+WITH top10 AS (
+    SELECT *, {score_sql(SCORE4)} AS score
+    FROM (
+        SELECT magid,
+               CAST(size(collect_set(CASE WHEN {_IN_DEBUT_FIN} THEN fabid END)) AS BIGINT)
+                   AS total_fabricants,
+               CAST(size(collect_set(CASE WHEN {_IN_DEBUT_FIN} THEN catid END)) AS BIGINT)
+                   AS total_categories,
+               CAST(size(collect_set(CASE WHEN {_IN_DEBUT_FIN} THEN prodid END)) AS BIGINT)
+                   AS total_produits,
+               count(CASE WHEN {_IN_DEBUT_FIN} THEN 1 END) AS total_ventes,
+               CAST(size(collect_set(CASE WHEN catid = :cat THEN fabid END)) AS BIGINT)
+                   AS total_fabricants_cat,
+               CAST(size(collect_set(CASE WHEN catid = :cat THEN prodid END)) AS BIGINT)
+                   AS total_produits_cat,
+               count(CASE WHEN catid = :cat THEN 1 END) AS total_ventes_cat
+        FROM IDENTIFIER(:pdv)
+        GROUP BY magid
     )
-
-
-def _score4() -> Column:
-    return score4(
-        F.col("total_fabricants"),
-        F.col("total_categories"),
-        F.col("total_produits"),
-        F.col("total_ventes"),
-    )
-
-
-def cat_score3() -> Column:
-    """top-magasins-cat's score over the unsuffixed measures."""
-    return score3(
-        F.col("total_fabricants"), F.col("total_produits"), F.col("total_ventes")
-    )
+    WHERE total_ventes > 0
+    ORDER BY score DESC, magid
+    LIMIT {DEFAULTS["topk"]}
+)
+SELECT *, {score_sql(SCORE3_TOP1)} AS score
+FROM (
+    SELECT magid,
+           total_fabricants_cat AS total_fabricants,
+           total_produits_cat AS total_produits,
+           total_ventes_cat AS total_ventes
+    FROM top10
+    WHERE total_ventes_cat > 0
+)
+ORDER BY score DESC, magid
+LIMIT 1
+"""
 
 
 def q_top_magasins(
@@ -103,13 +120,7 @@ def q_top_magasins(
     debut = debut or DEFAULTS["debut"]
     fin = fin or DEFAULTS["fin"]
     k = k or DEFAULTS["topk"]
-    agg = (
-        points_de_vente(spark, sf_dir)
-        .filter(in_dates(debut, fin))
-        .groupBy("magid")
-        .agg(*store_measures("fabid", "catid", "prodid"))
-    )
-    return ranked(agg, _score4(), k)
+    return views_sql(spark, sf_dir, _TOP_MAGASINS, debut=debut, fin=fin, k=k)
 
 
 def q_top_magasins_cat(
@@ -126,14 +137,9 @@ def q_top_magasins_cat(
     debut = debut or DEFAULTS["debut"]
     fin = fin or DEFAULTS["fin"]
     k = k or DEFAULTS["topk"]
-    agg = (
-        points_de_vente(spark, sf_dir)
-        .filter(F.col("catid") == F.lit(cat_id))
-        .filter(in_dates(debut, fin))
-        .groupBy("magid")
-        .agg(*store_measures("fabid", "prodid"))
+    return views_sql(
+        spark, sf_dir, _TOP_MAGASINS_CAT, cat=cat_id, debut=debut, fin=fin, k=k
     )
-    return ranked(agg, cat_score3(), k)
 
 
 def q_top_1(
@@ -153,31 +159,4 @@ def q_top_1(
     cat_id = cat_id if cat_id is not None else DEFAULTS["cat_id"]
     debut = debut or DEFAULTS["debut"]
     fin = fin or DEFAULTS["fin"]
-    agg = (
-        points_de_vente(spark, sf_dir)
-        .groupBy("magid")
-        .agg(
-            *store_measures("fabid", "catid", "prodid", within=in_dates(debut, fin)),
-            *store_measures(
-                "fabid", "prodid", within=F.col("catid") == F.lit(cat_id), suffix="_cat"
-            ),
-        )
-        # stage 1 ranks only the stores that sold inside the window
-        .filter(F.col("total_ventes") > 0)
-    )
-    top10 = ranked(agg, _score4(), DEFAULTS["topk"])
-    # stage 2 keeps the top-10 stores that sold in the category
-    stage2 = top10.filter(F.col("total_ventes_cat") > 0).select(
-        "magid",
-        *(
-            F.col(c + "_cat").alias(c)
-            for c in ("total_fabricants", "total_produits", "total_ventes")
-        ),
-    )
-    return ranked(
-        stage2,
-        score3_top1(
-            F.col("total_produits"), F.col("total_ventes"), F.col("total_fabricants")
-        ),
-        1,
-    )
+    return views_sql(spark, sf_dir, _TOP_1, cat=cat_id, debut=debut, fin=fin)

@@ -93,7 +93,7 @@ per_store AS (
 
 def _m3_base(epoch: str, as_of: str) -> str:
     """The M3 health-score CTE stack for an arbitrary [epoch, as_of]
-    bound — the oracle twin of composite._m3_month_avgs' time
+    bound — the oracle twin of composite._M3's time
     parameterization (SURVEY.md §2.10.10). The default-bound string
     below feeds PARITY_ORACLES; tests drive historical bounds through
     this builder so the time-dependence contract can't rot."""

@@ -505,11 +505,16 @@ def table_exists(spark: SparkSession, path: str) -> bool:
     case Spark raises for an absent table. A permission error or
     corrupt filesystem raises through: reporting a BROKEN store as a
     clean 404 is the same silent-loss class the round-9 store
-    readers eliminated (storeio.read_store discipline)."""
+    readers eliminated (storeio.read_store discipline). A path read
+    before under its current fingerprint answers without a Spark read,
+    which resolves a relation and lists its files (about 15 ms a
+    request in ``api.run_query``)."""
     from pyspark.errors import AnalysisException
 
-    from projet_etl_spark.sources.tables import read_parquet
+    from projet_etl_spark.sources.tables import read_parquet, schema_is_memoized
 
+    if schema_is_memoized(path):
+        return True
     try:
         read_parquet(spark, path).schema
         return True

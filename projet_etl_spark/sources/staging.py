@@ -44,6 +44,12 @@ def parquet_fingerprint(sf_dir: str, filename: str) -> str:
     return "dir[" + ",".join(sorted(parts)) + "]"
 
 
+def staged_root(root_base: str, sf_dir: str) -> str:
+    """The per-sf root under ``root_base``: named after ``sf_dir``'s
+    basename, so two warehouses with one basename share it."""
+    return os.path.join(root_base, os.path.basename(os.path.normpath(sf_dir)) or "root")
+
+
 def ensure_staged(
     root_base: str,
     sf_dir: str,
@@ -73,8 +79,7 @@ def ensure_staged(
     changes do; bump the version when the builder's logic changes in
     a way no folded constant captures.
     """
-    name = os.path.basename(os.path.normpath(sf_dir)) or "root"
-    root = os.path.join(root_base, name)
+    root = staged_root(root_base, sf_dir)
     marker = os.path.join(root, "_SOURCE")
     out = os.path.join(root, out_subpath)
     stamp = f"{version}\n{fp}"

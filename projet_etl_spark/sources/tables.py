@@ -30,6 +30,7 @@ Scale notes (100 TB design point):
 from __future__ import annotations
 
 import os as _os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,6 +69,19 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     df = spark.read.parquet(path)
     _SCHEMAS[path] = (fp, df.schema)
     return df
+
+
+def schema_is_memoized(path: str) -> bool:
+    """True when ``path`` was read under its current fingerprint, so
+    it exists and its footers parse, as far as a Spark read can tell."""
+    from projet_etl_spark.sources.staging import parquet_fingerprint
+
+    hit = _SCHEMAS.get(path)
+    try:
+        fp = parquet_fingerprint(*_os.path.split(_os.path.normpath(path)))
+    except OSError:
+        return False
+    return hit is not None and hit[0] == fp
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -169,6 +183,7 @@ _SALES_STAGE_ROOT = _os.path.join(
     "parity_views",
     "points_de_vente",
 )
+_SALES_SOURCES = ("lineitem.parquet", "orders.parquet", "part.parquet")
 _PRODUITS_COLS = ("dateid", "prodid", "catid", "fabid")
 _PDV_COLS = _PRODUITS_COLS + ("magid",)
 _PDV_ROWS = "pos IS NOT NULL"
@@ -216,10 +231,7 @@ def _sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     try:
-        fp = "|".join(
-            parquet_fingerprint(sf_dir, f)
-            for f in ("lineitem.parquet", "orders.parquet", "part.parquet")
-        )
+        fp = "|".join(parquet_fingerprint(sf_dir, f) for f in _SALES_SOURCES)
     except OSError:
         return _sales_plan(spark, sf_dir)
 
@@ -278,6 +290,99 @@ def points_de_vente(spark: SparkSession, sf_dir: str) -> DataFrame:
     if native:
         return read_parquet(spark, native).select(*_PDV_COLS)
     return _sales(spark, sf_dir).filter(_PDV_ROWS).select(*_PDV_COLS)
+
+
+# The request templates (operators/simple, topk, timeseries, composite)
+# read both views BY NAME: ``FROM IDENTIFIER(:pdv)`` or
+# ``IDENTIFIER(:produits)``. A name is a session temp view registered
+# once per session, warehouse and source fingerprint, so a request
+# costs one ``spark.sql`` call and a few file stats; building the
+# views' DataFrames is a few hundred py4j round trips.
+_VIEWS = {"pdv": "points_de_vente", "produits": "produits"}
+# session -> {warehouse path: its view names registered last}. Keyed
+# by the Python session object, so a new session registers its own
+# views. Two threads may both register a name (createOrReplaceTempView
+# makes that harmless) or, while the sources move, drop each other's
+# pair, which the next request registers again.
+_REGISTERED: weakref.WeakKeyDictionary[SparkSession, dict[str, dict[str, str]]] = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _views_fingerprint(sf_dir: str) -> str | None:
+    """What the two views of ``sf_dir`` read, as a string that moves
+    when any of it moves: a native table's fingerprint, or the three
+    sources' and the staged table's ``_SOURCE`` marker mtime (a
+    rebuild for the same sources, e.g. after another warehouse with
+    the same basename took the staged root, writes new data files).
+    None when a source cannot be stat'ed."""
+    from projet_etl_spark.sources.staging import parquet_fingerprint, staged_root
+
+    natives = [_native_path(sf_dir, view) for view in _VIEWS.values()]
+    try:
+        parts = [sf_dir] + [
+            parquet_fingerprint(*_os.path.split(p)) for p in natives if p
+        ]
+        if not all(natives):
+            parts += [parquet_fingerprint(sf_dir, f) for f in _SALES_SOURCES]
+            marker = _os.path.join(staged_root(_SALES_STAGE_ROOT, sf_dir), "_SOURCE")
+            try:
+                parts.append(str(_os.stat(marker).st_mtime_ns))
+            except FileNotFoundError:
+                parts.append("unstaged")
+    except OSError:
+        return None
+    return "\n".join(parts)
+
+
+def _view_names(sf_dir: str, key: str | None) -> dict[str, str]:
+    import hashlib
+
+    tag = hashlib.sha1((key or f"{sf_dir}\nunkeyed").encode()).hexdigest()[:12]
+    return {p: f"spark_graft_{v}_{tag}" for p, v in _VIEWS.items()}
+
+
+def _register_views(spark: SparkSession, sf_dir: str) -> dict[str, str]:
+    frames = {"pdv": points_de_vente(spark, sf_dir), "produits": produits(spark, sf_dir)}
+    key = _views_fingerprint(sf_dir)
+    names = _view_names(sf_dir, key)
+    for param, df in frames.items():
+        df.createOrReplaceTempView(names[param])
+    if key is not None:
+        last = _REGISTERED.setdefault(spark, {})
+        stale = last.get(sf_dir, names)
+        last[sf_dir] = names
+        for name in set(stale.values()) - set(names.values()):
+            spark.catalog.dropTempView(name)
+    return names
+
+
+def views_sql(spark: SparkSession, sf_dir: str, sql: str, **args) -> DataFrame:
+    """``spark.sql(sql, args)`` with ``:pdv`` and ``:produits`` bound to
+    the names of ``sf_dir``'s two views.
+
+    Side effect: the caller's session gains two temp views per
+    warehouse (a moved fingerprint drops the pair it replaces), named
+    ``spark_graft_{points_de_vente,produits}_<12 hex>`` from a hash of
+    the warehouse path and its fingerprint, much as
+    ``ensure_engine_conf`` sets the engine's confs on it. A session
+    that lacks the names (a new session, a dropped view) or a moved
+    fingerprint (rewritten sources, a rebuilt staged table) registers
+    them afresh; sources that cannot be fingerprinted register them
+    on every call. The returned DataFrame holds its analyzed plan, so
+    re-registering a name never changes a plan already built.
+    """
+    from pyspark.errors import AnalysisException
+
+    key = _views_fingerprint(sf_dir)
+    names = _view_names(sf_dir, key)
+    if key is not None and _REGISTERED.get(spark, {}).get(sf_dir) == names:
+        try:
+            return spark.sql(sql, args={**names, **args})
+        except AnalysisException as e:  # a dropped view
+            if e.getCondition() != "TABLE_OR_VIEW_NOT_FOUND":
+                raise
+    return spark.sql(sql, args={**_register_views(spark, sf_dir), **args})
 
 
 def _points_de_vente_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -120,3 +120,53 @@ def test_query_cli_serves_extension_queries(spark, capsys):
     assert sorted(printed, key=key) == sorted(
         json.loads(json.dumps(direct, default=str)), key=key
     )
+
+
+# Each request type's result schema at default parameters: the
+# simpleString and the columns that are NOT NULL. A decimal literal in
+# a score, or an int where a count is a bigint, changes it.
+_SCHEMAS = {
+    "cat": ("struct<dateid:date,prodid:bigint,catid:string,fabid:bigint>", ()),
+    "mag-cat": ("struct<total_magasins:bigint>", ("total_magasins",)),
+    "fab-cat": ("struct<total_fabricants:bigint>", ("total_fabricants",)),
+    "avg-prod-per-fab": ("struct<avg_products_per_fab:double>", ()),
+    "top-magasins": (
+        "struct<magid:bigint,total_fabricants:bigint,total_categories:bigint,"
+        "total_produits:bigint,total_ventes:bigint,score:double>",
+        ("total_fabricants", "total_categories", "total_produits", "total_ventes", "score"),
+    ),
+    "top-magasins-cat": (
+        "struct<magid:bigint,total_fabricants:bigint,total_produits:bigint,"
+        "total_ventes:bigint,score:double>",
+        ("total_fabricants", "total_produits", "total_ventes", "score"),
+    ),
+    "top-1": (
+        "struct<magid:bigint,total_fabricants:bigint,total_produits:bigint,"
+        "total_ventes:bigint,score:double>",
+        ("total_fabricants", "total_produits", "total_ventes", "score"),
+    ),
+    "nb-mag-cat-date": ("struct<mois:string,nbmag:bigint>", ("nbmag",)),
+    "score-evolution": (
+        "struct<mois:string,total_ventes:bigint,ventes_fab:bigint,score_sante:double>",
+        ("total_ventes", "score_sante"),
+    ),
+    "avg-cat-fab-10-mag": (
+        "struct<magid:bigint,total_produits:bigint,nb_produits_fab:bigint,"
+        "percentage:double>",
+        ("total_produits", "nb_produits_fab"),
+    ),
+    "avg-cat-fab-10-mag-avg": ("struct<average:double>", ()),
+    "score-sante-touts-les-mois": (
+        "struct<mois_annee:string,avg_percentage:double>",
+        ("mois_annee",),
+    ),
+    "score-sante-touts-les-mois-avg": ("struct<average:double>", ()),
+}
+
+
+@pytest.mark.parametrize("type_param", sorted(_SCHEMAS))
+def test_request_schema_is_pinned(spark, type_param):
+    schema = run_query(spark, SF_SMALL, type_param).schema
+    simple, not_null = _SCHEMAS[type_param]
+    assert schema.simpleString() == simple
+    assert tuple(f.name for f in schema.fields if not f.nullable) == not_null

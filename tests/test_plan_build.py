@@ -6,12 +6,15 @@ Footer inference is a Spark job; a read with the schema supplied is
 not. These tests pin that the memo never serves a stale schema, never
 hides a missing or broken table, and never shares a relation between
 two reads — and that, once warm, building a request plan runs no job
-before its collect, and running it compiles no generated class.
+before its collect, takes a bounded number of py4j round trips, and
+running it compiles no generated class.
 """
 
 from __future__ import annotations
 
+import gc
 import itertools
+import threading
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -150,6 +153,41 @@ def test_warm_plan_build_runs_no_job(spark, name):
     build().collect()
     df, jobs = _jobs_while(spark, build)
     assert jobs == [], f"{name}: plan build ran jobs {jobs}"
+    df.collect()
+
+
+# A request is one parameterized ``spark.sql`` over named views: the
+# statement, its arguments and the returned DataFrame take 17-29
+# round trips; a DataFrame built call by call took 81-840.
+WARM_BUILD_ROUND_TRIPS = 64
+
+
+@pytest.mark.parametrize("name", _API_TYPES)
+def test_warm_api_build_round_trips_are_bounded(spark, monkeypatch, name):
+    """After one warm call, building the request again takes at most
+    WARM_BUILD_ROUND_TRIPS py4j commands from the building thread.
+    py4j frees a Python proxy's Java object with a command of its own,
+    sent from its finalizer thread: the garbage collection before the
+    build and the thread filter keep earlier requests' frees out of
+    the count."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    caller = threading.get_ident()
+    commands = []
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == caller:
+            commands.append(command.split("\n", 1)[0])
+        return send(command, *args, **kwargs)
+
+    api.run_query(spark, SF_SMALL, name).collect()
+    gc.collect()
+    monkeypatch.setattr(client, "send_command", counting)
+    df = api.run_query(spark, SF_SMALL, name)
+    monkeypatch.undo()
+    assert len(commands) <= WARM_BUILD_ROUND_TRIPS, (
+        f"{name}: warm build made {len(commands)} py4j round trips"
+    )
     df.collect()
 
 

@@ -1,9 +1,12 @@
-"""The staged sales table behind both parity views.
+"""The staged sales table behind both parity views, and the session
+views the request templates read.
 
 ``produits`` and ``points_de_vente`` are row filters over one staged
 table (sources/tables._sales). These tests pin that the filters give
 back the reference joins on a fixture built to break them, that the
-table follows its sources, and that it is one data-sized layout.
+table follows its sources, that it is one data-sized layout, and that
+the named session views (sources/tables.views_sql) follow their
+session, warehouse and sources.
 """
 
 from __future__ import annotations
@@ -13,6 +16,7 @@ import os
 
 import pytest
 
+from projet_etl_spark import api
 from projet_etl_spark.plans.registry import REGISTRY
 from projet_etl_spark.sources import staging, tables
 from projet_etl_spark.sources.tables import ORACLE_VIEWS
@@ -153,3 +157,74 @@ def test_views_scan_one_staged_file(spark):
     local = pdv_root.removeprefix("file:")
     files = [f for f in os.listdir(local) if f.endswith(".parquet")]
     assert len(files) == 1, files
+
+
+# --- the named session views ---------------------------------------------
+
+
+def _view(sf_dir, param="pdv"):
+    """The name ``:pdv`` (or ``:produits``) binds to for ``sf_dir`` now."""
+    return tables._view_names(sf_dir, tables._views_fingerprint(sf_dir))[param]
+
+
+def _answer_matches(spark, sf_dir, con, name, label):
+    spec = REGISTRY[name]
+    df = api.run_query(spark, sf_dir, name)
+    assert_matches_oracle(df, con, spec.oracle, f"{label}:{name}")
+
+
+def test_new_session_registers_its_own_views(spark, duck):
+    """A session does not see another session's temp views: a request
+    in a new session registers the views there."""
+    _answer_matches(spark, SF_SMALL, duck, "top-magasins", "first")
+    other = spark.newSession()
+    name = _view(SF_SMALL)
+    assert spark.catalog.tableExists(name) and not other.catalog.tableExists(name)
+    _answer_matches(other, SF_SMALL, duck, "top-magasins", "new-session")
+    assert other.catalog.tableExists(name)
+
+
+@pytest.mark.parametrize(("param", "name"), [("pdv", "mag-cat"), ("produits", "fab-cat")])
+def test_dropped_view_is_registered_again(spark, duck, param, name):
+    _answer_matches(spark, SF_SMALL, duck, name, "before")
+    view = _view(SF_SMALL, param)
+    assert spark.catalog.dropTempView(view)
+    _answer_matches(spark, SF_SMALL, duck, name, "dropped")
+    assert spark.catalog.tableExists(view)
+
+
+def test_orders_rewrite_registers_new_views(spark, hostile):
+    """A rewritten source moves the fingerprint, so the request reads
+    views registered over the rebuilt table, and the replaced pair is
+    dropped."""
+    root, con = hostile
+    _answer_matches(spark, root, con, "top-magasins", "before")
+    before = _view(root)
+    spark.createDataFrame(
+        [(1, 20), (2, 21), (3, 21), (4, 22), (5, 23)], "o_orderkey long, o_custkey long"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{root}/orders.parquet")
+    _answer_matches(spark, root, con, "top-magasins", "after")
+    assert _view(root) != before and spark.catalog.tableExists(_view(root))
+    assert not spark.catalog.tableExists(before)
+
+
+def test_warehouses_do_not_share_views(spark, tmp_path):
+    """Two warehouses in one session, even with one basename (so one
+    staged root, rebuilt on every switch), each answer from their own
+    views."""
+    roots = [str(tmp_path / side / "wh") for side in ("a", "b")]
+    for root in roots:
+        os.makedirs(root)
+        _write_hostile_star(spark, root)
+    spark.createDataFrame(
+        [(1, 30), (3, 31), (4, 31), (5, 32)], "o_orderkey long, o_custkey long"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{roots[1]}/orders.parquet")
+    cons = [_duck_over(root) for root in roots]
+    try:
+        for i in (0, 1, 0, 1):
+            for name in ("top-magasins", "cat"):
+                _answer_matches(spark, roots[i], cons[i], name, f"warehouse-{i}")
+        assert _view(roots[0]) != _view(roots[1])
+    finally:
+        for con in cons:
+            con.close()
